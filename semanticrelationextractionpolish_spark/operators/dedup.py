@@ -273,6 +273,12 @@ def minhash_near_dup_pairs(
             ),
         )
     else:
+        # NULL text -> null token array: coalesce to empty so it never
+        # pairs, exactly as the md5 kernel treats it (a null shingle
+        # would otherwise match another null-text doc's at jaccard 1.0)
+        toks_df = toks_df.select(
+            "lemma", F.coalesce("toks", F.array().cast("array<string>")).alias("toks")
+        )
         cnt = F.size("toks") - (n - 1)
         shingles = F.when(cnt < 1, F.array().cast("array<string>")).otherwise(
             F.transform(

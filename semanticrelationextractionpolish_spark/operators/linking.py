@@ -377,6 +377,10 @@ def lsh_candidate_pairs(
 # the sf0.01 oracle graph ~11k edges paid ~8 s). Above the cap the
 # loop runs exactly as before - the 100 TB path is unchanged.
 SMALL_GRAPH_MAX_EDGES = 500_000
+# ...and by BYTES: string ids (lemmas, URLs) have no length cap, so the
+# row cap alone does not bound the pull. The sum of id lengths (8 bytes
+# per fixed-width id) rides the same measuring job.
+SMALL_GRAPH_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _union_find_components(rows) -> dict:
@@ -473,7 +477,9 @@ def connected_components(
     is right for one-shot batch jobs, where the final join can still
     fuse into the caller's plan.
     """
-    from .materialize import BARRIER_CONF, release
+    from pyspark.sql import types as T
+
+    from .materialize import BARRIER_CONF, local_frame, release
 
     durable = edges.sparkSession.conf.get(BARRIER_CONF, None) is not None
 
@@ -502,32 +508,40 @@ def connected_components(
         "h": F.bit_xor(F.xxhash64("u", "v")),
     }
 
+    pairs = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+
+    def _id_bytes(c):
+        if isinstance(pairs.schema[c].dataType, (T.StringType, T.BinaryType)):
+            return F.coalesce(F.octet_length(c), F.lit(0))
+        return F.lit(8)
+
     # ONE materialization of the (possibly expensive) upstream plan -
     # the node universe, the canonical edge set and the final label join
     # all derive from this checkpoint instead of re-evaluating upstream;
     # the same job counts non-self-loop rows (an upper bound on the
     # distinct edge count) for partition sizing
     raw, m = _materialize(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
+        pairs,
         f"{ckpt_scope}_input",
         {
             "n_raw": F.sum((F.col("s") != F.col("d")).cast("long")),
             "n_total": F.count(F.lit(1)),
+            "n_bytes": F.sum((_id_bytes("s") + _id_bytes("d")).cast("long")),
         },
     )
     n_raw = m["n_raw"] or 0
     # the fast-path gate must bound the COLLECT, so it uses the total
-    # row count (self-loop and null-endpoint rows are pulled too); the
-    # non-self-loop count only sizes the loop's partitioning
+    # row count and id bytes (self-loop and null-endpoint rows are
+    # pulled too); the non-self-loop count only sizes the loop's
+    # partitioning
     n_total = m["n_total"] or 0
-    if n_total <= small_graph_max_edges:
+    n_bytes = m["n_bytes"] or 0
+    if n_total <= small_graph_max_edges and n_bytes <= SMALL_GRAPH_MAX_BYTES:
         # driver-local union-find: the exact same (id, min-reachable)
         # labels, one collect of a table whose size was just measured,
         # zero iterative rounds. n_raw counts non-self-loop rows, so
         # pure-self-loop inputs also land here (they would converge
         # immediately anyway).
-        from pyspark.sql import types as T
-
         labels = _union_find_components(
             [(r[0], r[1]) for r in raw.collect()]
         )
@@ -538,10 +552,7 @@ def connected_components(
                 T.StructField("comp", id_type, True),
             ]
         )
-        spark = edges.sparkSession
-        result = spark.createDataFrame(
-            list(labels.items()), schema
-        )
+        result = local_frame(edges.sparkSession, list(labels.items()), schema)
         if result_barrier:
             result = result.localCheckpoint(eager=True)
         release(raw)

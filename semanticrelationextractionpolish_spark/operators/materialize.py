@@ -15,8 +15,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def checkpoint_parquet(
@@ -33,6 +34,41 @@ def checkpoint_parquet(
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
     return spark.read.parquet(path)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order)
+    whose scans never start a Python worker.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    ``PythonRDD``: every partition of every job that scans the frame is
+    then a Python-worker task, and each such task costs ~0.25 CPU-s of
+    worker set-up (measured on 4 vCPUs) before a row moves - paid by
+    plans with no Python kernel at all. Here an empty frame is
+    ``range(0)`` projected to typed nulls (a pure JVM relation; its
+    columns are all nullable), and rows cross as one Arrow table that
+    the JVM turns into a local relation. Not a pandas frame: PySpark
+    pickles an EMPTY pandas frame, and silently falls back to pickling
+    whenever pandas-to-Arrow conversion fails; a pyarrow ``Table`` has
+    no fallback, so a conversion error raises."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*rows)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 BARRIER_CONF = "spark.semrex.checkpointDir"

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .materialize import local_frame
+
 IOB_PREFIXES = ["B-", "I-"]
 BILOU_PREFIXES = ["B-", "I-", "L-", "U-"]
 
@@ -51,8 +53,10 @@ def entity_label_vocab(
         (F.lit(1) + F.col("rank") * k + F.col("pos")).alias("label_id"),
         "n_mentions",
     )
-    o_row = mentions.sparkSession.createDataFrame(
-        [("O", 0, 0)], "label string, label_id int, n_mentions long"
+    o_row = local_frame(
+        mentions.sparkSession,
+        [("O", 0, 0)],
+        "label string, label_id int, n_mentions long",
     )
     return o_row.unionByName(expanded.withColumn("label_id", F.col("label_id").cast("int")))
 
@@ -71,8 +75,10 @@ def relation_vocab(page_relations: DataFrame, add_no_rels: bool = True) -> DataF
         "rel_id", (F.row_number().over(w) - 1 + base).cast("int")
     )
     if add_no_rels:
-        nr = page_relations.sparkSession.createDataFrame(
-            [("NO_RELATION", 0)], "rel_class string, rel_id int"
+        nr = local_frame(
+            page_relations.sparkSession,
+            [("NO_RELATION", 0)],
+            "rel_class string, rel_id int",
         )
         return nr.unionByName(ranked)
     return ranked

@@ -305,7 +305,7 @@ def run_config(
     plus - with ``train=True`` - the trained model and its epoch
     history under ``model``/``train_history``, honoring
     ``train_params.num_epochs/batch_size``)."""
-    from ..operators.materialize import checkpoint_parquet
+    from ..operators.materialize import checkpoint_parquet, local_frame
     from ..operators.tensorize import prepare_model_inputs
 
     cfg = load_config(config)
@@ -390,11 +390,13 @@ def run_config(
             # get_entity_labels' restore path (DataProvider.py:237-246):
             # load the per-scheme artifact instead of rescanning
             labels_map, rels_map = restore_kpwr_label_maps(pre, entity_encoding)
-            label_vocab = spark.createDataFrame(
+            label_vocab = local_frame(
+                spark,
                 [(k, int(v)) for k, v in labels_map.items()],
                 "label string, label_id int",
             )
-            rel_vocab = spark.createDataFrame(
+            rel_vocab = local_frame(
+                spark,
                 [(k, int(v)) for k, v in rels_map.items()],
                 "rel_class string, rel_id int",
             )

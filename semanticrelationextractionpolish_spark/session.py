@@ -14,12 +14,23 @@ below is chosen for a 1000-executor / 100 TB deployment):
 
 from __future__ import annotations
 
+import logging
 import os
 import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Entries of the JVM-wide cache of compiled codegen classes. Spark's
+# default (100) is below the engine's working set: measured on 4 vCPUs,
+# one pass of MinHash dedup + a new and a repeat stream batch uses ~130
+# distinct generated classes and one build_kg pass over 5k pages ~120,
+# so at 100 entries every repeated pass recompiled 130-160 classes
+# (CodegenMetrics compilation count). At 1000 a re-executed plan (the
+# next micro-batch, the next pass) reuses its compiled classes: 0
+# compilations from the second repeat on.
+CODEGEN_CACHE_ENTRIES = 1000
 
 # sessions already warmed (by applicationId) - getOrCreate can hand the
 # same session back repeatedly; warm exactly once per JVM
@@ -33,14 +44,17 @@ def _warm_session(spark: SparkSession) -> None:
     infrastructure cost that has nothing to do with that query's plan:
     Janino/whole-stage-codegen compiler init, JIT of the shuffle
     writer/reader and broadcast machinery, parquet reader/writer class
-    loading, Python-worker daemon forks + Arrow serializer init, and the
-    noop sink itself (measured at local[32]: the first bench query runs
-    5.5 s cold vs 1.1 s for an identical second invocation). Running a
-    handful of tiny jobs over ``spark.range`` data at session build
-    moves that fixed cost out of every caller's first real query - the
-    same first-principles fix at any scale (guide §1: measure the
-    computation, not the JVM's first-lap tax). Costs ~1 s once;
-    disable with SEMREX_WARM_SESSION=0.
+    loading, and the noop sink itself (measured at local[32]: the first
+    bench query runs 5.5 s cold vs 1.1 s for an identical second
+    invocation). Running a handful of tiny JVM-only jobs over
+    ``spark.range`` data at session build moves that fixed cost out of
+    every caller's first real query - the same first-principles fix at
+    any scale (measure the computation, not the JVM's first-lap tax).
+    Costs ~1 s once; disable with SEMREX_WARM_SESSION=0.
+
+    No Python-worker job is warmed: workers start with the first real
+    kernel anyway, and warming them added ~7% to the set-up CPU of a
+    5k-page build_kg benchmark run (4 vCPUs).
     """
     if os.environ.get("SEMREX_WARM_SESSION", "1") == "0":
         return
@@ -97,43 +111,11 @@ def _warm_session(spark: SparkSession) -> None:
             p = os.path.join(td, "w.parquet")
             dim.write.mode("overwrite").parquet(p)
             spark.read.parquet(p).where(F.col("k") > 1).count()
-        # Python-worker daemon + Arrow boundary (pandas UDF path)
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("long")
-        def _incr(x: pd.Series) -> pd.Series:
-            return x + 1
-
-        base.select(_incr("id")).write.format("noop").mode("overwrite").save()
-
-        # mapInPandas is a separate exec path (MapInPandasExec) from the
-        # scalar-UDF ArrowEvalPython above, and STRING/ARRAY Arrow
-        # serialization JITs separately from primitive columns
-        # (measured: the first string+array mapInPandas job costs ~2 s
-        # of one-shot setup that a long-only warm does not absorb, and
-        # the bench's first Python kernel query paid it). Warm the
-        # typed path the real NLP/dedup kernels use.
-        typed = base.where(F.col("id") % 4 == 0).select(
-            F.col("s").alias("lemma"),
-            F.split(F.concat(F.col("s"), F.lit(" a b c")), " ").alias("toks"),
-        )
-
-        def _typed_kernel(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    {
-                        "lemma": pdf["lemma"],
-                        "n": [len(t) for t in pdf["toks"]],
-                        "arr": [list(t[:2]) for t in pdf["toks"]],
-                    }
-                )
-
-        typed.mapInPandas(
-            _typed_kernel, schema="lemma string, n long, arr array<string>"
-        ).write.format("noop").mode("overwrite").save()
     except Exception:  # warmup is best-effort, never fail session build
-        pass
+        logging.getLogger(__name__).warning(
+            "session warmup failed; the first queries pay the cold-JVM cost",
+            exc_info=True,
+        )
     finally:
         spark.sparkContext.setJobDescription(None)
 
@@ -168,6 +150,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

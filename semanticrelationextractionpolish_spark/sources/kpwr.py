@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.materialize import local_frame
+
 SENT_RE = re.compile(r'<sentence id="(.*?)">(.*?)</sentence>', re.S)
 TOK_RE = re.compile(r"<tok>(.*?)</tok>", re.S)
 ORTH_RE = re.compile(r"<orth>(.*?)</orth>", re.S)
@@ -167,8 +169,8 @@ def kpwr_label_vocab(docs: DataFrame, entity_encoding_scheme: str = "iob") -> Da
         (F.lit(1) + F.col("rank") * k + F.col("pos")).cast("int").alias("label_id"),
         "n_anns",
     )
-    o_row = docs.sparkSession.createDataFrame(
-        [("O", 0, 0)], "label string, label_id int, n_anns long"
+    o_row = local_frame(
+        docs.sparkSession, [("O", 0, 0)], "label string, label_id int, n_anns long"
     )
     return o_row.unionByName(expanded)
 
@@ -184,8 +186,8 @@ def kpwr_relation_vocab(rels: DataFrame, add_no_rels: bool = True) -> DataFrame:
         "rel_id", (F.row_number().over(Window.orderBy("name")) - 1 + base).cast("int")
     ).withColumnRenamed("name", "rel_class")
     if add_no_rels:
-        nr = rels.sparkSession.createDataFrame(
-            [("NO_RELATION", 0)], "rel_class string, rel_id int"
+        nr = local_frame(
+            rels.sparkSession, [("NO_RELATION", 0)], "rel_class string, rel_id int"
         )
         return nr.unionByName(ranked)
     return ranked

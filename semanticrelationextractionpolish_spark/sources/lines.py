@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.materialize import local_frame
 from .fs import LocalFS, resolve_fs, strip_scheme
 
 LINES_SCHEMA = T.StructType(
@@ -250,9 +251,9 @@ def lines_with_offsets(
         fs = resolve_fs(path, **storage_options)
     splits = _plan_splits(list_files(spark, path, fs), split_bytes, fs)
     if not splits:
-        return spark.createDataFrame([], LINES_SCHEMA)
-    splits_df = spark.createDataFrame(
-        splits, "file string, start long, length long"
+        return local_frame(spark, [], LINES_SCHEMA)
+    splits_df = local_frame(
+        spark, splits, "file string, start long, length long"
     ).repartition(len(splits))
     return splits_df.mapInPandas(_make_read_splits_kernel(fs), schema=LINES_SCHEMA)
 

@@ -64,6 +64,7 @@ from ..operators.linking import (
     connected_components,
     shingle_table,
 )
+from ..operators.materialize import local_frame
 from .state import VersionedState
 
 LEMMAS_SCHEMA = "batch_id long, lemma string, n_mentions long, surfaces array<string>"
@@ -234,7 +235,7 @@ def merge_mentions_batch(
         # common steady-state batch (no new near-duplicates) pays none
         # of the verify machinery; the count rides the candidate
         # checkpoint as an Observation (zero extra jobs).
-        new_edges = spark.createDataFrame([], EDGES_SCHEMA)
+        new_edges = local_frame(spark, [], EDGES_SCHEMA)
         n_new_edges = 0
     else:
         cand_keys = cand.select(F.explode(F.array("a", "b")).alias("lemma")).dropDuplicates()

@@ -68,6 +68,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.materialize import local_frame
+
 MANIFEST = "MANIFEST.json"
 
 # per-batch segments an append table may accumulate (beyond the latest
@@ -129,7 +131,7 @@ class VersionedState:
         if exclude_batch is not None:
             segs = [s for s in segs if s["batch_id"] != exclude_batch]
         if not segs:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(
             *[os.path.join(self.root, s["path"]) for s in segs]
         )

@@ -406,7 +406,8 @@ def test_minhash_md5_null_and_empty_text_rows_survive(spark):
     """Round-7 kernel robustness: NULL/empty-text rows must flow through
     the md5 signature kernel like the JVM expression path did (no task
     crash; such rows never verify as pairs) and planted duplicates
-    around them must still be found."""
+    around them must still be found. Both hash modes give the same
+    pairs: two NULL-text docs pair in neither."""
     from semanticrelationextractionpolish_spark.operators.dedup import (
         minhash_near_dup_pairs,
     )
@@ -418,8 +419,10 @@ def test_minhash_md5_null_and_empty_text_rows_survive(spark):
             (3, None),
             (4, ""),
             (5, "zupelnie inna tresc dokumentu piata"),
+            (6, None),
         ],
         "doc_id long, text string",
     )
-    pairs = minhash_near_dup_pairs(docs, jaccard=0.9, hash_fn="md5").collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
+    for hash_fn in ("md5", "xxhash64"):
+        pairs = minhash_near_dup_pairs(docs, jaccard=0.9, hash_fn=hash_fn).collect()
+        assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}, hash_fn

@@ -45,6 +45,34 @@ def test_connected_components_string_ids(spark):
     assert comp["a"] == comp["b"] == comp["c"] == "a"
 
 
+def test_connected_components_byte_bound_forces_distributed_loop(
+    spark, caplog, monkeypatch
+):
+    """Long string ids exceed the fast path's byte bound although the
+    row count is tiny: the distributed loop runs, with the labels the
+    driver-local fast path gives."""
+    import logging
+
+    from semanticrelationextractionpolish_spark.operators import linking
+
+    ids = [c * 400 for c in "abcdefgh"]
+    edges = spark.createDataFrame(
+        [(ids[1], ids[0]), (ids[2], ids[1]), (ids[4], ids[3]), (ids[7], ids[7])],
+        "src string, dst string",
+    )
+    fast = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
+    # 4 rows of two 400-byte ids: 3,200 id bytes, over the bound, while
+    # 4 rows are far under the row bound
+    monkeypatch.setattr(linking, "SMALL_GRAPH_MAX_BYTES", 4 * 400)
+    with caplog.at_level(logging.INFO, logger=linking.__name__):
+        labels = {r["id"]: r["comp"] for r in connected_components(edges).collect()}
+    assert "rounds to fixed point" in caplog.text
+    assert "small-graph fast path" not in caplog.text
+    assert labels == fast
+    assert fast[ids[2]] == ids[0] and fast[ids[4]] == ids[3]
+    assert fast[ids[7]] == ids[7]
+
+
 def test_canonicalize_merges_variants(spark):
     mentions = spark.createDataFrame(
         [
