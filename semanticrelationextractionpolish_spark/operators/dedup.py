@@ -6,8 +6,9 @@ Four families, each a ``documents``-table DataFrame op:
 * n-gram Jaccard near-dup (shingle inverted-index join) - the classic
   candidate-pair + verify plan with frequency-capped shingles as the
   skew guard;
-* MinHash-LSH near-dup (reuses linking's band machinery over *word*
-  shingles) - the sub-quadratic scale path;
+* MinHash-LSH near-dup (md5 signatures over *word* shingles, blocked
+  and verified by linking's one LSH core, ``lsh_pairs``) - the
+  sub-quadratic scale path;
 * SimHash (64-bit hamming fingerprint, banded for blocking).
 
 At 100 TB: exact dedup is a straight hash-aggregate; LSH/SimHash block
@@ -236,177 +237,69 @@ def minhash_near_dup_pairs(
     text_col: str = "text",
     n: int = 3,
     jaccard: float = 0.7,
-    hash_fn: str = "xxhash64",
+    hash_fn: str = "md5",
 ) -> DataFrame:
     """MinHash-banded near-duplicate candidates, Jaccard-verified: the
     scale path (candidates ~ linear in corpus size).
 
-    ``hash_fn``: ``"xxhash64"`` (default - fastest, Spark-internal) or
-    ``"md5"`` (cross-engine: the DuckDB oracle recomputes the identical
-    signatures/bands, upgrading the driver check from rows-only to
-    exact; see ``minhash_md5_oracle_sql``)."""
-    # staged select: building the shingles over a materialized token
-    # column keeps the HOF from re-splitting the text per element
+    Signatures are the md5 family: the DuckDB oracle recomputes the
+    identical signatures/bands, so the driver check is exact (see
+    ``minhash_md5_oracle_sql``). ``hash_fn`` accepts only ``"md5"``; the
+    xxhash64 family was removed and raises ``ValueError``."""
+    if hash_fn != "md5":
+        raise ValueError(
+            f"minhash_near_dup_pairs: hash_fn={hash_fn!r} is not supported - "
+            "the xxhash64 MinHash family was removed; md5 is the only one"
+        )
+    from .linking import lsh_pairs
+    from .materialize import barrier_with_count
+
+    # staged select: the kernel reads a materialized token column
     toks_df = df.select(
         F.col("doc_id").cast("string").alias("lemma"),
         F.split(_norm(F.col(text_col)), " ").alias("toks"),
     )
-    from .linking import MAX_BUCKET, N_BANDS, N_HASHES
-
-    rows_per_band = N_HASHES // N_BANDS
-    if hash_fn == "md5":
-        # the WHOLE md5 signature block (shingling, md5 hashing, the
-        # 16-hash universal family + mins, band keys) runs as ONE
-        # mapInPandas kernel: hashlib.md5 == Spark md5 == DuckDB md5,
-        # integer ops are exact (see _minhash_md5_kernel for the
-        # per-step JVM-semantics mirror), so the values are identical -
-        # but the round-6 plan needed four codegen'd JVM stages with
-        # interpreted HOFs (~1.1 s warm at sf0.1, plus their one-shot
-        # compile in a fresh JVM); the kernel does it in one Python pass
-        # (~0.25 s) with only (lemma, toks) crossing the boundary
-        # (guide §4.2).
-        sig_block = toks_df.mapInPandas(
-            _minhash_md5_kernel(n),
-            schema=(
-                "lemma string, shingles array<string>, "
-                "sigs array<long>, bands array<long>"
-            ),
-        )
-    else:
-        # NULL text -> null token array: coalesce to empty so it never
-        # pairs, exactly as the md5 kernel treats it (a null shingle
-        # would otherwise match another null-text doc's at jaccard 1.0)
-        toks_df = toks_df.select(
-            "lemma", F.coalesce("toks", F.array().cast("array<string>")).alias("toks")
-        )
-        cnt = F.size("toks") - (n - 1)
-        shingles = F.when(cnt < 1, F.array().cast("array<string>")).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-                lambda i: F.array_join(F.slice(F.col("toks"), i, n), " "),
-            )
-        )
-        grams = toks_df.select(
-            "lemma", F.array_distinct(shingles).alias("shingles")
-        )
-        # single nested-HOF signature expression (see linking.add_minhash_bands)
-        sigs = F.transform(
-            F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
-            lambda i: F.array_min(
-                F.transform(F.col("shingles"), lambda s: F.hash(s, i))
-            ),
-        )
-        bands = F.transform(
-            F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-            lambda b: F.hash(
-                b, F.slice(F.col("sigs"), b * rows_per_band + 1, rows_per_band)
-            ),
-        )
-        sig_block = grams.withColumn("sigs", sigs).withColumn("bands", bands)
-    # materialize signatures AND the per-doc band-key array in ONE
-    # barrier BEFORE the band posexplode: Generate inlines and
-    # re-evaluates its expression per exploded element, so without the
-    # barrier the 16 array_min signature scans would run once per band
-    # (8x) instead of once per doc. Computing the band keys here (a
-    # per-doc 8-element array) instead of barriering the exploded rows
-    # separately saves one whole materialization job + one copy of the
-    # data in executor storage (round-7: two barriers -> one); the
-    # explode below reads checkpointed arrays, so re-scanning it costs
-    # only the explode itself, never the signature math. This is also
-    # the shingle table the verification joins back to.
-    from .materialize import barrier_with_count
-
+    # the WHOLE md5 signature block (shingling, md5 hashing, the 16-hash
+    # universal family + mins, band keys) runs as ONE mapInPandas
+    # kernel: hashlib.md5 == Spark md5 == DuckDB md5 and integer ops are
+    # exact (see _minhash_md5_kernel), with only (lemma, toks) crossing
+    # the boundary (guide §4.2). Signatures AND the per-doc band-key
+    # array are materialized in ONE barrier before linking.lsh_pairs'
+    # band posexplode: Generate would otherwise re-run the kernel per
+    # exploded band, and this is also the shingle table the
+    # verification joins back to.
+    sig_block = toks_df.mapInPandas(
+        _minhash_md5_kernel(n),
+        schema=(
+            "lemma string, shingles array<string>, "
+            "sigs array<long>, bands array<long>"
+        ),
+    )
     # checkpoint name VERSIONED (v2): the round-7 schema adds the
     # per-doc bands array. A durable-mode resume of a pre-round-7
     # "minhash_sigs" checkpoint (no bands column) would fail the
-    # posexplode below; under the new name such a dir simply has no
-    # _SUCCESS, so the stage recomputes fresh - cross-version resume
-    # degrades to recompute instead of crashing, and within-version
-    # kill-resume keeps its stable name.
+    # posexplode; under the new name such a dir simply has no _SUCCESS,
+    # so the stage recomputes fresh - cross-version resume degrades to
+    # recompute instead of crashing, and within-version kill-resume
+    # keeps its stable name.
     with_sigs, n_docs = barrier_with_count(sig_block, "minhash_sigs_v2")
-    # SKINNY band rows (round-2 verdict): (lemma, band_idx, band_hash)
-    # only - the shingle array no longer rides the 8-way explode, the
-    # bucket-cap join, or either side of the candidate self-join (~8x of
-    # array payload off the biggest shuffles). Candidates fetch shingles
-    # once per surviving pair side via the join-back below; same result
-    # set by construction.
-    banded = with_sigs.select(
-        "lemma", F.posexplode("bands").alias("band_idx", "band_hash")
+    # doc ids back to long OVER the checkpoint (its v2 schema stays
+    # valid): pairs then order and join on the numeric id directly
+    docs = with_sigs.select(
+        F.col("lemma").cast("long").alias("doc_id"), "shingles", "sigs", "bands"
     )
-    # skew-capped in-bucket pairs in ONE shuffle of the band rows
-    # (round-6 verdict #1; see linking.capped_bucket_pairs)
-    from .linking import capped_bucket_pairs
-
-    cand = capped_bucket_pairs(
-        banded,
-        ["band_idx", "band_hash"],
-        F.col("lemma"),
-        lambda a, b: a.cast("long") < b.cast("long"),
-        MAX_BUCKET,
-    ).select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-    from .linking import SMALL_SIG_TABLE_KEYS
-
-    if n_docs <= SMALL_SIG_TABLE_KEYS:
-        # size-adaptive verification (round-7, mirrors
-        # linking.lsh_candidate_pairs): on a small corpus the candidate
-        # barrier + key semi-join + verify-table barrier are two extra
-        # materialization jobs protecting re-scans cheaper than the
-        # jobs; without the semi-join there is no second consumer of
-        # the candidate plan, so nothing executes twice. Identical
-        # result set - the reduction only pre-dropped rows the inner
-        # joins drop anyway.
-        sh = with_sigs.select("lemma", "shingles")
-    else:
-        # barrier the candidate set BEFORE deriving cand_keys: without
-        # it the heaviest stage (capped bucket shuffle + pair explode +
-        # dedup, plus the hot-key guard agg feeding its anti-join) runs
-        # TWICE - once for the semi-join that builds minhash_verify_sh
-        # and again in the final verification join (round-6 advice,
-        # medium); then one semi-join cuts the fat shingle table to
-        # candidate keys so the per-side joins shuffle candidate-sized
-        # tables only
-        cand = barrier(cand, "minhash_cand")
-        cand_keys = cand.select(
-            F.explode(F.array("doc_a", "doc_b")).alias("lemma")
-        ).dropDuplicates()
-        sh = barrier(
-            with_sigs.select("lemma", "shingles").join(cand_keys, "lemma", "left_semi"),
-            "minhash_verify_sh",
-        )
-    cand = cand.join(
-        sh.select(F.col("lemma").alias("doc_a"), F.col("shingles").alias("sh_a")),
-        "doc_a",
-    ).join(
-        sh.select(F.col("lemma").alias("doc_b"), F.col("shingles").alias("sh_b")),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    # greatest(union, 1): two EMPTY-shingle docs (null/blank text - a
-    # guaranteed population at web scale) share every band key and
-    # reach verification with union == 0; under ANSI mode the bare
-    # division crashed the task (latent pre-round-7 bug surfaced by
-    # the null-text kernel test). 0/1 = 0 < threshold, so such pairs
-    # are dropped exactly like the oracle drops them (NaN compare),
-    # and every union > 0 pair is numerically unchanged. Same guard
-    # as linking.lsh_candidate_pairs.
     return (
-        cand.withColumn(
-            "jaccard", F.round(inter / F.greatest(union, F.lit(1)), 6)
-        )
+        lsh_pairs(docs, n_docs, "doc_id")
+        .withColumn("jaccard", F.round("jaccard", 6))
         .where(F.col("jaccard") >= jaccard)
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            "jaccard",
-        )
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "jaccard")
     )
 
 
 def minhash_md5_oracle_sql(
     docs2_cte: str, jaccard: float = 0.7, n: int = 3
 ) -> str:
-    """DuckDB mirror of ``minhash_near_dup_pairs(hash_fn='md5')``:
+    """DuckDB mirror of ``minhash_near_dup_pairs``:
     recomputes the identical shingles, signatures, band keys, bucket cap
     and Jaccard verification. ``docs2_cte`` must define a CTE named
     ``docs2(doc_id, text)`` (e.g. the planted-duplicates union)."""
@@ -604,7 +497,7 @@ def simhash_near_dup_pairs(
         ]
     )
     # materialize the skinny band rows ONCE (same rationale as the
-    # minhash path at minhash_bands): the bucket-size guard and BOTH
+    # minhash signature barrier): the bucket-size guard and BOTH
     # sides of the self-join scan this plan, and without the barrier
     # each scan re-runs the vote/pack kernel + explode (3x the simhash
     # compute; measured as most of the +8.8% the cap initially cost in

@@ -21,6 +21,10 @@ Scale design:
   scale); candidates now join back to the one-row-per-key shingle table
   for Jaccard verification - same result set by construction, since
   verification inputs are per-key, not per-band.
+* One LSH core, ``lsh_pairs`` (band explode -> capped bucket pairs ->
+  size-adaptive verify -> guarded Jaccard), serves linking and MinHash
+  dedup; the streaming merge probes incrementally and takes its
+  join-back and guarded Jaccard (``join_back``) from the same core.
 * Connected components is alternating large-star/small-star contraction
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SOCC'14): O(log n) rounds regardless of component diameter. The
@@ -35,6 +39,7 @@ Scale design:
 
 from __future__ import annotations
 
+import json
 import logging
 
 from pyspark.sql import DataFrame
@@ -108,16 +113,15 @@ def shingle_table(
     key: str = "lemma",
     ckpt_name: str | None = None,
     assume_distinct: bool = False,
-    with_bands: bool = False,
 ) -> DataFrame:
-    """One row per key: (key, shingles, sigs) - the MinHash signature
-    table. Materialized (barrier) because it feeds both the band explode
-    and the verification join-back, and because Generate would otherwise
-    re-evaluate the 16 array_min signature scans per exploded band (8x).
-    Callers invoking this repeatedly on DIFFERENT inputs in one job
-    (e.g. streaming incremental linking) must pass a distinct
-    ``ckpt_name`` per call, or durable-checkpoint mode would resume the
-    first call's table.
+    """One row per key: (key, shingles, sigs, bands) - the MinHash
+    signature table. Materialized (barrier) because it feeds both the
+    band explode and the verification join-back, and because Generate
+    would otherwise re-evaluate the 16 array_min signature scans per
+    exploded band (8x). Callers invoking this repeatedly on DIFFERENT
+    inputs in one job (e.g. streaming incremental linking) must pass a
+    distinct ``ckpt_name`` per call, or durable-checkpoint mode would
+    resume the first call's table.
 
     ``assume_distinct``: skip the defensive ``distinct()``. Both
     production call sites (``canonicalize``'s lemma groupBy, streaming's
@@ -127,14 +131,11 @@ def shingle_table(
     defensive distinct then costs a real full shuffle of the lemma set
     (round-6 verdict #1, persist audit)."""
     return barrier(
-        _shingle_plan(df, key, assume_distinct, with_bands),
-        ckpt_name or f"lsh_sigs_{key}",
+        _shingle_plan(df, key, assume_distinct), ckpt_name or f"lsh_sigs_{key}"
     )
 
 
-def _shingle_plan(
-    df: DataFrame, key: str, assume_distinct: bool, with_bands: bool
-) -> DataFrame:
+def _shingle_plan(df: DataFrame, key: str, assume_distinct: bool) -> DataFrame:
     """The un-barriered shingle/signature plan behind ``shingle_table``
     (callers that need the materialization's row count ride it with
     ``materialize.barrier_with_count``)."""
@@ -150,25 +151,12 @@ def _shingle_plan(
             F.transform(F.col("shingles"), lambda s: F.hash(s, i))
         ),
     )
-    out = with_sh.withColumn("sigs", sigs)
-    if with_bands:
-        # band keys as a per-key 8-element array INSIDE the same
-        # materialization: callers then posexplode the checkpointed
-        # array instead of barriering the exploded rows separately -
-        # one materialization job and one executor-storage copy fewer
-        # per LSH invocation (round-7)
-        out = out.withColumn("bands", _bands_expr())
-    return out
-
-
-def add_minhash_bands(df: DataFrame, key: str = "lemma") -> DataFrame:
-    """Skinny band rows: one (key, band_idx, band_hash) per band.
-
-    Shingles/signatures stay in ``shingle_table`` - join back on ``key``
-    when verification needs them (round-2 verdict: carrying the shingle
-    array through the band explode multiplied the biggest shuffle's
-    payload ~8x)."""
-    return _band_rows(shingle_table(df, key), key)
+    # band keys as a per-key 8-element array INSIDE the same
+    # materialization: callers posexplode the checkpointed array instead
+    # of barriering the exploded rows separately - one materialization
+    # job and one executor-storage copy fewer per LSH invocation
+    # (round-7)
+    return with_sh.withColumn("sigs", sigs).withColumn("bands", _bands_expr())
 
 
 def _band_rows(
@@ -178,9 +166,9 @@ def _band_rows(
     names extra sig-table columns to carry (e.g. ``("sigs",)`` when the
     in-bucket pair explode applies the signature-agreement gate).
 
-    When ``sig_table`` already carries a materialized ``bands`` array
-    (``shingle_table(with_bands=True)``), the explode reads it straight
-    from the checkpoint; otherwise the band keys are computed inline."""
+    The explode reads the materialized ``bands`` array when the sig
+    table has one; stored signature tables without it (the streaming
+    band-index backfill) get their band keys computed inline."""
     bands = F.col("bands") if "bands" in sig_table.columns else _bands_expr()
     return sig_table.select(
         key, *keep, F.posexplode(bands).alias("band_idx", "band_hash")
@@ -193,26 +181,25 @@ def capped_bucket_pairs(
     member: "F.Column",
     less_than,
     max_bucket: int,
-    guard: str = "prefilter",
     pair_pred=None,
 ) -> DataFrame:
-    """ONE-shuffle capped in-bucket pair generation: (bucket..., member)
-    rows -> distinct ordered pairs (a, b) of members sharing a bucket,
-    buckets larger than ``max_bucket`` dropped entirely.
+    """Capped in-bucket pair generation: (bucket..., member) rows ->
+    distinct ordered pairs (a, b) of members sharing a bucket, buckets
+    larger than ``max_bucket`` dropped entirely.
 
     The round-5 shape (groupBy bucket sizes -> guard join -> band
-    self-join) shuffled the band rows three times per action; this is
-    the round-6 replacement (verdict #1) and shuffles them ONCE:
+    self-join) shuffled the band rows three times per action; this one
+    shuffles the fat band rows ONCE:
 
-    * a window ``count(*) OVER (PARTITION BY bucket)`` filters hot
-      buckets using exact pre-filter sizes WITHOUT ever materializing a
-      hot bucket's member list (a degenerate bucket at web scale can
-      hold millions of members - collect_list-then-filter would OOM a
-      task; the window only carries a count);
-    * the subsequent ``groupBy(bucket).collect_list`` reuses the
-      window's hash partitioning (required distribution already
-      satisfied -> Catalyst inserts NO second Exchange - verified in
-      the executed plan);
+    * bucket sizes come from a map-side-combined count agg (skinny
+      shuffle); the OVER-cap keys - at most ``n_rows / max_bucket`` of
+      them by pigeonhole, so the table is always small relative to the
+      input - anti-join the band rows (AQE picks broadcast when small,
+      the common case). Hot rows never enter the fat shuffle, so a
+      degenerate bucket (millions of members at web scale) can neither
+      straggle nor OOM the collect_list partition. The round-6 pair-1
+      campaign measured the alternative - a ``count(*) OVER (bucket)``
+      window filter - regressing the skewed lemma-LSH stage ~50% at 4N;
     * pairs come from a nested-transform cross of the <= ``max_bucket``
       member array (<= max_bucket^2 structs per bucket, bounded by the
       cap) instead of a band self-join - the join and both of its
@@ -222,23 +209,6 @@ def capped_bucket_pairs(
     a payload such as the simhash fingerprint); ``less_than(a, b)``
     orders the pair. Output columns: ``a``, ``b`` (member type),
     deduplicated across buckets.
-
-    ``guard`` picks how over-cap buckets are dropped:
-
-    * ``"prefilter"`` (default, skew-robust): bucket sizes via a
-      map-side-combined count agg (skinny shuffle), then the OVER-cap
-      keys - at most ``n_rows / max_bucket`` of them by pigeonhole, so
-      the table is always small relative to the input - anti-join the
-      band rows (AQE picks broadcast when small, the common case). Hot
-      rows never enter the fat shuffle, so a degenerate bucket cannot
-      straggle the collect_list partition. This matters exactly when
-      the cap matters: the round-6 pair-1 campaign measured the window
-      variant regressing the skewed lemma-LSH stage ~50% at 4N while
-      improving the uniform doc-hash stages.
-    * ``"window"``: count(*) OVER (bucket) + filter - one fat shuffle
-      total, no second agg, but the window's per-partition sort
-      processes hot buckets BEFORE the filter drops them (single-task
-      straggler under skew). Right for inputs known to be near-uniform.
 
     ``pair_pred(a, b)``: optional extra predicate applied INSIDE the
     pair explode (e.g. the signature-agreement gate) - pairs failing it
@@ -258,30 +228,109 @@ def capped_bucket_pairs(
         ),
         lambda p: pred(p["a"], p["b"]),
     )
-    if guard == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*bucket_cols)
-        capped = (
-            banded.withColumn("bsz", F.count(F.lit(1)).over(w))
-            .where(F.col("bsz") <= max_bucket)
-            .drop("bsz")
-        )
-    else:
-        hot = (
-            banded.groupBy(*bucket_cols)
-            .agg(F.count(F.lit(1)).alias("bsz"))
-            .where(F.col("bsz") > max_bucket)
-            .drop("bsz")
-        )
-        capped = banded.join(hot, bucket_cols, "left_anti")
+    hot = (
+        banded.groupBy(*bucket_cols)
+        .agg(F.count(F.lit(1)).alias("bsz"))
+        .where(F.col("bsz") > max_bucket)
+        .drop("bsz")
+    )
     return (
-        capped.groupBy(*bucket_cols)
+        banded.join(hot, bucket_cols, "left_anti")
+        .groupBy(*bucket_cols)
         .agg(F.collect_list(member).alias("members"))
         .select(F.explode(pairs_expr).alias("p"))
         .select("p.a", "p.b")
         .dropDuplicates(["a", "b"])
     )
+
+
+def cand_endpoints(table: DataFrame, cand: DataFrame, key: str) -> DataFrame:
+    """``table`` cut to the rows whose ``key`` is an endpoint of a
+    candidate pair (a, b): ONE semi-join (one shuffle of the fat rows)
+    so the two per-side verification joins shuffle candidate-sized
+    tables only (the round-5 shape shuffled the full shingle table
+    twice, once per side)."""
+    keys = cand.select(F.explode(F.array("a", "b")).alias(key)).dropDuplicates()
+    return table.join(keys, key, "left_semi")
+
+
+def join_back(cand: DataFrame, sh: DataFrame, key: str) -> DataFrame:
+    """Candidate pairs (a, b) joined to their per-key ``sh`` rows on
+    both sides -> (a, b, <col>_a, <col>_b for every other ``sh``
+    column, jaccard) over the ``shingles`` arrays.
+
+    ``greatest(union, 1)``: two EMPTY-shingle keys (null/blank text - a
+    guaranteed population at web scale) share every band key and reach
+    verification with union == 0; under ANSI mode the bare division
+    crashes the task. 0/1 = 0 is below any threshold, so such pairs
+    drop exactly like the DuckDB oracle drops them (NaN compare), and
+    every union > 0 pair is numerically unchanged."""
+
+    def side(s):
+        return sh.select(
+            F.col(key).alias(s),
+            *[F.col(c).alias(f"{c}_{s}") for c in sh.columns if c != key],
+        )
+
+    pairs = cand.join(side("a"), "a").join(side("b"), "b")
+    inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
+    union = F.size(F.array_union("shingles_a", "shingles_b"))
+    return pairs.withColumn("jaccard", inter / F.greatest(union, F.lit(1)))
+
+
+def lsh_pairs(
+    sig_table: DataFrame, n_keys: int, key: str, pair_pred=None
+) -> DataFrame:
+    """The one MinHash-LSH core: a barriered signature table (key,
+    shingles, sigs, bands) of ``n_keys`` rows -> every pair (a, b),
+    a < b in the key's natural order, that shares an uncapped band
+    bucket, with its exact shingle Jaccard: (a, b, jaccard), unfiltered
+    - callers apply their own threshold.
+
+    Band rows are SKINNY ``(key, band_idx, band_hash)`` (round-2
+    verdict: carrying the shingle array through the 8-way explode
+    multiplied the biggest shuffle's payload ~8x); they derive from the
+    checkpointed ``bands`` array, so re-scanning costs only the
+    posexplode, never the signature hashing. ``pair_pred(a, b)`` is
+    applied inside the pair explode over members ``{k, sigs}`` - the
+    16-int signature then rides the band rows (~4x the skinny row,
+    still far below the shingle payload).
+
+    Verification is size-adaptive on ``n_keys`` (round-7; the one
+    strategy decision of "Scalable and Robust Set Similarity Join",
+    ICDE 2018): at or below ``SMALL_SIG_TABLE_KEYS`` the joins run
+    straight against the checkpoint (AQE broadcasts it at these sizes;
+    the candidate subtree appears ONCE in the plan); above it the
+    candidate set is barriered, then the shingle table is cut to
+    candidate keys and barriered too. The barrier keeps the heaviest
+    stage (capped bucket shuffle + pair explode + dedup) from running
+    TWICE, once for the semi-join and again in the final join. Both
+    branches give the same result set by construction: the semi-join
+    only pre-drops rows the inner joins drop anyway."""
+    if pair_pred is None:
+        member, keep, k = F.col(key), (), lambda m: m
+    else:
+        member = F.struct(F.col(key).alias("k"), F.col("sigs"))
+        keep, k = ("sigs",), lambda m: m["k"]
+    cand = capped_bucket_pairs(
+        _band_rows(sig_table, key, keep),
+        ["band_idx", "band_hash"],
+        member,
+        lambda a, b: k(a) < k(b),
+        MAX_BUCKET,
+        pair_pred=pair_pred,
+    ).select(k(F.col("a")).alias("a"), k(F.col("b")).alias("b"))
+    sh = sig_table.select(key, "shingles")
+    cap = SMALL_SIG_TABLE_KEYS
+    branch = "direct" if n_keys <= cap else "reduced"
+    log.info(
+        "lsh_verify %s",
+        json.dumps({"key": key, "branch": branch, "n_keys": n_keys, "cap": cap}),
+    )
+    if branch == "reduced":
+        cand = barrier(cand, f"lsh_cand_{key}")
+        sh = barrier(cand_endpoints(sh, cand, key), f"lsh_verify_sh_{key}")
+    return join_back(cand, sh, key).select("a", "b", "jaccard")
 
 
 def lsh_candidate_pairs(
@@ -300,70 +349,15 @@ def lsh_candidate_pairs(
     from .materialize import barrier_with_count
 
     sig_table, n_keys = barrier_with_count(
-        _shingle_plan(entities, key, assume_distinct, with_bands=True),
-        f"lsh_sigs_{key}",
+        _shingle_plan(entities, key, assume_distinct), f"lsh_sigs_{key}"
     )
-    # band rows derive from the sig-table checkpoint (bands are a
-    # materialized per-key array there), so no second barrier is needed:
-    # re-scanning this plan costs only the posexplode, never the
-    # signature/band hashing (round-7: two barriers -> one). Rows carry
-    # the 16-int signature for the in-explode agreement gate (~4x the
-    # skinny row, still far below the shingle payload the round-2 plan
-    # carried).
-    banded = _band_rows(sig_table, key, keep=("sigs",))
-    # skew-capped in-bucket pairs in ONE fat shuffle, accidental pairs
-    # killed by the agreement gate inside the explode
-    cand = capped_bucket_pairs(
-        banded,
-        ["band_idx", "band_hash"],
-        F.struct(F.col(key).alias("k"), F.col("sigs").alias("sigs")),
-        lambda a, b: a["k"] < b["k"],
-        MAX_BUCKET,
+    return lsh_pairs(
+        sig_table,
+        n_keys,
+        key,
         pair_pred=lambda a, b: sig_agreement(a["sigs"], b["sigs"])
         >= F.lit(MIN_SIG_AGREE),
-    ).select(F.col("a.k").alias("a"), F.col("b.k").alias("b"))
-    if n_keys <= SMALL_SIG_TABLE_KEYS:
-        # size-adaptive verification (round-7): on a small key universe
-        # the semi-join reduction machinery is pure fixed overhead (two
-        # extra materialization jobs for a table that two direct scans
-        # of the checkpoint cover), and with no second consumer of the
-        # candidate plan there is no double execution to barrier
-        # against - the candidate subtree appears ONCE in the final
-        # plan. Joins run straight against the checkpointed sig table
-        # (AQE broadcasts it at these sizes). Result set identical by
-        # construction: the semi-join only pre-filtered rows the inner
-        # joins drop anyway.
-        sh = sig_table.select(key, "shingles")
-    else:
-        # barrier the candidate set BEFORE deriving cand_keys: without
-        # it the heaviest stage (capped bucket shuffle + pair explode +
-        # dedup) runs TWICE - once for the semi-join that builds
-        # lsh_verify_sh and again in the final verification join
-        # (round-6 advice, medium; the streaming merge path checkpoints
-        # cand for the same reason). Then cut the FAT shingle table to
-        # candidate keys with ONE semi-join (one shuffle of the fat
-        # rows) and barrier the small result; the two per-side joins
-        # then shuffle only candidate-sized tables (the round-5 shape
-        # shuffled the full shingle table twice, once per side).
-        cand = barrier(cand, f"lsh_cand_{key}")
-        cand_keys = (
-            cand.select(F.explode(F.array("a", "b")).alias(key)).dropDuplicates()
-        )
-        sh = barrier(
-            sig_table.select(key, "shingles").join(cand_keys, key, "left_semi"),
-            f"lsh_verify_sh_{key}",
-        )
-    cand = cand.join(
-        sh.select(F.col(key).alias("a"), F.col("shingles").alias("sh_a")), "a"
-    ).join(sh.select(F.col(key).alias("b"), F.col("shingles").alias("sh_b")), "b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = inter / F.greatest(union, F.lit(1))
-    return (
-        cand.withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= F.lit(jaccard))
-        .select("a", "b", "jaccard")
-    )
+    ).where(F.col("jaccard") >= F.lit(jaccard))
 
 
 # graphs at or below this many RAW edge rows take the driver-local

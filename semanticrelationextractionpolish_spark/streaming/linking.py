@@ -60,11 +60,15 @@ from pyspark.sql import functions as F
 from ..operators.linking import (
     DEFAULT_JACCARD,
     MAX_BUCKET,
+    MIN_SIG_AGREE,
     _band_rows,
+    cand_endpoints,
     connected_components,
+    join_back,
     shingle_table,
+    sig_agreement,
 )
-from ..operators.materialize import local_frame
+from ..operators.materialize import local_checkpoint_with_count, local_frame
 from .state import VersionedState
 
 LEMMAS_SCHEMA = "batch_id long, lemma string, n_mentions long, surfaces array<string>"
@@ -93,16 +97,6 @@ def pick_assign_buckets(expected_lemmas: int) -> int:
     while b < 8192 and expected_lemmas > b * ASSIGN_BUCKET_TARGET_ROWS:
         b *= 2
     return b
-
-
-def _ckpt_with_count(df: DataFrame):
-    """Eager localCheckpoint + exact row count in ONE job - lets the
-    merge branch on empty deltas without extra counting jobs (round-7;
-    shared implementation in materialize, local mode only: stream
-    state durability is the store's job)."""
-    from ..operators.materialize import local_checkpoint_with_count
-
-    return local_checkpoint_with_count(df)
 
 
 def merge_mentions_batch(
@@ -168,8 +162,9 @@ def merge_mentions_batch(
     ) and not any(
         s["batch_id"] != int(batch_id) for s in store.segments("bands")
     )
-    store.append_batch("sigs", new_sigs.select("lemma", "shingles", "sigs"), batch_id)
-    all_sigs = old_sigs.unionByName(new_sigs)
+    new_sig_rows = new_sigs.select("lemma", "shingles", "sigs")
+    store.append_batch("sigs", new_sig_rows, batch_id)
+    all_sigs = old_sigs.unionByName(new_sig_rows)
 
     # incremental LSH probe: NEW band rows vs the STORED band index.
     # The band index is itself an appended state table (the round-3
@@ -215,17 +210,9 @@ def merge_mentions_batch(
         )
         .dropDuplicates(["a", "b"])
     )
-    # semi-join reduction: cut the state-sized sig table to candidate
-    # keys once (one shuffle of the fat rows) before the two per-side
-    # joins (see linking.lsh_candidate_pairs). cand is checkpointed
-    # first so deriving the key set does not re-run the probe join.
-    # sigs ride along for the SAME signature-agreement gate the batch
-    # path applies inside its pair explode (linking.MIN_SIG_AGREE) -
-    # stream==batch equality requires the identical predicate.
-    from ..operators.linking import MIN_SIG_AGREE, sig_agreement
-
-    cand, n_cand = _ckpt_with_count(cand)
-    cand_ck = cand
+    # cand is checkpointed (with its count, in the same job) so the
+    # semi-join and the verification join do not both re-run the probe
+    cand, n_cand = local_checkpoint_with_count(cand)
     sh = None
     if n_cand == 0:
         # empty-delta short-circuit (round-7): no candidate pair means
@@ -238,32 +225,20 @@ def merge_mentions_batch(
         new_edges = local_frame(spark, [], EDGES_SCHEMA)
         n_new_edges = 0
     else:
-        cand_keys = cand.select(F.explode(F.array("a", "b")).alias("lemma")).dropDuplicates()
-        sh = (
-            all_sigs.select("lemma", "shingles", "sigs")
-            .join(cand_keys, "lemma", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-        cand = cand.join(
-            sh.select(
-                F.col("lemma").alias("a"),
-                F.col("shingles").alias("sh_a"),
-                F.col("sigs").alias("sig_a"),
-            ),
-            "a",
-        ).join(
-            sh.select(
-                F.col("lemma").alias("b"),
-                F.col("shingles").alias("sh_b"),
-                F.col("sigs").alias("sig_b"),
-            ),
-            "b",
-        )
-        cand = cand.where(sig_agreement(F.col("sig_a"), F.col("sig_b")) >= F.lit(MIN_SIG_AGREE))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        new_edges, n_new_edges = _ckpt_with_count(
-            cand.where(inter / F.greatest(union, F.lit(1)) >= F.lit(jaccard))
+        # verification as in the batch core (linking.lsh_pairs): the
+        # state-sized sig table cut to candidate keys, then the join-back
+        # and guarded Jaccard. sigs ride along for the SAME
+        # signature-agreement gate the batch path applies inside its
+        # pair explode - stream==batch equality requires the identical
+        # predicate.
+        sh = cand_endpoints(all_sigs, cand, "lemma").localCheckpoint(eager=True)
+        new_edges, n_new_edges = local_checkpoint_with_count(
+            join_back(cand, sh, "lemma")
+            .where(
+                sig_agreement(F.col("sigs_a"), F.col("sigs_b"))
+                >= F.lit(MIN_SIG_AGREE)
+            )
+            .where(F.col("jaccard") >= F.lit(jaccard))
             .select("a", "b")
         )
     store.append_batch("edges", new_edges, batch_id)
@@ -367,7 +342,7 @@ def merge_mentions_batch(
     # returned assignments checkpoint is the CALLER's to release.
     from ..operators.materialize import release
 
-    for df in (new_sigs, new_bands, touched, cand_ck, sh, new_edges, comp):
+    for df in (new_sigs, new_bands, touched, cand, sh, new_edges, comp):
         if df is not None:
             release(df)
     return assignments

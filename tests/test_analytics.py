@@ -406,8 +406,9 @@ def test_minhash_md5_null_and_empty_text_rows_survive(spark):
     """Round-7 kernel robustness: NULL/empty-text rows must flow through
     the md5 signature kernel like the JVM expression path did (no task
     crash; such rows never verify as pairs) and planted duplicates
-    around them must still be found. Both hash modes give the same
-    pairs: two NULL-text docs pair in neither."""
+    around them must still be found; two NULL-text docs do not pair.
+    md5 is the only signature family: the removed xxhash64 mode
+    raises."""
     from semanticrelationextractionpolish_spark.operators.dedup import (
         minhash_near_dup_pairs,
     )
@@ -423,6 +424,7 @@ def test_minhash_md5_null_and_empty_text_rows_survive(spark):
         ],
         "doc_id long, text string",
     )
-    for hash_fn in ("md5", "xxhash64"):
-        pairs = minhash_near_dup_pairs(docs, jaccard=0.9, hash_fn=hash_fn).collect()
-        assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}, hash_fn
+    pairs = minhash_near_dup_pairs(docs, jaccard=0.9, hash_fn="md5").collect()
+    assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
+    with pytest.raises(ValueError, match="xxhash64"):
+        minhash_near_dup_pairs(docs, jaccard=0.9, hash_fn="xxhash64")

@@ -196,11 +196,11 @@ def test_connected_components_fast_path_matches_loop(spark):
 
 
 def test_capped_bucket_pairs_one_shuffle_equivalence(spark):
-    """Round-6 verdict #1: the one-shuffle in-bucket pair generator must
-    (a) equal the old guard-join + band-self-join pair set exactly,
-    (b) drop over-cap buckets entirely, and (c) produce its pairs with
-    a single exchange of the band rows (the window's) - the groupBy
-    reuses the window's partitioning and the self-join is gone."""
+    """Round-6 verdict #1: the in-bucket pair generator must (a) equal
+    the old guard-join + band-self-join pair set exactly, (b) drop
+    over-cap buckets entirely, and (c) keep the prefilter's shape: the
+    only join touching the band rows is the hot-key left-anti join -
+    the band self-join is gone."""
     import re
 
     from semanticrelationextractionpolish_spark.operators.linking import (
@@ -215,14 +215,6 @@ def test_capped_bucket_pairs_one_shuffle_equivalence(spark):
     ).localCheckpoint(eager=True)
 
     got = capped_bucket_pairs(
-        banded,
-        ["band_idx", "band_hash"],
-        F.col("lemma"),
-        lambda a, b: a < b,
-        64,
-        guard="window",
-    )
-    got_pre = capped_bucket_pairs(
         banded, ["band_idx", "band_hash"], F.col("lemma"), lambda a, b: a < b, 64
     )
     # reference: the round-5 shape
@@ -242,25 +234,19 @@ def test_capped_bucket_pairs_one_shuffle_equivalence(spark):
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-    for cand in (got, got_pre):  # both guards == the round-5 shape
-        assert cand.exceptAll(want).count() == 0
-        assert want.exceptAll(cand).count() == 0
-        assert cand.where(F.col("a").startswith("hot")).count() == 0
-        assert cand.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert got.where(F.col("a").startswith("hot")).count() == 0
+    assert got.count() > 0
 
-    # plan shape of the window guard: ONE exchange of the band rows,
-    # no join at all
+    # plan shape: exactly one join, the hot-key left-anti join
     got.collect()
     final = (
         got._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
     )
-    band_exchanges = [
-        m
-        for m in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
-        if "band_idx" in m
-    ]
-    assert len(band_exchanges) == 1, band_exchanges
-    assert "SortMergeJoin" not in final and "BroadcastHashJoin" not in final
+    joins = re.findall(r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin)[^\n]*", final)
+    assert len(joins) == 1, joins
+    assert "LeftAnti" in joins[0], joins
 
 
 def _stored_rdd_ids(spark):
@@ -318,3 +304,136 @@ def test_release_is_noop_on_non_checkpoint_plans(spark):
     assert release(cached) is False  # CacheManager-cached, not a ckpt
     assert cached.count() == 10
     cached.unpersist()
+
+
+# planted duplicates around the inputs every path must survive: NULL,
+# empty and blank text, single tokens, non-ASCII
+_CORE_FIXTURE = [
+    (1, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (2, "the quick brown fox jumps over the lazy dog near the river bank today"),
+    (3, "the quick brown fox jumps over the lazy dog near the river bank again"),
+    (4, "zażółć gęślą jaźń to polskie zdanie z ogonkami i kreskami nad literami"),
+    (5, "zażółć gęślą jaźń to polskie zdanie z ogonkami i kreskami nad literą"),
+    (6, None),
+    (7, None),
+    (8, ""),
+    (9, "   "),
+    (10, "słowo"),
+    (11, "słowo"),
+    (12, "completely different content about spark query planning this week"),
+]
+
+
+def _core_runs(spark, tmp_path, monkeypatch, run):
+    """``run()`` under both verify branches x both barrier modes ->
+    {(branch, mode): result}."""
+    from semanticrelationextractionpolish_spark.operators import linking
+
+    out = {}
+    for branch, cap in (("direct", linking.SMALL_SIG_TABLE_KEYS), ("reduced", 0)):
+        monkeypatch.setattr(linking, "SMALL_SIG_TABLE_KEYS", cap)
+        for mode in ("local", "durable"):
+            if mode == "durable":
+                spark.conf.set(
+                    "spark.semrex.checkpointDir", str(tmp_path / f"{branch}_ck")
+                )
+            try:
+                out[(branch, mode)] = run()
+            finally:
+                spark.conf.unset("spark.semrex.checkpointDir")
+    return out
+
+
+def test_lsh_core_equivalence_across_branches_and_barrier_modes(
+    spark, tmp_path, monkeypatch
+):
+    """The one LSH core gives the same answers on both verify branches
+    (direct joins vs candidate barrier + key semi-join) and in both
+    barrier modes (localCheckpoint vs spark.semrex.checkpointDir):
+    MinHash dedup equals the DuckDB md5 oracle exactly, and linking's
+    pair sets are identical."""
+    import duckdb
+    import pandas as pd
+
+    from semanticrelationextractionpolish_spark.operators.dedup import (
+        minhash_md5_oracle_sql,
+        minhash_near_dup_pairs,
+    )
+
+    docs = spark.createDataFrame(_CORE_FIXTURE, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register(
+        "fixture", pd.DataFrame(_CORE_FIXTURE, columns=["doc_id", "text"])
+    )
+    oracle = {
+        (a, b, j)
+        for a, b, j in con.execute(
+            minhash_md5_oracle_sql(
+                "WITH docs2 AS (SELECT doc_id, text FROM fixture)", jaccard=0.7
+            )
+        ).fetchall()
+    }
+    assert {(a, b) for a, b, _ in oracle} == {(1, 2), (1, 3), (2, 3), (4, 5)}
+
+    dedup = _core_runs(
+        spark,
+        tmp_path / "dedup",
+        monkeypatch,
+        lambda: {
+            (r["doc_a"], r["doc_b"], r["jaccard"])
+            for r in minhash_near_dup_pairs(docs, jaccard=0.7).collect()
+        },
+    )
+    for combo, got in dedup.items():
+        assert got == oracle, combo
+
+    lemmas = docs.select(F.col("text").alias("lemma"))
+    link = _core_runs(
+        spark,
+        tmp_path / "link",
+        monkeypatch,
+        lambda: {
+            (r["a"], r["b"], r["jaccard"])
+            for r in lsh_candidate_pairs(lemmas, "lemma").collect()
+        },
+    )
+    sets = list(link.values())
+    assert all(s == sets[0] for s in sets), link
+    pairs = {(a, b) for a, b, _ in sets[0]}
+    # binary string order == code-point order
+    assert tuple(sorted([_CORE_FIXTURE[0][1], _CORE_FIXTURE[2][1]])) in pairs
+    assert tuple(sorted([_CORE_FIXTURE[3][1], _CORE_FIXTURE[4][1]])) in pairs
+    assert all(None not in p and "" not in p for p in pairs)
+
+
+def test_lsh_core_logs_verify_branch(spark, caplog, monkeypatch):
+    """The core reports its size-adaptive verify decision once per call:
+    branch, key count and cap, as one JSON log line."""
+    import json
+    import logging
+
+    from semanticrelationextractionpolish_spark.operators import linking
+
+    df = spark.createDataFrame(
+        [("wrocław",), ("wrocławi",), ("kraków",)], "lemma string"
+    )
+
+    def decisions():
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=linking.__name__):
+            pairs = {(r["a"], r["b"]) for r in lsh_candidate_pairs(df).collect()}
+        lines = [
+            json.loads(r.getMessage().split(" ", 1)[1])
+            for r in caplog.records
+            if r.getMessage().startswith("lsh_verify ")
+        ]
+        return pairs, lines
+
+    direct_pairs, direct = decisions()
+    assert direct == [
+        {"key": "lemma", "branch": "direct", "n_keys": 3, "cap": 200_000}
+    ]
+    monkeypatch.setattr(linking, "SMALL_SIG_TABLE_KEYS", 0)
+    reduced_pairs, reduced = decisions()
+    assert reduced == [{"key": "lemma", "branch": "reduced", "n_keys": 3, "cap": 0}]
+    assert direct_pairs == reduced_pairs == {("wrocław", "wrocławi")}

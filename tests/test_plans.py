@@ -54,11 +54,12 @@ def test_minhash_bands_are_skinny(spark):
     verdict #2): the Generate's output schema is (lemma|doc, band_idx,
     band_hash) only."""
     from semanticrelationextractionpolish_spark.operators.linking import (
-        add_minhash_bands,
+        _band_rows,
+        shingle_table,
     )
 
     df = spark.createDataFrame([("warszawa",), ("krakow",)], "lemma string")
-    banded = add_minhash_bands(df, "lemma")
+    banded = _band_rows(shingle_table(df), "lemma")
     assert set(banded.columns) == {"lemma", "band_idx", "band_hash"}
 
 

@@ -6,7 +6,7 @@ production-path operators at 6 orders of magnitude more graph nodes /
 in PLANS.md are measured, not asserted:
 
 * dedup: 200k synthetic documents (deterministic, ~5% planted
-  near-duplicates) through exact / MinHash(xxhash64) / SimHash;
+  near-duplicates) through exact / MinHash(md5) / SimHash;
 * connected components: a 1M-node CHAIN - the adversarial
   O(diameter) case (min-label propagation would need ~1M rounds;
   star contraction must finish in ~log2(n) ~ 20).
