@@ -683,7 +683,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_simhash_neardup(spark, sf):  # exact via md5-derived fingerprints
         return DD.simhash_near_dup_pairs(
-            _docs_with_dupes(spark, sf), max_hamming=3, hash_fn="md5"
+            _docs_with_dupes(spark, sf), max_hamming=3
         )
 
     q["simhash_neardup"] = q_simhash_neardup

@@ -9,7 +9,8 @@ Four families, each a ``documents``-table DataFrame op:
 * MinHash-LSH near-dup (md5 signatures over *word* shingles, blocked
   and verified by linking's one LSH core, ``lsh_pairs``) - the
   sub-quadratic scale path;
-* SimHash (64-bit hamming fingerprint, banded for blocking).
+* SimHash (60-bit hamming fingerprint over md5 token hashes, banded
+  for blocking).
 
 At 100 TB: exact dedup is a straight hash-aggregate; LSH/SimHash block
 to near-linear candidate counts; the raw n-gram join exists mainly as
@@ -357,7 +358,7 @@ def minhash_md5_oracle_sql(
 def simhash_md5_oracle_sql(
     docs2_cte: str, max_hamming: int = 6, max_bucket: int | None = None
 ) -> str:
-    """DuckDB mirror of ``simhash_near_dup_pairs(hash_fn='md5')``:
+    """DuckDB mirror of ``simhash_near_dup_pairs``:
     recomputes the 60-bit fingerprints (per-bit majority vote over
     md5-derived token hashes), the 4x15-bit bands, the bucket-size cap
     (QUALIFY over (band_idx, band_val), same as the Spark skew guard),
@@ -401,35 +402,26 @@ def simhash_md5_oracle_sql(
     """
 
 
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    bits: int = 64,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """SimHash over word tokens: sign of the per-bit sum of token
-    hashes. Hybrid plan: token hashing stays JVM-side (inside a
-    codegen'd transform); the per-bit vote/pack runs as ONE vectorized
-    numpy kernel per Arrow batch (the pure-Column version needed 64
-    interpreted array scans per row - measured ~4x slower at sf0.1).
-    The split is staged through its own select so the hashing transform
-    doesn't re-run the regex split per token.
-
-    ``hash_fn="md5"`` derives 60-bit token hashes from md5 so the DuckDB
-    oracle can recompute identical fingerprints (pass bits=60)."""
+def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """60-bit SimHash over word tokens: sign of the per-bit sum of the
+    tokens' md5-derived 60-bit hashes (``_md5_long``), so the DuckDB
+    oracle recomputes identical fingerprints. Hybrid plan: token hashing
+    stays JVM-side (inside a codegen'd transform); the per-bit vote/pack
+    runs as ONE vectorized numpy kernel per Arrow batch (the pure-Column
+    version needed one interpreted array scan per bit per row - measured
+    ~4x slower at sf0.1). The split is staged through its own select so
+    the hashing transform doesn't re-run the regex split per token."""
+    bits = 60
     staged = df.select(
         "doc_id", F.split(_norm(F.col(text_col)), " ").alias("toks")
     )
-    if hash_fn == "md5":
-        hashes = F.transform(F.col("toks"), lambda w: _md5_long(w))
-    else:
-        hashes = F.transform(F.col("toks"), lambda w: F.xxhash64(w))
+    hashes = F.transform("toks", _md5_long)
 
     @pandas_udf(T.LongType())
     def pack_simhash(hs: pd.Series) -> pd.Series:
         # Deliberately per-ROW: each doc's (n_tokens x bits) bit matrix
         # stays cache-resident. Batch-wide vectorizations were measured
-        # SLOWER (round 6): one flat (total_tokens x 64) matrix builds
+        # SLOWER (round 6): one flat (total_tokens x bits) matrix builds
         # 100-250 MB temporaries per 20k-row Arrow batch and goes
         # memory-bandwidth-bound (0.2x), and np.add.reduceat's
         # segment-sum is a non-SIMD per-segment loop (0.6x even via
@@ -456,20 +448,17 @@ def simhash(
 
 
 def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 6,
-    hash_fn: str = "xxhash64",
-    max_bucket: int | None = None,
+    df: DataFrame, text_col: str = "text", max_hamming: int = 6
 ) -> DataFrame:
-    """Banded SimHash blocking: 4 bands of bits/4; a pair within hamming
-    distance < 4 must agree on at least one band (pigeonhole); verified
-    exactly with bit_count(xor). ``hash_fn="md5"`` = 60-bit fingerprints
-    recomputable by the DuckDB oracle (simhash_md5_oracle_sql).
+    """Banded SimHash blocking over the 60-bit ``simhash`` fingerprints:
+    4 bands of 15 bits; a pair within hamming distance < 4 must agree on
+    at least one band (pigeonhole); verified exactly with
+    bit_count(xor). The DuckDB oracle (``simhash_md5_oracle_sql``)
+    recomputes the same pairs.
 
     Skew guard (round-4 verdict #2 — the last uncapped quadratic join):
-    band values with more than ``max_bucket`` members (default
-    linking.MAX_BUCKET) are dropped before the self-join, exactly like
+    band values with more than ``linking.MAX_BUCKET`` members (read at
+    call time) are dropped before the self-join, exactly like
     the MinHash path above. At web scale a degenerate band value is
     GUARANTEED — empty/boilerplate docs share fingerprint bits (an
     all-zero simhash for empty docs is a standing hot key), and one
@@ -477,14 +466,11 @@ def simhash_near_dup_pairs(
     trade (same as MinHash): members of an over-full bucket can still
     pair through their other 3 bands; a pair agreeing ONLY on a capped
     band is missed. The DuckDB oracle mirrors the cap bit-for-bit."""
-    from .linking import MAX_BUCKET
+    from .linking import MAX_BUCKET, capped_bucket_pairs
 
-    if max_bucket is None:
-        max_bucket = MAX_BUCKET
-    bits = 60 if hash_fn == "md5" else 64
-    band_bits = bits // 4
+    band_bits = 15  # 4 bands over the 60-bit fingerprint
     band_mask = (1 << band_bits) - 1
-    sh = simhash(df, text_col, bits=bits, hash_fn=hash_fn)
+    sh = simhash(df, text_col)
     bands = F.array(
         *[
             F.struct(
@@ -511,14 +497,12 @@ def simhash_near_dup_pairs(
     # skew-capped in-bucket pairs in ONE shuffle of the band rows: the
     # member struct carries the fingerprint so verification needs no
     # join-back at all (round-6 verdict #1; see linking.capped_bucket_pairs)
-    from .linking import capped_bucket_pairs
-
     cand = capped_bucket_pairs(
         banded,
         ["band_idx", "band_val"],
         F.struct(F.col("doc_id"), F.col("simhash")),
         lambda a, b: a["doc_id"] < b["doc_id"],
-        max_bucket,
+        MAX_BUCKET,
     ).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),

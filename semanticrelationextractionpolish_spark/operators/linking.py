@@ -29,7 +29,7 @@ Scale design:
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SOCC'14): O(log n) rounds regardless of component diameter. The
   round-2 min-label propagation needed O(diameter) rounds, so a
-  transitive near-dup chain longer than ``max_iter`` hops exited the
+  transitive near-dup chain longer than the round cap exited the
   loop with silently-split components; non-convergence now fails loudly.
 * Lineage barriers go through ``materialize.barrier``: localCheckpoint
   by default, durable _SUCCESS-gated parquet stage checkpoints when
@@ -375,6 +375,10 @@ SMALL_GRAPH_MAX_EDGES = 500_000
 # row cap alone does not bound the pull. The sum of id lengths (8 bytes
 # per fixed-width id) rides the same measuring job.
 SMALL_GRAPH_MAX_BYTES = 64 * 1024 * 1024
+# star-contraction rounds connected_components runs before it raises:
+# the loop converges in O(log n) rounds, so 25 covers graphs far larger
+# than any corpus; running out means something is wrong, not slow.
+CC_MAX_ROUNDS = 25
 
 
 def _union_find_components(rows) -> dict:
@@ -422,11 +426,8 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-    on_nonconverged: str = "raise",
     ckpt_scope: str = "cc",
     result_barrier: bool = False,
-    small_graph_max_edges: int = SMALL_GRAPH_MAX_EDGES,
 ) -> DataFrame:
     """Alternating large-star/small-star contraction -> (id, comp).
 
@@ -442,11 +443,15 @@ def connected_components(
     Both steps strictly shrink a monotone potential, and the fixed point
     is a disjoint union of stars centered on each component's minimum -
     reached in O(log n) rounds regardless of diameter (the round-2
-    min-label loop was O(diameter) and could exhaust ``max_iter``
+    min-label loop was O(diameter) and could exhaust its rounds
     silently, splitting long near-dup chains into several canonical
-    nodes). If the loop still exits unconverged, behavior follows
-    ``on_nonconverged``: ``"raise"`` (default) or ``"warn"`` (log and
-    return the best-effort labels).
+    nodes). If the edge set still moves after ``CC_MAX_ROUNDS`` rounds
+    the call raises ``RuntimeError``; it never hands back split labels.
+
+    Graphs of at most ``SMALL_GRAPH_MAX_EDGES`` rows and
+    ``SMALL_GRAPH_MAX_BYTES`` id bytes (both measured by the input
+    materialization) skip the loop: one bounded collect and a
+    driver-local union-find give the same labels.
 
     Partitioning is sized to the GRAPH, not to the session default: the
     similarity graph is orders of magnitude smaller than the corpus, and
@@ -530,7 +535,7 @@ def connected_components(
     # partitioning
     n_total = m["n_total"] or 0
     n_bytes = m["n_bytes"] or 0
-    if n_total <= small_graph_max_edges and n_bytes <= SMALL_GRAPH_MAX_BYTES:
+    if n_total <= SMALL_GRAPH_MAX_EDGES and n_bytes <= SMALL_GRAPH_MAX_BYTES:
         # driver-local union-find: the exact same (id, min-reachable)
         # labels, one collect of a table whose size was just measured,
         # zero iterative rounds. n_raw counts non-self-loop rows, so
@@ -576,7 +581,7 @@ def connected_components(
     n_edges = m["n"]
     converged = n_edges == 0
     rounds = 0
-    for it in range(max_iter):
+    for it in range(CC_MAX_ROUNDS):
         if converged:
             break
         # --- large-star ---
@@ -610,13 +615,10 @@ def connected_components(
             converged = True
         prev_stats = stats
     if not converged:
-        msg = (
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({n_edges} input edges); component labels may be split"
+        raise RuntimeError(
+            f"connected_components did not converge in {CC_MAX_ROUNDS} "
+            f"rounds ({n_edges} input edges); component labels may be split"
         )
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        log.warning(msg)
     log.info("connected_components: %d rounds to fixed point", rounds)
     # fixed point = disjoint stars (u -> component-min); roots and
     # isolated/self-loop-only nodes label themselves

@@ -108,9 +108,10 @@ def test_node_ids_stable(spark):
 
 
 def test_connected_components_long_chain(spark):
-    """Diameter >> max_iter: plain min-label propagation (round-2 impl)
-    moves a label one hop per round, so a 120-node chain silently split
-    at max_iter=25; large-star/small-star contracts in O(log n) rounds."""
+    """Diameter >> CC_MAX_ROUNDS: plain min-label propagation (round-2
+    impl) moves a label one hop per round, so a 120-node chain silently
+    split after 25 rounds; large-star/small-star contracts in O(log n)
+    rounds."""
     n = 120
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
@@ -120,22 +121,22 @@ def test_connected_components_long_chain(spark):
     assert set(comp.values()) == {0}
 
 
-def test_connected_components_nonconvergence_is_loud(spark):
-    """Exhausting max_iter with the edge set still moving must raise
-    (default) or warn-and-return, never silently return split labels."""
+def test_connected_components_nonconvergence_is_loud(spark, monkeypatch):
+    """Running out of rounds with the edge set still moving must raise,
+    never return split labels."""
     import pytest
+
+    from semanticrelationextractionpolish_spark.operators import linking
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(39)], "src long, dst long"
     )
-    # small_graph_max_edges=0 forces the distributed loop (the
+    # SMALL_GRAPH_MAX_EDGES=0 forces the distributed loop (the
     # driver-local fast path would solve this 39-edge chain exactly)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=1, small_graph_max_edges=0)
-    labels = connected_components(
-        edges, max_iter=1, on_nonconverged="warn", small_graph_max_edges=0
-    )
-    assert labels.count() == 40  # best-effort labels for every node
+    monkeypatch.setattr(linking, "SMALL_GRAPH_MAX_EDGES", 0)
+    monkeypatch.setattr(linking, "CC_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges)
 
 
 def test_connected_components_matches_union_find(spark):
@@ -170,11 +171,13 @@ def test_connected_components_matches_union_find(spark):
     assert comp == expected
 
 
-def test_connected_components_fast_path_matches_loop(spark):
+def test_connected_components_fast_path_matches_loop(spark, monkeypatch):
     """The round-7 driver-local small-graph fast path must label
     EXACTLY like the distributed star-contraction loop - same graph,
     both paths, including self-loops and string ids."""
     import random
+
+    from semanticrelationextractionpolish_spark.operators import linking
 
     rnd = random.Random(11)
     raw = [
@@ -186,11 +189,10 @@ def test_connected_components_fast_path_matches_loop(spark):
         r["id"]: r["comp"]
         for r in connected_components(edges, ckpt_scope="ccf").collect()
     }
+    monkeypatch.setattr(linking, "SMALL_GRAPH_MAX_EDGES", 0)
     slow = {
         r["id"]: r["comp"]
-        for r in connected_components(
-            edges, ckpt_scope="ccs", small_graph_max_edges=0
-        ).collect()
+        for r in connected_components(edges, ckpt_scope="ccs").collect()
     }
     assert fast == slow and len(fast) > 0
 
