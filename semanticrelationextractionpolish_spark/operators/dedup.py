@@ -253,7 +253,7 @@ def minhash_near_dup_pairs(
             "the xxhash64 MinHash family was removed; md5 is the only one"
         )
     from .linking import lsh_pairs
-    from .materialize import barrier_with_count
+    from .materialize import barrier_with_metrics
 
     # staged select: the kernel reads a materialized token column
     toks_df = df.select(
@@ -283,14 +283,16 @@ def minhash_near_dup_pairs(
     # so the stage recomputes fresh - cross-version resume degrades to
     # recompute instead of crashing, and within-version kill-resume
     # keeps its stable name.
-    with_sigs, n_docs = barrier_with_count(sig_block, "minhash_sigs_v2")
+    with_sigs, m = barrier_with_metrics(
+        sig_block, "minhash_sigs_v2", {"n": F.count(F.lit(1))}
+    )
     # doc ids back to long OVER the checkpoint (its v2 schema stays
     # valid): pairs then order and join on the numeric id directly
     docs = with_sigs.select(
         F.col("lemma").cast("long").alias("doc_id"), "shingles", "sigs", "bands"
     )
     return (
-        lsh_pairs(docs, n_docs, "doc_id")
+        lsh_pairs(docs, m["n"], "doc_id")
         .withColumn("jaccard", F.round("jaccard", 6))
         .where(F.col("jaccard") >= jaccard)
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "jaccard")

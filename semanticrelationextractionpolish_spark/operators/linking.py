@@ -31,10 +31,14 @@ Scale design:
   round-2 min-label propagation needed O(diameter) rounds, so a
   transitive near-dup chain longer than the round cap exited the
   loop with silently-split components; non-convergence now fails loudly.
+  Its label is the component's minimum id on every path, so
+  ``canonicalize`` takes the canonical lemma straight from the label.
 * Lineage barriers go through ``materialize.barrier``: localCheckpoint
   by default, durable _SUCCESS-gated parquet stage checkpoints when
   ``spark.semrex.checkpointDir`` is set (executor-loss-survivable /
-  kill-resumable - the production mode).
+  kill-resumable - the production mode). Sizes that pick a plan shape
+  (LSH key count, CC edge count and id bytes, CC fixed-point stats)
+  ride the barrier's own job via ``materialize.barrier_with_metrics``.
 """
 
 from __future__ import annotations
@@ -45,7 +49,7 @@ import logging
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import barrier
+from .materialize import barrier, barrier_with_metrics
 
 log = logging.getLogger(__name__)
 
@@ -77,7 +81,7 @@ MIN_SIG_AGREE = 4
 # protecting against re-scans that cost less than the jobs themselves,
 # while above the cap the round-6 reduction shape is exactly right.
 # The count is free - it rides the signature-table materialization as
-# an Observation (materialize.barrier_with_count).
+# an Observation (materialize.barrier_with_metrics).
 SMALL_SIG_TABLE_KEYS = 200_000
 
 
@@ -138,7 +142,7 @@ def shingle_table(
 def _shingle_plan(df: DataFrame, key: str, assume_distinct: bool) -> DataFrame:
     """The un-barriered shingle/signature plan behind ``shingle_table``
     (callers that need the materialization's row count ride it with
-    ``materialize.barrier_with_count``)."""
+    ``materialize.barrier_with_metrics``)."""
     keyed = df.select(key) if assume_distinct else df.select(key).distinct()
     with_sh = keyed.withColumn("shingles", _shingles(F.col(key)))
     # one nested-HOF expression for all N_HASHES signatures (instead of N
@@ -346,14 +350,14 @@ def lsh_candidate_pairs(
     - an extra ~0.5% miss at the exact threshold, in exchange for
     dropping the quadratic accidental-candidate term a small shingle
     universe produces)."""
-    from .materialize import barrier_with_count
-
-    sig_table, n_keys = barrier_with_count(
-        _shingle_plan(entities, key, assume_distinct), f"lsh_sigs_{key}"
+    sig_table, m = barrier_with_metrics(
+        _shingle_plan(entities, key, assume_distinct),
+        f"lsh_sigs_{key}",
+        {"n": F.count(F.lit(1))},
     )
     return lsh_pairs(
         sig_table,
-        n_keys,
+        m["n"],
         key,
         pair_pred=lambda a, b: sig_agreement(a["sigs"], b["sigs"])
         >= F.lit(MIN_SIG_AGREE),
@@ -432,8 +436,10 @@ def connected_components(
     """Alternating large-star/small-star contraction -> (id, comp).
 
     ``edges`` may reference string or long ids; components are labeled
-    with the minimum reachable id. Each round is two join+groupBy steps
-    on the edge set (Kiveris et al., SOCC'14):
+    with the minimum reachable id on both paths below, so the label is
+    the component's canonical form (``canonicalize`` reads it as is).
+    Each round is two join+groupBy steps on the edge set (Kiveris et
+    al., SOCC'14):
 
     * large-star: every node points its LARGER neighbors at the minimum
       of its closed neighborhood;
@@ -467,37 +473,19 @@ def connected_components(
     in executor storage for the rest of the session
     (``materialize.release``; no-op in durable mode).
 
-    ``result_barrier=True``: checkpoint the (id, comp) result itself
-    and release ALL internal barriers (input + final round) before
-    returning - the returned DataFrame is then self-contained, leaving
-    exactly one pinned block the CALLER owns (release it when done).
-    The mode for long-lived sessions that call CC repeatedly (the
-    streaming merge: one CC per micro-batch); the default lazy return
+    ``result_barrier=True``: return a self-contained (id, comp) frame
+    with ALL internal barriers (input + final round) released. The loop
+    checkpoints its result, leaving exactly one pinned block the CALLER
+    owns (release it when done); the fast path's result is driver rows
+    already and pins nothing (``release`` is a no-op on it). The mode
+    for long-lived sessions that call CC repeatedly (the streaming
+    merge: one CC per micro-batch); the default lazy return
     is right for one-shot batch jobs, where the final join can still
     fuse into the caller's plan.
     """
     from pyspark.sql import types as T
 
-    from .materialize import BARRIER_CONF, local_frame, release
-
-    durable = edges.sparkSession.conf.get(BARRIER_CONF, None) is not None
-
-    def _materialize(df, name, metrics):
-        """Barrier + side metrics in ONE job: an Observation's metrics
-        are delivered by the eager localCheckpoint action itself. In
-        durable mode the barrier may be a resume-read that runs no
-        action (obs.get would block forever), so metrics fall back to
-        one cheap scan of the checkpoint parquet."""
-        if durable:
-            out = barrier(df, name)
-            r = out.agg(*[c.alias(k) for k, c in metrics.items()]).first()
-            return out, {k: r[k] for k in metrics}
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        observed = df.observe(obs, *[c.alias(k) for k, c in metrics.items()])
-        out = observed.localCheckpoint(eager=True)
-        return out, obs.get
+    from .materialize import local_frame, release
 
     # fixed-point detector: (count, order-independent content hash) over
     # the distinct edge set. bit_xor (not sum: ANSI long-sum overflows);
@@ -519,7 +507,7 @@ def connected_components(
     # all derive from this checkpoint instead of re-evaluating upstream;
     # the same job counts non-self-loop rows (an upper bound on the
     # distinct edge count) for partition sizing
-    raw, m = _materialize(
+    raw, m = barrier_with_metrics(
         pairs,
         f"{ckpt_scope}_input",
         {
@@ -552,8 +540,6 @@ def connected_components(
             ]
         )
         result = local_frame(edges.sparkSession, list(labels.items()), schema)
-        if result_barrier:
-            result = result.localCheckpoint(eager=True)
         release(raw)
         log.info(
             "connected_components: small-graph fast path (%d raw edges)",
@@ -574,7 +560,7 @@ def connected_components(
         .select(F.greatest("s", "d").alias("u"), F.least("s", "d").alias("v"))
         .distinct()
     )
-    e, m = _materialize(
+    e, m = barrier_with_metrics(
         e.repartition(n_part, "u"), f"{ckpt_scope}_edges_p", _STATS()
     )
     prev_stats = (m["n"], m["h"])
@@ -606,7 +592,7 @@ def connected_components(
             .repartition(n_part, "u")
         )
         prev_e = e
-        e, m = _materialize(small, f"{ckpt_scope}_round_{it}", _STATS())
+        e, m = barrier_with_metrics(small, f"{ckpt_scope}_round_{it}", _STATS())
         # the new round's checkpoint was prev_e's last consumer
         release(prev_e)
         stats = (m["n"], m["h"])
@@ -642,15 +628,23 @@ def canonicalize(mentions: DataFrame, jaccard: float = DEFAULT_JACCARD):
     nodes:            (node_id, canonical, surfaces, n_mentions)
 
     Exact-lemma dedupe is the groupBy; near-duplicate lemmas are merged by
-    LSH edges + connected components; canonical form = lexicographically
-    smallest lemma in the component (deterministic).
+    LSH edges + connected components. The canonical form is the
+    lexicographically smallest lemma in the component (deterministic):
+    exactly CC's min label, so it is read off the label; a lemma with no
+    LSH edge is its own component. Mentions with a null lemma get no
+    assignment and no node.
     """
     from pyspark import StorageLevel
 
-    lemmas = mentions.groupBy("lemma").agg(
-        F.count(F.lit(1)).alias("n_mentions"),
-        F.collect_set("surface").alias("surfaces"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # feeds LSH + assignment join
+    lemmas = (
+        mentions.where(F.col("lemma").isNotNull())
+        .groupBy("lemma")
+        .agg(
+            F.count(F.lit(1)).alias("n_mentions"),
+            F.collect_set("surface").alias("surfaces"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)  # feeds LSH + assignment join
+    )
     # assume_distinct: lemmas is the output of a groupBy("lemma") - the
     # persist boundary hides its uniqueness from Catalyst, and the
     # defensive distinct() would re-shuffle the whole lemma set
@@ -658,11 +652,8 @@ def canonicalize(mentions: DataFrame, jaccard: float = DEFAULT_JACCARD):
     comp = connected_components(sim, "a", "b", ckpt_scope="linking_cc")
     assignments = (
         lemmas.join(comp.withColumnRenamed("id", "lemma"), "lemma", "left")
-        .withColumn("comp", F.coalesce("comp", "lemma"))
-    )
-    canon = assignments.groupBy("comp").agg(F.min("lemma").alias("canonical"))
-    assignments = assignments.join(canon, "comp").persist(
-        StorageLevel.MEMORY_AND_DISK
+        .withColumn("canonical", F.coalesce("comp", "lemma"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )  # feeds nodes + node_assignments (edge join)
     nodes = (
         assignments.groupBy("canonical")
@@ -681,23 +672,13 @@ def canonicalize(mentions: DataFrame, jaccard: float = DEFAULT_JACCARD):
     return node_assignments, nodes
 
 
-def edges_from_triples(
-    triples: DataFrame,
-    node_assignments: DataFrame,
-    broadcast_dim: bool = True,
-) -> DataFrame:
+def edges_from_triples(triples: DataFrame, node_assignments: DataFrame) -> DataFrame:
     """triples (subj/obj lemmas) -> aggregated edges over canonical nodes.
     Two joins against the assignment dim + one groupBy.
 
-    ``broadcast_dim``: the assignment table is entity-scale (orders of
-    magnitude smaller than the triples fact side), so broadcasting it is
-    right up to a few hundred MB of executor memory. At 10^12-document
-    scale the entity dim itself can outgrow a broadcast - pass False to
-    drop the hint and let AQE pick the strategy (shuffle join with the
-    fact side partitioned on the lemma key; pre-bucketing both sides on
-    lemma via ``materialize.write_bucketed`` removes even that shuffle)."""
-    dim = node_assignments.select("lemma", "node_id")
-    na = F.broadcast(dim) if broadcast_dim else dim
+    The assignment dim is broadcast: it is entity-scale, orders of
+    magnitude smaller than the triples fact side."""
+    na = F.broadcast(node_assignments.select("lemma", "node_id"))
     return (
         triples.join(na.withColumnRenamed("lemma", "subj").withColumnRenamed("node_id", "src"), "subj")
         .join(na.withColumnRenamed("lemma", "obj").withColumnRenamed("node_id", "dst"), "obj")

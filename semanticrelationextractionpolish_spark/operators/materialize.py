@@ -101,7 +101,7 @@ def barrier(df: DataFrame, name: str) -> DataFrame:
 def local_checkpoint_with_count(df: DataFrame) -> tuple[DataFrame, int]:
     """Eager localCheckpoint + exact row count in ONE job (the
     Observation's metrics are delivered by the checkpoint action
-    itself) - the local-mode half of ``barrier_with_count``, shared
+    itself) - the local-mode half of ``barrier_with_metrics``, shared
     with the streaming merge which always checkpoints locally (state
     durability is the store's job)."""
     obs = Observation()
@@ -111,21 +111,25 @@ def local_checkpoint_with_count(df: DataFrame) -> tuple[DataFrame, int]:
     return out, obs.get["n"]
 
 
-def barrier_with_count(df: DataFrame, name: str) -> tuple[DataFrame, int]:
-    """``barrier`` + exact row count in ONE job: in local-checkpoint
-    mode an Observation's metrics are delivered by the eager
-    materialization action itself; in durable mode the barrier may be a
-    resume-read that runs no action (Observation.get would block
-    forever), so the count falls back to one cheap column-pruned scan
-    of the checkpoint parquet. Lets callers pick size-adaptive plan
-    shapes (e.g. skip reduction stages on small inputs) without an
-    extra counting job (round-7; same pattern as connected_components'
-    input materialization)."""
-    spark = df.sparkSession
-    if spark.conf.get(BARRIER_CONF, None) is not None:
+def barrier_with_metrics(
+    df: DataFrame, name: str, metrics: dict[str, F.Column]
+) -> tuple[DataFrame, dict]:
+    """``barrier`` + aggregate side metrics (name -> aggregate Column)
+    in ONE job: in local-checkpoint mode an Observation's metrics are
+    delivered by the eager localCheckpoint action itself. In durable
+    mode the barrier may be a resume-read that runs no action
+    (Observation.get would block forever), so the metrics fall back to
+    one column-pruned agg over the checkpoint parquet. Lets callers
+    size their plan shapes (LSH verify branch, CC fast path, CC
+    fixed-point detection) without an extra counting job."""
+    aggs = [c.alias(k) for k, c in metrics.items()]
+    if df.sparkSession.conf.get(BARRIER_CONF, None) is not None:
         out = barrier(df, name)
-        return out, out.count()
-    return local_checkpoint_with_count(df)
+        r = out.agg(*aggs).first()
+        return out, {k: r[k] for k in metrics}
+    obs = Observation()
+    out = df.observe(obs, *aggs).localCheckpoint(eager=True)
+    return out, obs.get
 
 
 def release(df: DataFrame) -> bool:
@@ -231,14 +235,6 @@ def domain_of(url_col) -> F.Column:
     return F.parse_url(url_col, F.lit("HOST"))
 
 
-def with_lineage(df: DataFrame, stage: str) -> tuple[DataFrame, Observation]:
-    """Attach an Observation counting rows + nulls for the stage; the
-    observation is collected after the action completes."""
-    obs = Observation(stage)
-    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    return observed, obs
-
-
 def partition_counters(df: DataFrame) -> DataFrame:
     """Per-partition row counters (lineage table): one row per physical
     partition - the distributed analog of the reference's progress prints."""
@@ -249,18 +245,15 @@ def partition_counters(df: DataFrame) -> DataFrame:
     )
 
 
-def write_graph(
-    nodes: DataFrame,
-    edges: DataFrame,
-    out_dir: str,
-    n_partitions: int = 32,
-) -> None:
-    """Partitioned nodes/edges write (Iceberg writeTo in production; the
-    sandbox lacks the Iceberg runtime jar, so parquet with hash
-    repartitioning stands in - same physical layout discipline)."""
-    nodes.repartition(n_partitions, "node_id").write.mode("overwrite").parquet(
+def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str) -> None:
+    """Nodes/edges write hash-partitioned on ``node_id`` / ``src``
+    (parquet standing in for an Iceberg ``writeTo`` - same physical
+    layout discipline). No partition count: AQE coalesces the shuffle
+    to the graph's size, so a few dozen nodes land in one file while a
+    web-scale graph still spreads over the session's partitions."""
+    nodes.repartition("node_id").write.mode("overwrite").parquet(
         os.path.join(out_dir, "nodes")
     )
-    edges.repartition(n_partitions, "src").write.mode("overwrite").parquet(
+    edges.repartition("src").write.mode("overwrite").parquet(
         os.path.join(out_dir, "edges")
     )

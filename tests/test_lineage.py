@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from semanticrelationextractionpolish_spark.operators.materialize import (
     checkpoint_parquet,
     partition_counters,
+    write_graph,
 )
 from semanticrelationextractionpolish_spark.plans.pipeline import (
     build_kg,
@@ -199,3 +200,24 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
         spark.sql("DROP DATABASE IF EXISTS bktest CASCADE")
+
+
+def test_write_graph_round_trip(spark, tmp_path):
+    """The parquet graph holds exactly the input frames' rows."""
+    nodes = spark.createDataFrame(
+        [(i, f"lemma{i}", [f"S{i}", f"s{i}"], i + 1) for i in range(40)]
+        + [(99, "pusty", [], 1)],
+        "node_id long, canonical string, surfaces array<string>, n_mentions long",
+    )
+    edges = spark.createDataFrame(
+        [(i % 7, (i * 3) % 40, f"rel{i % 3}", i) for i in range(60)]
+        + [(5, 5, None, 2)],
+        "src long, dst long, pred string, n_evidence long",
+    )
+    write_graph(nodes, edges, str(tmp_path))
+    for name, df in (("nodes", nodes), ("edges", edges)):
+        back = spark.read.parquet(str(tmp_path / name))
+        assert back.schema == df.schema, name
+        assert sorted(map(tuple, back.collect())) == sorted(
+            map(tuple, df.collect())
+        ), name

@@ -107,6 +107,99 @@ def test_node_ids_stable(spark):
     assert n1.first()["node_id"] == n2.first()["node_id"]
 
 
+_MENTION_SCHEMA = (
+    "url string, sent_idx int, entity_id string, entity_class string, "
+    "beg int, end int, surface string, lemma string"
+)
+
+
+def _mentions(spark, lemmas_surfaces):
+    return spark.createDataFrame(
+        [
+            (f"u{i}", 0, "e1", "city_nam", 0, 1, surface, lemma)
+            for i, (lemma, surface) in enumerate(lemmas_surfaces)
+        ],
+        _MENTION_SCHEMA,
+    )
+
+
+def _canonical_rows(mentions):
+    assignments, nodes = canonicalize(mentions)
+    # repr keys: a null canonical must sort, not raise
+    a = sorted((tuple(r) for r in assignments.collect()), key=repr)
+    n = sorted(
+        (
+            (r["node_id"], r["canonical"], tuple(r["surfaces"]), r["n_mentions"])
+            for r in nodes.collect()
+        ),
+        key=repr,
+    )
+    return a, n
+
+
+def test_canonicalize_same_on_fast_path_and_loop(spark, tmp_path, monkeypatch):
+    """The canonical form is read off CC's min label: the driver-local
+    fast path and the forced star-contraction loop give identical
+    assignments and nodes, in both barrier modes, for a multi-member
+    component plus an isolated lemma."""
+    from semanticrelationextractionpolish_spark.operators import linking
+
+    mentions = _mentions(
+        spark,
+        [
+            ("wrocławiu", "Wrocławiu"),
+            ("wrocławia", "Wrocławia"),
+            ("wrocław", "Wrocław"),
+            ("wrocławi", "Wrocławi"),
+            ("wrocław", "Wrocławski"),
+            ("orlen", "Orlen"),
+        ],
+    )
+    runs = {}
+    for path, cap in (("fast", linking.SMALL_GRAPH_MAX_EDGES), ("loop", 0)):
+        monkeypatch.setattr(linking, "SMALL_GRAPH_MAX_EDGES", cap)
+        for mode in ("local", "durable"):
+            if mode == "durable":
+                spark.conf.set(
+                    "spark.semrex.checkpointDir", str(tmp_path / path)
+                )
+            try:
+                runs[(path, mode)] = _canonical_rows(mentions)
+            finally:
+                spark.conf.unset("spark.semrex.checkpointDir")
+    first = runs[("fast", "local")]
+    assert all(r == first for r in runs.values()), runs
+    assignments, nodes = first
+    canon = {lemma: c for lemma, _, c in assignments}
+    assert canon == {
+        "wrocław": "wrocław",
+        "wrocławi": "wrocław",
+        "wrocławia": "wrocław",
+        "wrocławiu": "wrocław",
+        "orlen": "orlen",
+    }
+    assert len(nodes) == 2
+    assert {c: m for _, c, _, m in nodes} == {"wrocław": 5, "orlen": 1}
+
+
+def test_canonicalize_drops_null_lemma(spark):
+    """A mention with a null lemma yields no assignment row and no node
+    (and its surface joins no node)."""
+    assignments, nodes = _canonical_rows(
+        _mentions(
+            spark,
+            [("gdańsk", "Gdańsk"), ("gdańska", "Gdańska"), (None, "Nikt")],
+        )
+    )
+    assert [(lemma, c) for lemma, _, c in assignments] == [
+        ("gdańsk", "gdańsk"),
+        ("gdańska", "gdańsk"),
+    ]
+    assert [(c, s, m) for _, c, s, m in nodes] == [
+        ("gdańsk", ("Gdańsk", "Gdańska"), 2)
+    ]
+
+
 def test_connected_components_long_chain(spark):
     """Diameter >> CC_MAX_ROUNDS: plain min-label propagation (round-2
     impl) moves a label one hop per round, so a 120-node chain silently
@@ -257,7 +350,7 @@ def _stored_rdd_ids(spark):
     }
 
 
-def test_connected_components_releases_superseded_rounds(spark):
+def test_connected_components_releases_superseded_rounds(spark, monkeypatch):
     """Barrier-release discipline (round-6): a multi-round CC must not
     pin every round's localCheckpoint blocks for the rest of the
     session - DataFrame.unpersist() cannot reach them, so without
@@ -265,10 +358,12 @@ def test_connected_components_releases_superseded_rounds(spark):
     copy per round per CC call. Default mode may keep only the blocks
     the lazy result still needs (input + final round); result_barrier
     mode returns a self-contained checkpoint and keeps exactly ONE."""
+    from semanticrelationextractionpolish_spark.operators import linking
     from semanticrelationextractionpolish_spark.operators.materialize import (
         release,
     )
 
+    monkeypatch.setattr(linking, "SMALL_GRAPH_MAX_EDGES", 0)  # the loop
     before = _stored_rdd_ids(spark)
     n = 120  # chain: contracts over several rounds
     edges = spark.createDataFrame(
@@ -288,6 +383,26 @@ def test_connected_components_releases_superseded_rounds(spark):
     assert len(leftover2) == 1, leftover2  # just the result checkpoint
     assert release(comp2)  # caller-owned; releasable
     assert len(_stored_rdd_ids(spark) - before2) == 0
+
+
+def test_connected_components_fast_path_result_barrier_pins_nothing(spark):
+    """On the small-graph fast path the result is driver rows already:
+    result_barrier=True releases the input barrier and leaves no pinned
+    block at all, and release() on the result is a no-op."""
+    from semanticrelationextractionpolish_spark.operators.materialize import (
+        release,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(119)], "src long, dst long"
+    )
+    before = _stored_rdd_ids(spark)
+    comp = connected_components(edges, result_barrier=True)
+    got = {r["id"]: r["comp"] for r in comp.collect()}
+    assert len(got) == 120 and set(got.values()) == {0}
+    assert len(_stored_rdd_ids(spark) - before) == 0
+    assert release(comp) is False
+    assert comp.count() == 120  # still usable
 
 
 def test_release_is_noop_on_non_checkpoint_plans(spark):
