@@ -322,13 +322,19 @@ def insert_positional_tokens(
     _insert_close(e1e, positions["e1_end"])
     _insert_open(e1b, positions["e1_beg"])
 
-    inserted_locations = {
+    return tokens, token_ids, entities, entity_ids, marker_locations(positions)
+
+
+def marker_locations(positions):
+    """The final marker locations ``insert_positional_tokens`` reports
+    for the spans before insertion: (+0, +2, +2, +4), the same for every
+    pair because it always inserts all four markers."""
+    return {
         "e1_beg": positions["e1_beg"],
         "e1_end": positions["e1_end"] + 2,
         "e2_beg": positions["e2_beg"] + 2,
         "e2_end": positions["e2_end"] + 4,
     }
-    return tokens, token_ids, entities, entity_ids, inserted_locations
 
 
 # --------------------------------------------------------------------------

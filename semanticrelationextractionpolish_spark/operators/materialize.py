@@ -24,15 +24,21 @@ def checkpoint_parquet(
     df: DataFrame, path: str, resume: bool = True, partition_by: list[str] | None = None
 ) -> DataFrame:
     """Write ``df`` to parquet unless ``path`` already holds a complete
-    checkpoint (_SUCCESS), then read it back. This is the stage-level
-    resume mechanism: a re-run after failure skips completed stages."""
+    checkpoint (_SUCCESS) with ``df``'s columns, then read it back. This
+    is the stage-level resume mechanism: a re-run after failure skips
+    completed stages, and recomputes a stage whose checkpoint holds other
+    columns (one an older layout of the stage wrote) instead of
+    returning it."""
     spark = df.sparkSession
-    success = os.path.join(path, "_SUCCESS")
-    if not (resume and os.path.exists(success)):
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+    if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
+        done = spark.read.parquet(path)
+        # a set: partition columns come back last
+        if set(done.columns) == set(df.columns):
+            return done
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
     return spark.read.parquet(path)
 
 

@@ -7,21 +7,35 @@ capped: NO_RELATION augmentation only for ``1 < n_entities < 15``
 (readers.py:496); both caps are the skew guards that keep hot pages
 bounded at scale.
 
-Spark shape (safe path):
+The per-document loop is ``document_pairs``: NO_RELATION pairs
+discovered in one sentence persist for later sentences of the same
+document, which is why the unit of processing must be the document, not
+the sentence. It emits skinny pairs (ids, marker coordinates, gold
+class, surfaces, lemmas) and runs no marker surgery: the marker
+coordinates are ``kernels.marker_locations`` of each id's first/last
+occurrence, the same rule ``insert_positional_tokens`` reports, which
+``generate_pairs`` runs on those same spans for the marked arrays.
 
-    page_relations groupBy(url) -> per-doc relation list     (small shuffle)
-    slim sentences repartition(url)                          (ONE fat shuffle)
-      left-join rel lists ON url (exchange reused)
-      sortWithinPartitions(url, sent_idx)                    (local, no shuffle)
-    mapInPandas(doc kernel, bounded per-doc buffer)
+Spark shape. Two operators call it:
 
-The fast path (co_partitioned=True) broadcasts the relation dim instead
-and shuffles nothing. Either way every document arrives contiguous (the
-kernel guards this) and the kernel buffers one document at a time,
-restoring sent_idx order itself. The kernel is the reference-exact
-document loop from functions/kernels.py - NO_RELATION pairs discovered in
-one sentence persist for later sentences of the same document, which is
-why the unit of processing must be the document, not the sentence.
+* ``segment.segment_and_pair`` - the pipeline path. Pages join their
+  relation lists on url and one ``mapInPandas`` task per page partition
+  segments, tags and pairs; a page row is a whole document, so no url
+  contiguity is needed and the sentence arrays cross into Python once.
+* ``generate_pairs`` below - for callers that need the marker-inserted
+  ``tokens``/``token_ids``/``entities`` arrays (tensorize, goldens).
+  Sentences cross into Python a second time:
+
+      page_relations groupBy(url) -> per-doc relation list     (small shuffle)
+      slim sentences repartition(url)                          (ONE fat shuffle)
+        left-join rel lists ON url (exchange reused)
+        sortWithinPartitions(url, sent_idx)                    (local, no shuffle)
+      mapInPandas(doc kernel, bounded per-doc buffer)
+
+  Its fast path (co_partitioned=True) broadcasts the relation dim
+  instead and shuffles nothing. Either way every document arrives
+  contiguous (the kernel guards this) and the kernel buffers one
+  document at a time, restoring sent_idx order itself.
 """
 
 from __future__ import annotations
@@ -34,9 +48,9 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..functions.kernels import (
-    NO_RELATION,
     augment_no_relations,
-    explode_pairs_inline,
+    insert_positional_tokens,
+    marker_locations,
 )
 from ..functions.lemmatize import lemma_phrase
 from ..functions.tokenizer import DeterministicTokenizer
@@ -65,27 +79,100 @@ def _detok(tokens):
     ).strip()
 
 
+def relations_by_url(page_relations: DataFrame) -> DataFrame:
+    """(url, rels): each page's gold relations as one sorted list - the
+    order they enter ``document_pairs``' relation dict."""
+    return page_relations.groupBy("url").agg(
+        F.sort_array(
+            F.collect_list(F.struct("e1_id", "e2_id", "rel_class"))
+        ).alias("rels")
+    )
+
+
+def document_pairs(sentences, rels) -> list[list[tuple[dict, dict]]]:
+    """The per-document pair loop (readers.py:494-534), without markers.
+
+    ``sentences`` holds (tokens, entity_ids) lists per sentence in
+    sent_idx order; ``rels`` the page's (e1_id, e2_id, rel_class)
+    mappings, or None. Returns one list per sentence of (spans, pair):
+    the pair's entity spans before marker insertion, and its
+    ``schemas.PAIR`` dict, whose coordinates are the marker locations of
+    those spans. The relation dict is document-level and mutable (the
+    reference mutates raw_relations across a document's sentences,
+    readers.py:427), so NO_RELATION pairs augmented in one sentence are
+    candidates in every later one.
+    """
+    potential: dict = {}
+    for r in rels if rels is not None else ():
+        potential[(r["e1_id"], r["e2_id"])] = r["rel_class"]
+    out = []
+    for tokens, entity_ids in sentences:
+        # a set holds None exactly when a list would: same membership
+        # test as the reference's `id in entity_ids`, in O(1)
+        present = set(entity_ids)
+        augment_no_relations(present - {None}, potential)
+        sent_pairs = []
+        for (e1_id, e2_id), rel_class in potential.items():
+            if e1_id not in present or e2_id not in present:
+                continue
+            # first/last occurrence of each id (readers.py:513-514)
+            e1_beg = entity_ids.index(e1_id)
+            e1_end = len(entity_ids) - entity_ids[::-1].index(e1_id) - 1
+            e2_beg = entity_ids.index(e2_id)
+            e2_end = len(entity_ids) - entity_ids[::-1].index(e2_id) - 1
+            spans = {
+                "e1_beg": e1_beg,
+                "e1_end": e1_end,
+                "e2_beg": e2_beg,
+                "e2_end": e2_end,
+            }
+            lo, hi = min(e1_end, e2_end), max(e1_beg, e2_beg)
+            e1_surf = _detok(tokens[e1_beg : e1_end + 1])
+            e2_surf = _detok(tokens[e2_beg : e2_end + 1])
+            between = _detok(tokens[lo + 1 : hi])
+            sent_pairs.append(
+                (
+                    spans,
+                    {
+                        "e1_id": e1_id,
+                        "e2_id": e2_id,
+                        **marker_locations(spans),
+                        "gold_class": rel_class,
+                        "e1_surface": e1_surf,
+                        "e2_surface": e2_surf,
+                        "between_text": between,
+                        # lemmas computed here (Python already holds the
+                        # row) so scoring stays trivial JVM string ops -
+                        # the interpreted HOF lemma expression measured
+                        # 2-4x the whole scoring stage when inlined per
+                        # when-branch
+                        "e1_lemma": lemma_phrase(e1_surf),
+                        "e2_lemma": lemma_phrase(e2_surf),
+                        "between_lemma": lemma_phrase(between),
+                    },
+                )
+            )
+        out.append(sent_pairs)
+    return out
+
+
 def generate_pairs(
     sentences: DataFrame,
     page_relations: DataFrame,
     labels_map: dict | None = None,
-    add_no_relations: bool = True,
-    keep_no_relation_rows: bool = True,
     co_partitioned: bool = False,
 ) -> DataFrame:
-    """SENTENCES + PAGE_RELATIONS -> PAIRS (one row per candidate pair).
+    """SENTENCES + PAGE_RELATIONS -> PAIRS (one row per candidate pair,
+    marker-inserted arrays included).
 
     ``co_partitioned=True`` is the fast path for sentences that come
     STRAIGHT from the segment stage (or a partition-preserving persist of
     it): those rows are already contiguous per url within each partition
     (segment is a pure map over pages, one page row per url), so the
-    relation dim is broadcast and the fat tokenized-sentence table is
-    never shuffled at all - at web scale this removes the single largest
-    shuffle of the pipeline (token arrays are ~4x the raw text volume).
-    Use False when sentences were re-read from parquet (file splits can
-    break url contiguity) or when the gold relation set is corpus-sized
-    (dense synthetic annotations): the broadcast dim is built on the
-    driver, a serial floor that caps executor scaling.
+    relation dim is broadcast and the tokenized-sentence table is never
+    shuffled. Use False when sentences were re-read from parquet (file
+    splits can break url contiguity), or when the relation set is
+    corpus-sized: a broadcast first collects it into one process.
     """
     labels_map = labels_map or default_labels_map()
 
@@ -95,17 +182,8 @@ def generate_pairs(
     slim = sentences.select(
         "url", "sent_idx", "tokens", "token_ids", "entities", "entity_ids"
     )
-    rels_by_url = page_relations.groupBy("url").agg(
-        F.sort_array(
-            F.collect_list(F.struct("e1_id", "e2_id", "rel_class"))
-        ).alias("rels")
-    )
+    rels_by_url = relations_by_url(page_relations)
     if co_partitioned:
-        # NB: the broadcast build is driver-serial; at web scale gold
-        # relation sets are tiny (or absent - NO_RELATION augmentation
-        # dominates), so this is the right default. For synthetic corpora
-        # with per-page annotations the caller can choose the shuffle
-        # path instead (co_partitioned=False).
         joined = slim.join(F.broadcast(rels_by_url), "url", "left")
     else:
         # exactly ONE shuffle of the fat tokenized table (the round-1
@@ -125,75 +203,37 @@ def generate_pairs(
         tokenizer = DeterministicTokenizer()
 
         def process_doc(out, url, doc_rows):
-            # Doc-level mutable relation dict (the reference mutates
-            # raw_relations across a document's sentences, readers.py:427).
             # Sentence order is restored HERE (bounded per-doc sort), so
             # correctness needs url-contiguity only - not any plan-level
             # intra-url ordering.
             doc_rows.sort(key=lambda r: r.sent_idx)
-            cur_rels: dict = {}
-            rels = doc_rows[0].rels
-            if rels is not None and len(rels):
-                for r in rels:
-                    cur_rels[(r["e1_id"], r["e2_id"])] = r["rel_class"]
-            for row in doc_rows:
-                potential = cur_rels
-                entity_ids = list(row.entity_ids)
-                uniq = {e for e in entity_ids if e is not None}
-                if add_no_relations:
-                    augment_no_relations(uniq, potential)
-                exploded = explode_pairs_inline(
-                    tokens=list(row.tokens),
-                    token_ids=list(row.token_ids),
-                    entities=list(row.entities),
-                    entity_ids=entity_ids,
-                    potential_rels=potential,
-                    tokenizer=tokenizer,
-                    entity_labels_map=labels_map,
-                    entity_encoding_scheme="iob",
-                    positional_tokens="scheme_1",
-                )
-                for ex in exploded:
-                    info = ex["relation_info"]
-                    gold = info.get("relation_class")
-                    if gold == NO_RELATION and not keep_no_relation_rows:
-                        continue
-                    # pre-insertion spans for surfaces/between-text (robust
-                    # regardless of marker-arithmetic edge cases)
-                    eids = entity_ids
-                    e1_beg = eids.index(ex["e1_id"])
-                    e1_end = len(eids) - eids[::-1].index(ex["e1_id"]) - 1
-                    e2_beg = eids.index(ex["e2_id"])
-                    e2_end = len(eids) - eids[::-1].index(ex["e2_id"]) - 1
-                    toks0 = list(row.tokens)
-                    lo, hi = min(e1_end, e2_end), max(e1_beg, e2_beg)
+            sents = [(list(r.tokens), list(r.entity_ids)) for r in doc_rows]
+            per_sent = document_pairs(sents, doc_rows[0].rels)
+            for row, (tokens, entity_ids), sent_pairs in zip(
+                doc_rows, sents, per_sent
+            ):
+                for spans, p in sent_pairs:
+                    toks, tids, ents, _, _ = insert_positional_tokens(
+                        tokens=list(tokens),
+                        token_ids=list(row.token_ids),
+                        entities=list(row.entities),
+                        entity_ids=list(entity_ids),
+                        positions=spans,
+                        entity_encoding_scheme="iob",
+                        labels_map=labels_map,
+                        positional_tokens="scheme_1",
+                        special_token_ids=tokenizer.special_token_ids,
+                        corpus="generic",
+                    )
                     out["url"].append(url)
                     out["sent_idx"].append(row.sent_idx)
-                    out["e1_id"].append(ex["e1_id"])
-                    out["e2_id"].append(ex["e2_id"])
-                    out["tokens"].append(ex["tokens"])
-                    out["token_ids"].append(ex["token_ids"])
+                    out["tokens"].append(toks)
+                    out["token_ids"].append(tids)
                     out["entities"].append(
-                        [e if e is not None else "O" for e in ex["entities"]]
+                        [e if e is not None else "O" for e in ents]
                     )
-                    out["e1_beg"].append(info.get("e1_beg"))
-                    out["e1_end"].append(info.get("e1_end"))
-                    out["e2_beg"].append(info.get("e2_beg"))
-                    out["e2_end"].append(info.get("e2_end"))
-                    out["gold_class"].append(gold)
-                    e1_surf = _detok(toks0[e1_beg : e1_end + 1])
-                    e2_surf = _detok(toks0[e2_beg : e2_end + 1])
-                    between = _detok(toks0[lo + 1 : hi])
-                    out["e1_surface"].append(e1_surf)
-                    out["e2_surface"].append(e2_surf)
-                    out["between_text"].append(between)
-                    # lemmas computed here (Python already holds the row)
-                    # so scoring stays trivial JVM string ops - the
-                    # interpreted HOF lemma expression measured 2-4x the
-                    # whole scoring stage when inlined per when-branch
-                    out["e1_lemma"].append(lemma_phrase(e1_surf))
-                    out["e2_lemma"].append(lemma_phrase(e2_surf))
-                    out["between_lemma"].append(lemma_phrase(between))
+                    for k, v in p.items():
+                        out[k].append(v)
 
         # Url-contiguity guard: the per-doc buffer is only complete if a
         # url's rows arrive contiguously (guaranteed by the SMJ's url

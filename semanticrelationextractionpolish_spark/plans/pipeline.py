@@ -5,6 +5,12 @@ restatement): scan -> filter -> extract -> segment/tag -> pairs ->
 score -> triples -> link -> materialize. Each stage returns a DataFrame;
 ``build_kg`` wires them with optional per-stage parquet checkpoints
 (resume = skip completed stages).
+
+Extract, segment/tag and pairs are one Python kernel
+(``segment.segment_and_pair``): one Python crossing per page. The pairs
+stage is a JVM explode of the sentence rows' skinny pairs, so it holds
+no marker-inserted arrays; ``pairs.generate_pairs`` builds those for the
+tensorize path.
 """
 
 from __future__ import annotations
@@ -18,13 +24,12 @@ from ..operators.extract import extract
 from ..operators.linking import canonicalize, edges_from_triples
 from ..operators.materialize import checkpoint_parquet
 from ..operators.mentions import mentions_from_sentences
-from ..operators.pairs import generate_pairs
 from ..operators.score import (
     precision_recall,
     score_pairs,
     triples_from_scored,
 )
-from ..operators.segment import segment_and_tag
+from ..operators.segment import pairs_of, segment_and_pair
 
 
 def build_kg(
@@ -33,18 +38,19 @@ def build_kg(
     page_relations: DataFrame,
     lang: str = "pl",
     checkpoint_dir: str | None = None,
-    add_no_relations: bool = True,
     persist: bool = True,
     link: bool = True,
-    co_partitioned: bool | None = None,
 ) -> dict:
     """Run the full pipeline; returns a dict of stage DataFrames.
 
-    Fan-out stages (sentences feeds both mentions and pairs; triples feeds
-    both the parity harness and edges) are persisted MEMORY_AND_DISK so a
-    multi-action run computes each NLP stage exactly once - the in-memory
-    analog of the production stage-checkpoint tables (``checkpoint_dir``
-    replaces persistence with durable parquet when set).
+    Fan-out stages (the sentence rows, which carry their pairs, feed both
+    mentions and pairs; triples feeds both the parity harness and edges)
+    are persisted MEMORY_AND_DISK so a multi-action run computes each NLP
+    stage exactly once - the in-memory analog of the production
+    stage-checkpoint tables (``checkpoint_dir`` replaces persistence with
+    durable parquet when set; the "sentences" checkpoint then holds the
+    ``pairs`` column too, and a checkpoint whose columns differ from the
+    stage's - one an older layout wrote - is recomputed, not resumed).
     """
     from pyspark import StorageLevel
 
@@ -70,39 +76,30 @@ def build_kg(
     # ~x% of the scan before any Python runs (F1 in SURVEY.md §2.2)
     pl_pages = obs(pages.where(F.col("lang") == lang), "pages_kept")
     # the "extracted" stage stays exposed for callers/tests, but the
-    # sentence chain uses the FUSED extract+segment kernel: same
+    # sentence chain uses the FUSED extract+segment+pair kernel: same
     # byte-identical extraction (shared extract_series body), one
-    # JVM<->Python Arrow crossing of the corpus text instead of three
-    # (round-7, guide §4.1)
+    # JVM<->Python Arrow crossing per page - the corpus text crosses
+    # once (round 7) and the sentence arrays never go back
+    # into Python for pairing
     extracted = extract(pl_pages)
-    sentences = ckpt(
+    tagged = ckpt(
         obs(
-            segment_and_tag(pl_pages, text_col="html", from_html=True),
+            segment_and_pair(
+                pl_pages, page_relations, text_col="html", from_html=True
+            ),
             "sentences",
             F.sum("n_entities").alias("n_entity_mentions"),
         ),
         "sentences",
     )
+    sentences = tagged.drop("pairs")
     mentions = ckpt(mentions_from_sentences(sentences), "mentions")
-    # fast path: when sentences come straight from segment (or its
-    # partition-preserving persist), skip the fat sentence shuffle; a
-    # parquet checkpoint read may split files, so use the safe path there.
-    # Callers with DENSE per-page gold annotations (synthetic corpora)
-    # should pass co_partitioned=False: the fast path's broadcast of the
-    # relations dim is built on the driver, a serial floor that caps
-    # executor scaling when the dim is corpus-sized. At web scale gold
-    # sets are tiny/absent and the broadcast is the right default.
-    if co_partitioned is None:
-        co_partitioned = checkpoint_dir is None
-    pairs = ckpt(
-        generate_pairs(
-            sentences,
-            page_relations,
-            add_no_relations=add_no_relations,
-            co_partitioned=co_partitioned,
-        ),
-        "pairs",
-    )
+    # skinny pairs: a JVM explode of the sentence rows, which already
+    # hold them - persisting it too would cache every pair twice; a
+    # durable checkpoint still writes the stage, so a resume can skip it
+    pairs = pairs_of(tagged)
+    if checkpoint_dir:
+        pairs = ckpt(pairs, "pairs")
     scored = score_pairs(pairs)
     triples = ckpt(
         obs(triples_from_scored(scored), "triples"), "triples"

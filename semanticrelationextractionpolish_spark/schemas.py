@@ -85,6 +85,22 @@ PAIRS = T.StructType(
     ]
 )
 
+# a skinny pair: every PAIRS column except the sentence key and the
+# marker-inserted arrays, which only the tensorize path reads
+MARKED_ARRAYS = ("tokens", "token_ids", "entities")
+PAIR = T.StructType(
+    [
+        f
+        for f in PAIRS.fields
+        if f.name not in ("url", "sent_idx", *MARKED_ARRAYS)
+    ]
+)
+
+# segment_and_pair's output: a sentence row carrying its own skinny pairs
+SENTENCE_PAIRS = T.StructType(
+    SENTENCES.fields + [T.StructField("pairs", T.ArrayType(PAIR), True)]
+)
+
 TRIPLES = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -70,9 +70,8 @@ def stream_triples(
     the batch stages (segment -> pairs -> score) against the static
     relations table and appends to the triples sink. Returns the started
     StreamingQuery (caller awaits termination)."""
-    from ..operators.pairs import generate_pairs
     from ..operators.score import score_pairs, triples_from_scored
-    from ..operators.segment import segment_and_tag
+    from ..operators.segment import pairs_of, segment_and_pair
 
     static_rels = spark.read.parquet(relations_path)
 
@@ -80,9 +79,8 @@ def stream_triples(
         pl = batch_df.where(F.col("lang") == "pl")
         if pl.isEmpty():
             return
-        sents = segment_and_tag(_spread(pl, spark))
-        pairs = generate_pairs(sents, static_rels)
-        triples = triples_from_scored(score_pairs(pairs))
+        sents = segment_and_pair(_spread(pl, spark), static_rels)
+        triples = triples_from_scored(score_pairs(pairs_of(sents)))
         # per-batch partition + overwrite: foreachBatch is at-least-once,
         # so a replay after a crash rewrites the SAME partition instead
         # of appending duplicate evidence (round-4 review - the fix had
@@ -198,9 +196,8 @@ def stream_kg(
     import time as _time
 
     from ..operators.mentions import mentions_from_sentences
-    from ..operators.pairs import generate_pairs
     from ..operators.score import score_pairs, triples_from_scored
-    from ..operators.segment import segment_and_tag
+    from ..operators.segment import pairs_of, segment_and_pair
     from .linking import merge_mentions_batch
 
     static_rels = spark.read.parquet(relations_path)
@@ -210,10 +207,11 @@ def stream_kg(
         if pl.isEmpty():
             return
         t0 = _time.time()
-        sents = segment_and_tag(_spread(pl, spark)).localCheckpoint(eager=True)
+        sents = segment_and_pair(_spread(pl, spark), static_rels).localCheckpoint(
+            eager=True
+        )
         t1 = _time.time()
-        pairs = generate_pairs(sents, static_rels)
-        triples = triples_from_scored(score_pairs(pairs))
+        triples = triples_from_scored(score_pairs(pairs_of(sents)))
         # batch_id as a long data column inside the partition files too
         # (same reader contract as stream_triples, round-4 advice)
         triples.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(

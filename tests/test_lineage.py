@@ -110,6 +110,37 @@ def test_midpipeline_kill_resume(spark, tmp_path):
     assert os.path.exists(os.path.join(ck, "triples", "_SUCCESS"))
 
 
+def test_resume_recomputes_checkpoints_of_an_older_stage_layout(spark, tmp_path):
+    """A complete checkpoint whose columns are not its stage's - written
+    by an older layout of the stage - is recomputed, not fed on: here a
+    "sentences" checkpoint without the ``pairs`` column and a "pairs"
+    checkpoint that still holds the marker-inserted arrays."""
+    from semanticrelationextractionpolish_spark.operators.pairs import (
+        generate_pairs,
+    )
+    from semanticrelationextractionpolish_spark.operators.segment import (
+        segment_and_tag,
+    )
+
+    pages, rels = synth_pages(spark, 25)
+    want = sorted(build_kg(spark, pages, rels, link=False)["triples"].collect())
+    ck = str(tmp_path / "kgck")
+    old_sentences = checkpoint_parquet(
+        segment_and_tag(
+            pages.where("lang='pl'"), text_col="html", from_html=True
+        ),
+        os.path.join(ck, "sentences"),
+    )
+    checkpoint_parquet(
+        generate_pairs(old_sentences, rels), os.path.join(ck, "pairs")
+    )
+
+    stages = build_kg(spark, pages, rels, checkpoint_dir=ck, link=False)
+    assert sorted(stages["triples"].collect()) == want
+    assert "pairs" in spark.read.parquet(os.path.join(ck, "sentences")).columns
+    assert "tokens" not in spark.read.parquet(os.path.join(ck, "pairs")).columns
+
+
 def test_barrier_durable_checkpoint_kill_resume(spark, tmp_path):
     """spark.semrex.checkpointDir routes the hot-path lineage barriers
     (dedup/linking localCheckpoints) through durable _SUCCESS-gated

@@ -69,7 +69,7 @@ def test_detected_mentions_feed_pairs(spark):
         [], "url string, e1_id string, e2_id string, rel_class string"
     )
     sents = detect_mentions(pages)
-    pairs = generate_pairs(sents, rels, add_no_relations=True)
+    pairs = generate_pairs(sents, rels)
     rows = pairs.collect()
     # the two detected mentions form one NO_RELATION candidate pair with
     # markers inserted

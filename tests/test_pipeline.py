@@ -1,9 +1,12 @@
 """End-to-end Spark pipeline tests on the deterministic synthetic corpus,
 cross-checked against the plain-Python document oracle."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from semanticrelationextractionpolish_spark import schemas
 from semanticrelationextractionpolish_spark.functions import kernels as K
 from semanticrelationextractionpolish_spark.functions.tokenizer import (
     DeterministicTokenizer,
@@ -21,7 +24,11 @@ from semanticrelationextractionpolish_spark.operators.score import (
     score_pairs,
     triples_from_scored,
 )
-from semanticrelationextractionpolish_spark.operators.segment import segment_and_tag
+from semanticrelationextractionpolish_spark.operators.segment import (
+    pairs_of,
+    segment_and_pair,
+    segment_and_tag,
+)
 from semanticrelationextractionpolish_spark.operators.vocab import (
     entity_label_vocab,
     relation_vocab,
@@ -81,9 +88,8 @@ def test_sentence_counts_match_oracle(stages):
     assert got == expected
 
 
-def test_pairs_match_document_oracle(stages):
-    """The Spark pair-explode must equal the plain-Python doc-level oracle
-    row-for-row (marked token sequences included)."""
+def _oracle_pair_rows():
+    """(url, row) for every pair row of the plain-Python doc-level oracle."""
     local_pages, local_rels = synth_pages_local(N_PAGES)
     raw_relations = {}
     for r in local_rels:
@@ -92,7 +98,6 @@ def test_pairs_match_document_oracle(stages):
         ]
     tok = DeterministicTokenizer()
     labels_map = default_labels_map()
-    expected = set()
     for p in local_pages:
         if p["lang"] != "pl":
             continue
@@ -106,20 +111,45 @@ def test_pairs_match_document_oracle(stages):
             add_no_relations=True,
         )
         for r in rows:
-            if r["e1_id"] is None:
-                continue
-            expected.add(
-                (
-                    p["url"],
-                    r["sent_idx"],
-                    r["e1_id"],
-                    r["e2_id"],
-                    tuple(r["tokens"]),
-                    r["relation_info"].get("relation_class"),
-                )
-            )
+            if r["e1_id"] is not None:
+                yield p["url"], r
+
+
+def test_pairs_match_document_oracle(stages):
+    """The pipeline's skinny pairs must equal the plain-Python doc-level
+    oracle row-for-row: ids, gold class and marker coordinates."""
+    span = ("e1_beg", "e1_end", "e2_beg", "e2_end")
+    expected = {
+        (url, r["sent_idx"], r["e1_id"], r["e2_id"])
+        + (r["relation_info"].get("relation_class"),)
+        + tuple(r["relation_info"][k] for k in span)
+        for url, r in _oracle_pair_rows()
+    }
+    got = {
+        (r["url"], r["sent_idx"], r["e1_id"], r["e2_id"], r["gold_class"])
+        + tuple(r[k] for k in span)
+        for r in stages["pairs"].collect()
+    }
+    assert got == expected
+
+
+def test_marked_pairs_match_document_oracle(stages, corpus):
+    """generate_pairs must equal the oracle row-for-row, marked token
+    sequences included."""
+    _, rels = corpus
+    expected = {
+        (
+            url,
+            r["sent_idx"],
+            r["e1_id"],
+            r["e2_id"],
+            tuple(r["tokens"]),
+            r["relation_info"].get("relation_class"),
+        )
+        for url, r in _oracle_pair_rows()
+    }
     got = set()
-    for r in stages["pairs"].collect():
+    for r in generate_pairs(stages["sentences"], rels).collect():
         got.add(
             (
                 r["url"],
@@ -281,3 +311,132 @@ def test_triples_deterministic_across_runs(spark, corpus):
     t1 = {tuple(r) for r in s1["triples"].collect()}
     t2 = {tuple(r) for r in s2["triples"].collect()}
     assert t1 == t2
+
+
+# every PAIRS column except the marker-inserted arrays
+PAIR_COLS = [f.name for f in schemas.PAIRS.fields if f.name not in schemas.MARKED_ARRAYS]
+
+
+def _assert_same_rows(a, b):
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def _ent(eid, surface, cat="person_nam"):
+    return f'<entity id="{eid}" category="{cat}">{surface}</entity>'
+
+
+def _crowd(prefix, ids):
+    return " i ".join(_ent(f"{prefix}.{k}", f"Osoba{k}") for k in ids)
+
+
+@pytest.fixture(scope="module")
+def edge_corpus(spark):
+    """Hand-built pages for each edge of the document pair loop."""
+    pages = [
+        # one 16-entity sentence: the cap skips augmentation, so only the
+        # annotated pair is a candidate
+        ("u_cap", f"Spotkali się {_crowd('c', range(1, 17))} w sali.", "pl"),
+        # (k.1, k.2) is augmented as NO_RELATION in sentence 0 and carried
+        # into sentence 1, whose 16 entities augment nothing themselves
+        (
+            "u_carry",
+            f"{_ent('k.1', 'Anna')} zna {_ent('k.2', 'Marka')}. "
+            f"Potem przyszli {_crowd('k', range(1, 17))} razem.",
+            "pl",
+        ),
+        # the annotated pair spans two sentences: dropped
+        (
+            "u_cross",
+            f"{_ent('x.1', 'Jan')} mieszka tutaj. {_ent('x.2', 'Ewa')} też.",
+            "pl",
+        ),
+        ("u_null", None, "pl"),
+        ("u_empty", "", "pl"),
+        # no relations at all: augmentation alone makes the pair
+        (
+            "u_norels",
+            f"{_ent('n.1', 'Piotr')} lubi {_ent('n.2', 'Krakow', 'city_nam')}.",
+            "pl",
+        ),
+    ]
+    rels = [
+        ("u_cap", "c.1", "c.2", "knows"),
+        ("u_cross", "x.1", "x.2", "knows"),
+    ]
+    return (
+        spark.createDataFrame(pages, "url string, text string, lang string"),
+        spark.createDataFrame(
+            rels, "url string, e1_id string, e2_id string, rel_class string"
+        ),
+    )
+
+
+@pytest.fixture(scope="module")
+def golden_corpus(spark):
+    pages, rels = synth_pages(spark, 30)
+    return pages.where("lang='pl'").cache(), rels.cache()
+
+
+@pytest.mark.parametrize("which", ["edge_corpus", "golden_corpus"])
+def test_segment_and_pair_matches_two_stage_path(request, which):
+    """One kernel per page equals segment_and_tag -> generate_pairs: the
+    sentences exactly, and the pairs on every non-array column."""
+    pages, rels = request.getfixturevalue(which)
+    tagged = segment_and_pair(pages, rels)
+    sents = segment_and_tag(pages)
+    _assert_same_rows(tagged.drop("pairs"), sents)
+    _assert_same_rows(
+        pairs_of(tagged), generate_pairs(sents, rels).select(*PAIR_COLS)
+    )
+    assert pairs_of(tagged).columns == PAIR_COLS
+
+
+def test_segment_and_pair_edges(edge_corpus):
+    pages, rels = edge_corpus
+    tagged = segment_and_pair(pages, rels)
+    got = {}
+    for r in pairs_of(tagged).collect():
+        got.setdefault(r["url"], []).append(
+            (r["sent_idx"], r["e1_id"], r["e2_id"], r["gold_class"])
+        )
+    assert got.pop("u_cap") == [(0, "c.1", "c.2", "knows")]
+    assert sorted(got.pop("u_carry")) == [
+        (0, "k.1", "k.2", "NO_RELATION"),
+        (1, "k.1", "k.2", "NO_RELATION"),
+    ]
+    assert got.pop("u_norels") == [(0, "n.1", "n.2", "NO_RELATION")]
+    assert got == {}  # u_cross dropped; null and empty pages make nothing
+    n_sents = {
+        r["url"]: r["n"]
+        for r in tagged.groupBy("url").agg(F.count("*").alias("n")).collect()
+    }
+    assert n_sents == {"u_cap": 1, "u_carry": 2, "u_cross": 2, "u_norels": 1}
+
+
+def test_segment_and_pair_duplicate_urls_are_independent(spark, edge_corpus):
+    """Two page rows with one url are two documents: each is segmented
+    and paired on its own (one set of rows per page row, the per-row
+    precedent of mentions_from_sentences), where generate_pairs' fast
+    path would refuse the revisited url."""
+    pages, rels = edge_corpus
+    once = pages.where("url = 'u_carry'")
+    # the copies are not adjacent and share one partition
+    twice = once.unionByName(pages.where("url = 'u_norels'")).unionByName(once)
+    twice = twice.coalesce(1)
+    one, two = segment_and_pair(once, rels), segment_and_pair(twice, rels)
+    _assert_same_rows(
+        two.where("url = 'u_carry'"), one.unionByName(one)
+    )
+    assert pairs_of(two).where("url = 'u_carry'").count() == 4
+
+
+def test_build_kg_runs_one_python_map(spark, corpus):
+    """Extract, segment and pairs cross into Python once: the executed
+    plan of the triples holds exactly one Python map node."""
+    pages, rels = (df.localCheckpoint(eager=True) for df in corpus)
+    triples = build_kg(spark, pages, rels, link=False)["triples"]
+    triples.count()
+    plan = triples._jdf.queryExecution().executedPlan().toString()
+    # AQE prints the initial and the final plan: count distinct nodes
+    nodes = set(re.findall(r"MapInPandas \w+\(.*?\)#(\d+)", plan))
+    assert len(nodes) == 1, plan

@@ -75,11 +75,6 @@ def main():
         # the timed window - run it fused (ckpt mode stays the durable
         # resumable shape; persisted mode is for fan-out consumers)
         persist=mode == "cache",
-        # the synthetic corpus has dense per-page gold annotations: the
-        # broadcast fast path's driver-side dim build is a serial floor
-        # (~50s at 500k pages) that caps N->4N scaling; the shuffle path
-        # scales with executors (see pairs.generate_pairs docstring)
-        co_partitioned=False,
     )
     n_triples = stages["triples"].count()
     extract_sec = time.time() - t0
