@@ -16,26 +16,20 @@ coordinates are ``kernels.marker_locations`` of each id's first/last
 occurrence, the same rule ``insert_positional_tokens`` reports, which
 ``generate_pairs`` runs on those same spans for the marked arrays.
 
-Spark shape. Two operators call it:
+Spark shape. Two operators call it, each on one row per document:
 
-* ``segment.segment_and_pair`` - the pipeline path. Pages join their
-  relation lists on url and one ``mapInPandas`` task per page partition
-  segments, tags and pairs; a page row is a whole document, so no url
-  contiguity is needed and the sentence arrays cross into Python once.
+* ``segment.segment_and_pair`` - the pipeline path. A page row is a
+  whole document: pages join their relation lists on url and one
+  ``mapInPandas`` kernel segments, tags and pairs each page, so the
+  sentence arrays cross into Python once.
 * ``generate_pairs`` below - for callers that need the marker-inserted
   ``tokens``/``token_ids``/``entities`` arrays (tensorize, goldens).
-  Sentences cross into Python a second time:
+  It rebuilds the document rows from sentence rows:
 
+      sentences groupBy(url) -> sent_idx-sorted sentence list  (ONE fat shuffle)
       page_relations groupBy(url) -> per-doc relation list     (small shuffle)
-      slim sentences repartition(url)                          (ONE fat shuffle)
-        left-join rel lists ON url (exchange reused)
-        sortWithinPartitions(url, sent_idx)                    (local, no shuffle)
-      mapInPandas(doc kernel, bounded per-doc buffer)
-
-  Its fast path (co_partitioned=True) broadcasts the relation dim
-  instead and shuffles nothing. Either way every document arrives
-  contiguous (the kernel guards this) and the kernel buffers one
-  document at a time, restoring sent_idx order itself.
+        left-join ON url
+      mapInPandas(document_pairs + insert_positional_tokens per doc row)
 """
 
 from __future__ import annotations
@@ -51,24 +45,18 @@ from ..functions.kernels import (
     augment_no_relations,
     insert_positional_tokens,
     marker_locations,
+    mk_labels_map,
 )
 from ..functions.lemmatize import lemma_phrase
 from ..functions.tokenizer import DeterministicTokenizer
 
 # generic IOB label vocabulary for the synthetic channels; only used for
 # the marker label surgery's id lookups (insert_positional_tokens).
-def default_labels_map(channels=None):
-    from ..functions.kernels import mk_labels_map
-
-    channels = channels or [
-        "person_nam",
-        "city_nam",
-        "country_nam",
-        "org_nam",
-        "facility_nam",
-        "ENT",
-    ]
-    return mk_labels_map(channels, "iob")
+def default_labels_map():
+    return mk_labels_map(
+        ["person_nam", "city_nam", "country_nam", "org_nam", "facility_nam", "ENT"],
+        "iob",
+    )
 
 
 def _detok(tokens):
@@ -159,134 +147,58 @@ def document_pairs(sentences, rels) -> list[list[tuple[dict, dict]]]:
 def generate_pairs(
     sentences: DataFrame,
     page_relations: DataFrame,
-    labels_map: dict | None = None,
     co_partitioned: bool = False,
 ) -> DataFrame:
     """SENTENCES + PAGE_RELATIONS -> PAIRS (one row per candidate pair,
     marker-inserted arrays included).
 
-    ``co_partitioned=True`` is the fast path for sentences that come
-    STRAIGHT from the segment stage (or a partition-preserving persist of
-    it): those rows are already contiguous per url within each partition
-    (segment is a pure map over pages, one page row per url), so the
-    relation dim is broadcast and the tokenized-sentence table is never
-    shuffled. Use False when sentences were re-read from parquet (file
-    splits can break url contiguity), or when the relation set is
-    corpus-sized: a broadcast first collects it into one process.
+    The sentence rows are grouped into one row per url (all rows of a
+    url form one document), their arrays sorted by sent_idx, so each
+    document reaches the kernel whole whatever the input's order or
+    partitioning (a parquet re-read, a shuffle). ``co_partitioned`` is
+    accepted and ignored; it goes when the benchmark's traced pass moves
+    to ``segment_and_pair``.
     """
-    labels_map = labels_map or default_labels_map()
-
-    # prune to exactly the kernel's columns BEFORE any shuffle/Arrow
-    # transfer: sent_text and n_entities otherwise ride the single
-    # biggest shuffle of the pipeline for nothing (~25% of row bytes)
-    slim = sentences.select(
-        "url", "sent_idx", "tokens", "token_ids", "entities", "entity_ids"
+    labels_map = default_labels_map()
+    sent = F.struct("sent_idx", "tokens", "token_ids", "entities", "entity_ids")
+    docs = (
+        sentences.groupBy("url")
+        .agg(F.sort_array(F.collect_list(sent)).alias("sents"))
+        .join(relations_by_url(page_relations), "url", "left")
     )
-    rels_by_url = relations_by_url(page_relations)
-    if co_partitioned:
-        joined = slim.join(F.broadcast(rels_by_url), "url", "left")
-    else:
-        # exactly ONE shuffle of the fat tokenized table (the round-1
-        # path shuffled it twice: once for the join's SMJ exchange, once
-        # for a repartition(url)): the explicit repartition co-locates
-        # each document and is reused by the join; the LOCAL sort sits
-        # ABOVE the join, directly under the kernel (a sort below a join
-        # is eliminated by Catalyst's EliminateSorts - join output order
-        # is unspecified - which silently scattered documents).
-        joined = (
-            slim.repartition(F.col("url"))
-            .join(rels_by_url, "url", "left")
-            .sortWithinPartitions("url", "sent_idx")
-        )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tokenizer = DeterministicTokenizer()
-
-        def process_doc(out, url, doc_rows):
-            # Sentence order is restored HERE (bounded per-doc sort), so
-            # correctness needs url-contiguity only - not any plan-level
-            # intra-url ordering.
-            doc_rows.sort(key=lambda r: r.sent_idx)
-            sents = [(list(r.tokens), list(r.entity_ids)) for r in doc_rows]
-            per_sent = document_pairs(sents, doc_rows[0].rels)
-            for row, (tokens, entity_ids), sent_pairs in zip(
-                doc_rows, sents, per_sent
-            ):
-                for spans, p in sent_pairs:
-                    toks, tids, ents, _, _ = insert_positional_tokens(
-                        tokens=list(tokens),
-                        token_ids=list(row.token_ids),
-                        entities=list(row.entities),
-                        entity_ids=list(entity_ids),
-                        positions=spans,
-                        entity_encoding_scheme="iob",
-                        labels_map=labels_map,
-                        positional_tokens="scheme_1",
-                        special_token_ids=tokenizer.special_token_ids,
-                        corpus="generic",
-                    )
-                    out["url"].append(url)
-                    out["sent_idx"].append(row.sent_idx)
-                    out["tokens"].append(toks)
-                    out["token_ids"].append(tids)
-                    out["entities"].append(
-                        [e if e is not None else "O" for e in ents]
-                    )
-                    for k, v in p.items():
-                        out[k].append(v)
-
-        # Url-contiguity guard: the per-doc buffer is only complete if a
-        # url's rows arrive contiguously (guaranteed by the SMJ's url
-        # sort on the safe path and by BroadcastHashJoin's stream-order
-        # preservation on the fast path). VERIFY it and fail loudly
-        # instead of silently losing NO_RELATION state if an optimizer
-        # change ever scatters a document (round-1 judge finding).
-        # Membership is tracked as 64-bit url digests, not url strings:
-        # the guard lives for the whole task, and at web scale a
-        # partition holds millions of urls - a string set would be
-        # hundreds of MB of unbounded per-task state for a sanity check
-        # (round-2 advice). A digest collision making a real revisit look
-        # new is ~n^2/2^65 per task - the guard stays effectively exact.
-        import hashlib
-
-        def _url_digest(u: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(u.encode("utf-8"), digest_size=8).digest(), "big"
-            )
-
-        seen_urls: set[int] = set()
-        cur_url: str | None = None
-        buf: list = []
         for pdf in batches:
             out = {f.name: [] for f in schemas.PAIRS.fields}
-            for row in pdf.itertuples(index=False):
-                url = row.url
-                if url != cur_url:
-                    dig = _url_digest(url)
-                    if dig in seen_urls:
-                        raise RuntimeError(
-                            "generate_pairs: url revisited after the cursor "
-                            f"moved past it ({url!r}); input rows are not "
-                            "url-contiguous"
+            for url, sents, rels in zip(pdf["url"], pdf["sents"], pdf["rels"]):
+                tagged = [(list(s["tokens"]), list(s["entity_ids"])) for s in sents]
+                for s, sent_pairs in zip(sents, document_pairs(tagged, rels)):
+                    for spans, p in sent_pairs:
+                        toks, tids, ents, _, _ = insert_positional_tokens(
+                            tokens=list(s["tokens"]),
+                            token_ids=list(s["token_ids"]),
+                            entities=list(s["entities"]),
+                            entity_ids=list(s["entity_ids"]),
+                            positions=spans,
+                            entity_encoding_scheme="iob",
+                            labels_map=labels_map,
+                            positional_tokens="scheme_1",
+                            special_token_ids=tokenizer.special_token_ids,
+                            corpus="generic",
                         )
-                    seen_urls.add(dig)
-                    if buf:
-                        process_doc(out, cur_url, buf)
-                    cur_url = url
-                    buf = []
-                buf.append(row)
+                        out["url"].append(url)
+                        out["sent_idx"].append(s["sent_idx"])
+                        out["tokens"].append(toks)
+                        out["token_ids"].append(tids)
+                        out["entities"].append(
+                            [e if e is not None else "O" for e in ents]
+                        )
+                        for k, v in p.items():
+                            out[k].append(v)
             if out["url"]:
+                # an all-empty pandas frame infers float64 columns that
+                # Arrow cannot cast to the array types
                 yield pd.DataFrame(out)
-        out = {f.name: [] for f in schemas.PAIRS.fields}
-        if buf:
-            process_doc(out, cur_url, buf)
-        if out["url"]:
-            # an all-empty pandas frame infers float64 columns that Arrow
-            # cannot cast to the array types - yield only non-empty frames
-            yield pd.DataFrame(out)
 
-    # both paths feed the kernel directly: the broadcast join preserves
-    # the segment stage's url-contiguous stream order, and the SMJ sorts
-    # by url within partitions - either way every document is contiguous
-    # (the in-kernel guard enforces it)
-    return joined.mapInPandas(kernel, schema=schemas.PAIRS)
+    return docs.mapInPandas(kernel, schema=schemas.PAIRS)

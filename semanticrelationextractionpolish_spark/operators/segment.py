@@ -39,13 +39,7 @@ from ..functions.tokenizer import DeterministicTokenizer, sent_tokenize
 from .pairs import document_pairs, relations_by_url
 
 
-def _kernel(
-    schema,
-    text_col: str,
-    from_html: bool,
-    entity_encoding_scheme: str = "iob",
-    use_entity_classes: bool = True,
-):
+def _kernel(schema, text_col: str, from_html: bool):
     """Page kernel emitting ``schema`` rows; pairs each page when the
     schema has a ``pairs`` column (its input then has ``rels``)."""
     with_pairs = "pairs" in schema.names
@@ -66,10 +60,7 @@ def _kernel(
                 tagged = []
                 for sent_idx, sent in enumerate(sent_tokenize(text)):
                     toks, tids, ents, eids, uniq = tag_sentence_inline(
-                        sent,
-                        tokenizer,
-                        entity_encoding_scheme=entity_encoding_scheme,
-                        use_entity_classes=use_entity_classes,
+                        sent, tokenizer, "iob", use_entity_classes=True
                     )
                     tagged.append((toks, eids))
                     out["url"].append(url)
@@ -96,8 +87,6 @@ def _kernel(
 def segment_and_tag(
     pages: DataFrame,
     text_col: str = "text",
-    entity_encoding_scheme: str = "iob",
-    use_entity_classes: bool = True,
     from_html: bool = False,
 ) -> DataFrame:
     """pages -> SENTENCES (url, sent_idx, sent_text, tokens, token_ids,
@@ -111,15 +100,9 @@ def segment_and_tag(
     the full corpus text moved and transposed per run (round 7: control
     how many columns cross, and how often).
     """
-    kernel = _kernel(
-        schemas.SENTENCES,
-        text_col,
-        from_html,
-        entity_encoding_scheme=entity_encoding_scheme,
-        use_entity_classes=use_entity_classes,
-    )
     return pages.select("url", text_col).mapInPandas(
-        kernel, schema=schemas.SENTENCES
+        _kernel(schemas.SENTENCES, text_col, from_html),
+        schema=schemas.SENTENCES,
     )
 
 

@@ -10,7 +10,8 @@ Extract, segment/tag and pairs are one Python kernel
 (``segment.segment_and_pair``): one Python crossing per page. The pairs
 stage is a JVM explode of the sentence rows' skinny pairs, so it holds
 no marker-inserted arrays; ``pairs.generate_pairs`` builds those for the
-tensorize path.
+tensorize path from sentence rows, grouped per url into the same
+one-row-per-document shape.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ Per batch (``foreachBatch`` over a mentions stream):
    lemma of the merged component - exactly what batch CC over the full
    edge set would label it. Per-batch CC cost is proportional to new
    edges + touched components, independent of total graph size
-   (probed: ``tools/probe_incremental_cc.py``).
+   (probed: ``tools/probe_state_compaction.py``).
 
 All state lives in a ``VersionedState`` (see ``streaming/state.py``):
 immutable per-batch segments + one atomic manifest swap per batch, so

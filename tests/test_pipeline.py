@@ -268,42 +268,6 @@ def test_vocab_tables(spark, stages, corpus):
     assert len(set(rv.values())) == len(rv)
 
 
-def test_fast_path_guard_detects_noncontiguous_urls(spark, corpus):
-    """co_partitioned=True assumes url-contiguous row order (preserved by
-    BroadcastHashJoin today). If that invariant ever breaks, the kernel
-    must fail loudly - not silently lose doc-level NO_RELATION state."""
-    pages, rels = corpus
-    sents = segment_and_tag(pages.where("lang='pl'"))
-    rows = sents.limit(6).collect()
-    urls = {r["url"] for r in rows}
-    if len(urls) < 2:
-        pytest.skip("need >=2 urls")
-    # interleave two documents' sentences in one partition
-    a, b = sorted(urls)[:2]
-    ra = [r for r in rows if r["url"] == a]
-    rb = [r for r in rows if r["url"] == b]
-    interleaved = [ra[0], rb[0], ra[-1]] if len(ra) > 1 else [ra[0], rb[0], ra[0]]
-    bad = spark.createDataFrame(interleaved, sents.schema).coalesce(1)
-    with pytest.raises(Exception, match="url revisited"):
-        generate_pairs(bad, rels, co_partitioned=True).count()
-    # the safe path handles the same input fine (repartition+sort fixes it)
-    assert generate_pairs(bad, rels, co_partitioned=False).count() >= 0
-
-
-def test_safe_path_order_insensitive(spark, corpus):
-    """Randomly reordered sentence input through the safe path produces
-    exactly the fast path's pairs (round-1 judge asked for an
-    order-shuffling regression test)."""
-    pages, rels = corpus
-    sents = segment_and_tag(pages.where("lang='pl'"))
-    fast = generate_pairs(sents, rels, co_partitioned=True)
-    shuffled = sents.orderBy(F.md5(F.concat_ws("|", "url", F.col("sent_idx"))))
-    safe = generate_pairs(shuffled, rels, co_partitioned=False)
-    cols = ["url", "sent_idx", "e1_id", "e2_id", "gold_class", "e1_beg", "e2_end"]
-    f, s = fast.select(*cols), safe.select(*cols)
-    assert f.exceptAll(s).isEmpty() and s.exceptAll(f).isEmpty()
-
-
 def test_triples_deterministic_across_runs(spark, corpus):
     pages, rels = corpus
     s1 = build_kg(spark, pages, rels)
@@ -391,6 +355,36 @@ def test_segment_and_pair_matches_two_stage_path(request, which):
     assert pairs_of(tagged).columns == PAIR_COLS
 
 
+def test_generate_pairs_ignores_sentence_order(
+    spark, corpus, edge_corpus, tmp_path
+):
+    """generate_pairs groups sentence rows per url, so order and
+    partitioning cannot change its pairs: segment_and_tag output, an
+    md5-ordered shuffle, two documents interleaved in one partition and
+    a parquet round-trip give identical rows, marked arrays included.
+    u_carry's pairs depend on its sentence order (a NO_RELATION pair
+    carries from sentence 0 into sentence 1), so the interleaved frame
+    also feeds its sentences in reverse."""
+    pages = corpus[0].where("lang='pl'").select("url", "text", "lang")
+    rels = corpus[1].unionByName(edge_corpus[1])
+    sents = segment_and_tag(pages.unionByName(edge_corpus[0]))
+    base = generate_pairs(sents, rels)
+    shuffled = sents.orderBy(F.md5(F.concat_ws("|", "url", F.col("sent_idx"))))
+    _assert_same_rows(generate_pairs(shuffled, rels), base)
+
+    synth = sents.where((F.col("sent_idx") > 0) & ~F.col("url").startswith("u_"))
+    two = F.col("url").isin("u_carry", synth.first()["url"])
+    rows = sents.where(two).orderBy(F.desc("sent_idx")).collect()
+    assert len({r["url"] for r in rows}) == 2
+    interleaved = spark.createDataFrame(rows, sents.schema).coalesce(1)
+    assert base.where(two).where("gold_class = 'NO_RELATION'").count() > 0
+    _assert_same_rows(generate_pairs(interleaved, rels), base.where(two))
+
+    path = str(tmp_path / "sentences")
+    sents.repartition(4).write.parquet(path)
+    _assert_same_rows(generate_pairs(spark.read.parquet(path), rels), base)
+
+
 def test_segment_and_pair_edges(edge_corpus):
     pages, rels = edge_corpus
     tagged = segment_and_pair(pages, rels)
@@ -416,8 +410,8 @@ def test_segment_and_pair_edges(edge_corpus):
 def test_segment_and_pair_duplicate_urls_are_independent(spark, edge_corpus):
     """Two page rows with one url are two documents: each is segmented
     and paired on its own (one set of rows per page row, the per-row
-    precedent of mentions_from_sentences), where generate_pairs' fast
-    path would refuse the revisited url."""
+    precedent of mentions_from_sentences), where generate_pairs would
+    merge the two rows' sentences into one url's document."""
     pages, rels = edge_corpus
     once = pages.where("url = 'u_carry'")
     # the copies are not adjacent and share one partition

@@ -2,6 +2,8 @@
 documents, pinned in pytest so an optimizer-hostile refactor fails CI
 instead of silently 10x-ing the 100TB run."""
 
+import re
+
 from pyspark.sql import functions as F
 
 from semanticrelationextractionpolish_spark.sources.synth import synth_pages
@@ -83,6 +85,47 @@ def test_ann_single_probe_plan_has_no_generate(spark):
     plan4 = _plan(multi)
     assert plan4.count("Generate") == 1, plan4
     assert "BroadcastHashJoin" in plan4
+
+
+def _subtrees(plan: str, node: str):
+    """Each ``node`` line of a printed plan with the lines of its
+    subtree (the following lines indented deeper than it)."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    for i, ln in enumerate(lines):
+        if ln.lstrip(" :+-").startswith(node):
+            j = i + 1
+            while j < len(lines) and depth[j] > depth[i]:
+                j += 1
+            yield "\n".join(lines[i:j])
+
+
+def test_generate_pairs_shuffles_sentences_once(spark):
+    """generate_pairs moves the sentence arrays through exactly one
+    hash exchange on url (the group into document rows) and needs no
+    sort: a document row is whole, whatever the order of its input."""
+    from semanticrelationextractionpolish_spark.operators.pairs import (
+        generate_pairs,
+    )
+    from semanticrelationextractionpolish_spark.operators.segment import (
+        segment_and_tag,
+    )
+
+    pages, rels = synth_pages(spark, 50)
+    pairs = generate_pairs(segment_and_tag(pages.where("lang='pl'")), rels)
+    pairs.collect()
+    plan = _plan(pairs)
+    # AQE prints the final plan first, then the initial plan
+    final = plan.split("== Initial Plan ==")[0]
+    sentence_exchanges = [
+        t
+        for t in _subtrees(final, "Exchange hashpartitioning(url")
+        if "tokens" in t
+    ]
+    assert len(sentence_exchanges) == 1, final
+    # the first MapInPandas is generate_pairs' kernel; segment's is below
+    kernel = next(_subtrees(final, "MapInPandas"))
+    assert not re.search(r"[-+] (\*\(\d+\) )?Sort", kernel), kernel
 
 
 def test_driver_gate_surface_contract():

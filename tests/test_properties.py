@@ -262,8 +262,8 @@ _vs_ops = st.lists(
 @settings(max_examples=20, deadline=None)
 def test_versioned_state_matches_model(spark, tmp_path_factory, ops):
     """VersionedState's read view must always equal a pure-Python model:
-    committed segments, shadowed by staged same-batch segments / pending
-    replace; a 'crash' (new store instance, staged work lost) reverts to
+    committed segments, shadowed by staged same-batch segments / a pending
+    bucketed replace; a 'crash' (new store instance, staged work lost) reverts to
     the committed view. Exercises the commit/prune/grace machinery under
     arbitrary op interleavings, not just the linking workflow's."""
     from semanticrelationextractionpolish_spark.streaming.state import (
@@ -295,7 +295,10 @@ def test_versioned_state_matches_model(spark, tmp_path_factory, ops):
             store.append_batch("t", mk(rows), b)
             staged_segs[b] = rows  # re-append of a batch REPLACES it
         elif op == "replace":
-            store.replace("t", mk(rows))
+            # a full-table replace: rewrite every bucket that holds an
+            # old or a new key
+            keys = store.read("t", "v long").unionByName(mk(rows))
+            store.replace_buckets("t", mk(rows), keys, key_col="v", n_buckets=4)
             staged_replace = list(rows)
             staged_segs = {}
         elif op == "commit":

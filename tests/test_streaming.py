@@ -412,9 +412,12 @@ def test_versioned_state_crash_mid_write_recovers_previous_state(
         [(1, "krakow", 1, ["Krakow"])],
         "batch_id long, lemma string, n_mentions long, surfaces array<string>",
     ), 1)
-    store.replace("assignments", spark.createDataFrame(
+    bogus = spark.createDataFrame(
         [("BOGUS", 0, "BOGUS")], "lemma string, node_id long, canonical string"
-    ))
+    )
+    store.replace_buckets(
+        "assignments", bogus, bogus.select("lemma"), key_col="lemma", n_buckets=32
+    )
     # plus a half-written parquet segment (crash mid-write)
     garbage = _os.path.join(crash_dir, "edges", "seg-c2-b1")
     _os.makedirs(garbage, exist_ok=True)

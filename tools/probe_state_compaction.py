@@ -9,12 +9,14 @@ long stream. The two growth terms this probes were named in round 4:
   replace_buckets (only buckets holding a changed lemma rewrite).
 
 Protocol: ``n_batches`` equal-sized batches of fresh near-dup lemma
-pairs through ``merge_mentions_batch`` (same synthesis as
-probe_incremental_cc). After each batch, record wall time, per-table
-segment counts from MANIFEST.json, manifest size in bytes, and how many
-assignment bucket segments the batch rewrote. Flat = tail3/head3 of
-batch time ~1 modulo VM noise, segment counts bounded by
-COMPACT_THRESHOLD+2, manifest size bounded.
+pairs through ``merge_mentions_batch``; each pair shares almost all its
+3-gram shingles, so LSH links it, and every batch's lemmas are fresh,
+so an incremental component merge keeps per-batch time flat while a
+global one would climb with the accumulated edges. After each batch,
+record wall time, per-table segment counts from MANIFEST.json,
+manifest size in bytes, and how many assignment bucket segments the
+batch rewrote. Flat = tail3/head3 of batch time ~1 modulo VM noise,
+segment counts bounded by COMPACT_THRESHOLD+2, manifest size bounded.
 
 Usage: python tools/probe_state_compaction.py [n_batches] [pairs_per_batch]
 Prints one JSON line for PLANS.md / BENCH notes.
