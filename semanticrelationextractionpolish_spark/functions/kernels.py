@@ -58,10 +58,6 @@ class MalformedEntityError(ValueError):
     """readers.py:723-725 (MalformedEntityException)."""
 
 
-class OverlappingRelationError(ValueError):
-    """readers_kpwr.py:277-288 (OverlappingRelationException)."""
-
-
 class NoRelevantRelationsError(ValueError):
     """readers_kpwr.py:250 (NoRelevantRelationsException)."""
 
@@ -80,7 +76,7 @@ def stable_seed(*keys) -> int:
 
 # --------------------------------------------------------------------------
 # label vocabularies (readers_kpwr.py:14-95 semantics, minus the os.walk -
-# corpus scanning is a Spark aggregation in operators/vocab.py)
+# corpus scanning is a Spark aggregation in sources/kpwr.py)
 # --------------------------------------------------------------------------
 
 def mk_labels_map(channels, entity_encoding_scheme="iob"):
@@ -103,19 +99,6 @@ def mk_labels_map(channels, entity_encoding_scheme="iob"):
         else:
             raise ValueError(f"Unknown entity encoding scheme {entity_encoding_scheme}")
     return labels_map
-
-
-def mk_rels_map(relation_names, add_no_rels=True):
-    """NO_RELATION pinned to 0, rest in sorted order (readers_kpwr.py:79-88)."""
-    rels_map = {}
-    cnt = 0
-    if add_no_rels:
-        rels_map[NO_RELATION] = 0
-        cnt = 1
-    for rel in sorted(set(relation_names) - {NO_RELATION}):
-        rels_map[rel] = cnt
-        cnt += 1
-    return rels_map
 
 
 def generic_entity_id_from_label(raw_label, labels_map, entity_encoding_scheme=None):
@@ -483,127 +466,6 @@ def process_document_inline(
     return rows
 
 
-def _v1_marker_insert(toks, tids, ents, eids, beg, end, marker, eid, tokenizer, entity_encoding_scheme):
-    """One v1 slice-insertion (readers.py:349-386): wrap [beg, end] in
-    ``<eN>..</eN>``, rewriting the span-edge labels B->I and inserting
-    B/I labels at the marker slots. Reproduces the reference's
-    ``strip("B-")`` char-set quirk verbatim (it strips the CHARACTERS
-    'B' and '-', not the prefix - visible only for classes that start
-    with 'B' or '-')."""
-    cls_at_beg = ents[beg]
-    if entity_encoding_scheme == "iob":
-        generic = cls_at_beg.strip("B-").strip("I-")
-        inside, begin = f"I-{generic}", f"B-{generic}"
-    else:
-        inside = begin = cls_at_beg
-    ents[beg] = ents[end] = inside
-    open_m, close_m = f"<{marker}>", f"</{marker}>"
-    toks[beg:beg] = [open_m]
-    toks[end + 2 : end + 2] = [close_m]
-    tids[beg:beg] = [tokenizer.special_token_ids[open_m]]
-    tids[end + 2 : end + 2] = [tokenizer.special_token_ids[close_m]]
-    ents[beg:beg] = [begin]
-    ents[end + 2 : end + 2] = [inside]
-    eids[beg:beg] = [eid]
-    eids[end + 2 : end + 2] = [eid]
-
-
-def tokenize_encoded_xml_v1(
-    *,
-    doc_id,
-    doc_text,
-    tokenizer,
-    entity_encoding_scheme=None,
-    use_entity_classes=False,
-    sentence_tokenize=True,
-    raw_relations=None,
-    add_no_relations=False,
-    retain_natural_no_rels=True,
-    sentence_splitter=None,
-):
-    """The reference's FIRST document driver (readers.py:249-420),
-    restated: scheme-1-hardcoded marker wrapping by list slicing, e2
-    inserted before e1, no overlap/empty-span validation, marker
-    positions recovered by ``.index()`` afterwards. v2 supersedes it
-    (arithmetic offsets, validation), but it is a reference entry point,
-    so its exact mechanics - INCLUDING the stale-index quirk where the
-    e1 slots are computed before the e2 markers shift the list
-    (readers.py:341-344 vs :381-386) - are preserved bug-for-bug for
-    parity. Returns (tokens, token_ids, entities, entity_ids,
-    annotated_relations), lists-of-lists per emitted sentence."""
-    from .tokenizer import sent_tokenize
-
-    splitter = sentence_splitter or sent_tokenize
-    sents = splitter(doc_text) if sentence_tokenize else [doc_text]
-    raw_relations = raw_relations if raw_relations is not None else {}
-    potential_rels = dict(raw_relations.get(doc_id) or {})
-    tokens, token_ids, entities, entity_ids, annotated = [], [], [], [], []
-    for sent in sents:
-        num_inserted = 0
-        (
-            curr_tokens,
-            curr_token_ids,
-            curr_entities,
-            curr_entity_ids,
-            uniq_ids,
-        ) = tag_sentence_inline(
-            sent,
-            tokenizer,
-            entity_encoding_scheme=entity_encoding_scheme,
-            use_entity_classes=use_entity_classes,
-        )
-        if add_no_relations:
-            augment_no_relations(uniq_ids, potential_rels)
-        for (first_id, second_id), rel_class in list(potential_rels.items()):
-            if first_id not in curr_entity_ids or second_id not in curr_entity_ids:
-                continue
-            toks = list(curr_tokens)
-            tids = list(curr_token_ids)
-            ents = list(curr_entities)
-            eids = list(curr_entity_ids)
-            # ALL four slots computed up front (readers.py:341-344);
-            # the e1 insertion below deliberately reuses them stale
-            f_beg = eids.index(first_id)
-            f_end = len(eids) - eids[::-1].index(first_id) - 1
-            s_beg = eids.index(second_id)
-            s_end = len(eids) - eids[::-1].index(second_id) - 1
-            _v1_marker_insert(
-                toks, tids, ents, eids, s_beg, s_end, "e2", second_id,
-                tokenizer, entity_encoding_scheme,
-            )
-            _v1_marker_insert(
-                toks, tids, ents, eids, f_beg, f_end, "e1", first_id,
-                tokenizer, entity_encoding_scheme,
-            )
-            tokens.append(toks)
-            token_ids.append(tids)
-            entities.append(ents)
-            entity_ids.append(eids)
-            if all(m in toks for m in ("<e1>", "</e1>", "<e2>", "</e2>")):
-                annotated.append(
-                    {
-                        "e1_beg": toks.index("<e1>"),
-                        "e1_end": toks.index("</e1>"),
-                        "e2_beg": toks.index("<e2>"),
-                        "e2_end": toks.index("</e2>"),
-                        "relation_class": rel_class,
-                        "is_reversed": "FIXME",  # readers.py:395 verbatim
-                    }
-                )
-            else:
-                annotated.append({})
-            num_inserted += 1
-        if num_inserted == 0 and retain_natural_no_rels:
-            annotated.append({"comment": "global", "relation_class": NO_RELATION})
-            tokens.append(curr_tokens)
-            token_ids.append(curr_token_ids)
-            entities.append(curr_entities)
-            entity_ids.append(curr_entity_ids)
-    if sentence_tokenize:
-        return tokens, token_ids, entities, entity_ids, annotated
-    return tokens[0], token_ids[0], entities[0], entity_ids[0], annotated[0]
-
-
 # --------------------------------------------------------------------------
 # KPWr multi-entity path (readers_kpwr.py:176-356 semantics)
 # --------------------------------------------------------------------------
@@ -904,22 +766,3 @@ def tokenize_kbp37_sentence(
     entities.extend(["O"] * len(res["tokens"]))
     entity_ids.extend([0] * len(res["tokens"]))
     return tokens, token_ids, entities, entity_ids, rel_info
-
-
-# --------------------------------------------------------------------------
-# KBP37 relation-line normalization (readers.py:677-689)
-# --------------------------------------------------------------------------
-
-def kbp37_describe_relation(raw_rel_line, ignore_directionality=False):
-    if raw_rel_line == "no_relation":
-        return NO_RELATION
-    if "e1,e2" in raw_rel_line:
-        return raw_rel_line.replace("(e1,e2)", "")
-    if "e2,e1" in raw_rel_line:
-        rel = raw_rel_line.replace("(e2,e1)", "")
-        if not ignore_directionality:
-            rel += "_rev"
-        return rel
-    raise MalformedEntityError(
-        f"Relation '{raw_rel_line}' is neither e1->e2 nor e2->e1"
-    )

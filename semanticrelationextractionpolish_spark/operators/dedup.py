@@ -517,15 +517,3 @@ def simhash_near_dup_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-def dedup_keep_first(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The materializing form of exact dedup: keep the smallest doc_id
-    per content group (window row_number == 1)."""
-    w = Window.partitionBy("content_md5").orderBy("doc_id")
-    return (
-        df.withColumn("content_md5", F.md5(_norm(F.col(text_col))))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-    )

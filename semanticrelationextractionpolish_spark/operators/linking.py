@@ -170,12 +170,10 @@ def _band_rows(
     names extra sig-table columns to carry (e.g. ``("sigs",)`` when the
     in-bucket pair explode applies the signature-agreement gate).
 
-    The explode reads the materialized ``bands`` array when the sig
-    table has one; stored signature tables without it (the streaming
-    band-index backfill) get their band keys computed inline."""
-    bands = F.col("bands") if "bands" in sig_table.columns else _bands_expr()
+    The explode reads the sig table's materialized ``bands`` array, so
+    re-scanning the band rows never recomputes the band keys."""
     return sig_table.select(
-        key, *keep, F.posexplode(bands).alias("band_idx", "band_hash")
+        key, *keep, F.posexplode("bands").alias("band_idx", "band_hash")
     )
 
 

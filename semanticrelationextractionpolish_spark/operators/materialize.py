@@ -6,9 +6,6 @@ checkpoints - the north rule's per-partition resumability. Counters (the
 reference's ad-hoc ``rels_cnt`` prints, DataProvider.py:131-133) become
 ``df.observe`` metrics plus a per-partition lineage table stamped with
 ``spark_partition_id``.
-
-Writes are salted-repartitioned: hot domains (20% of the synthetic corpus
-shares one domain) would otherwise produce one fat output partition.
 """
 
 from __future__ import annotations
@@ -177,68 +174,6 @@ def release(df: DataFrame) -> bool:
             exc_info=True,
         )
         return False
-
-
-def salted_repartition(
-    df: DataFrame,
-    key: str,
-    n_partitions: int,
-    salt_buckets: int = 8,
-    secondary: str | None = None,
-) -> DataFrame:
-    """Spread a skewed key over ``salt_buckets`` sub-keys - the SURVEY §4
-    hot-domain guard. The salt is derived from ROW CONTENT
-    (pmod(xxhash64(key, secondary), buckets)), never from
-    monotonically_increasing_id: a task retry recomputes the same salt for
-    the same row, so shuffle outputs are stable under speculative
-    execution / stage retry (seeded-determinism discipline, SURVEY §4.5).
-    ``secondary`` defaults to every other column, giving distinct rows of
-    a hot key distinct salts.
-
-    Degenerate case (round-2 advice): a key-only DataFrame - or a hot key
-    whose rows are byte-identical - has no content to derive distinct
-    salts from, so the guard would silently no-op. When there are no
-    secondary columns we mix in ``spark_partition_id()``: upstream input
-    partition ids are stable under task retry (same split -> same id), so
-    the shuffle stays deterministic, while a hot key spread over many
-    input partitions now fans across salt buckets. Byte-identical
-    duplicates *within one input partition* still share a salt - they are
-    genuinely indistinguishable under the content-derived contract."""
-    other = [c for c in df.columns if c != key] if secondary is None else [secondary]
-    entropy = [F.col(c) for c in other] if other else [F.spark_partition_id()]
-    salt = F.pmod(F.xxhash64(F.col(key), *entropy), F.lit(salt_buckets))
-    return df.repartition(n_partitions, F.col(key), salt)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-) -> DataFrame:
-    """Bucketed (and bucket-sorted) table write: the co-located-join
-    layout. Repeated large-large joins or aggregations on ``key`` read
-    the bucketed table WITHOUT an Exchange on either side - at 100 TB
-    this is the difference between shuffling the page corpus once per
-    join (pages x relations by url, every pipeline run) and never
-    shuffling it again after ingest. Both join sides must be bucketed
-    on the join key with the same bucket count.
-
-    Parquet ``saveAsTable`` in the session catalog stands in for the
-    production Iceberg bucket-partition transform (``writeTo(...)
-    .partitionedBy(bucket(n, key))`` - the Iceberg runtime jar is absent
-    in this sandbox, same stand-in as ``write_graph``)."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
-    return df.sparkSession.table(table)
-
-
-def domain_of(url_col) -> F.Column:
-    """parse_url-based domain extraction for salting decisions."""
-    return F.parse_url(url_col, F.lit("HOST"))
 
 
 def partition_counters(df: DataFrame) -> DataFrame:

@@ -107,79 +107,6 @@ def extract_media_features(
     return df.select("doc_id", blob_col).mapInPandas(kernel, schema=MEDIA_FEATURES)
 
 
-def decode_image(blob: bytes, fake: bool = False) -> np.ndarray:
-    """STUB (same contract as ``decode_media``): real decode needs
-    PIL/ffmpeg. With ``fake=True`` returns a deterministic pseudo-image:
-    an (h, w) uint8 array whose shape and content derive from the
-    payload - stable across executors/retries."""
-    if not fake:
-        raise NotImplementedError(
-            "image decode requires PIL; run with fake=True for the "
-            "deterministic test double"
-        )
-    h = 8 + (len(blob) % 8)
-    w = 8 + (zlib.crc32(blob) % 8)
-    rng = np.random.RandomState(zlib.crc32(blob) & 0x7FFFFFFF)
-    return (rng.rand(h, w) * 255).astype(np.uint8)
-
-
-RESIZED = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("src_h", T.IntegerType(), True),
-        T.StructField("src_w", T.IntegerType(), True),
-        T.StructField("pixels", T.ArrayType(T.IntegerType()), True),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame,
-    out_h: int = 4,
-    out_w: int = 4,
-    blob_col: str = "blob",
-    fake: bool = True,
-) -> DataFrame:
-    """Nearest-neighbor resize to (out_h, out_w) as an Arrow-batched
-    kernel. The RESIZE math (integer index grid + fancy-indexed gather)
-    is real numpy and production-shaped; only the decode underneath is
-    the documented stub."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "src_h": [], "src_w": [], "pixels": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf[blob_col]):
-                if b is None:
-                    # same null contract as extract_media_features: one
-                    # row per input doc, NULL payload -> NULL output
-                    out["doc_id"].append(doc_id)
-                    out["src_h"].append(None)
-                    out["src_w"].append(None)
-                    out["pixels"].append(None)
-                    continue
-                img = decode_image(b, fake=fake)
-                ys = np.arange(out_h) * img.shape[0] // out_h
-                xs = np.arange(out_w) * img.shape[1] // out_w
-                small = img[ys][:, xs]
-                out["doc_id"].append(doc_id)
-                out["src_h"].append(img.shape[0])
-                out["src_w"].append(img.shape[1])
-                out["pixels"].append([int(v) for v in small.ravel()])
-            if out["doc_id"]:
-                # nullable Int32 dtype: a plain int column with None
-                # degrades to float64 and breaks the Arrow int cast
-                yield pd.DataFrame(
-                    {
-                        "doc_id": out["doc_id"],
-                        "src_h": pd.array(out["src_h"], dtype="Int32"),
-                        "src_w": pd.array(out["src_w"], dtype="Int32"),
-                        "pixels": out["pixels"],
-                    }
-                )
-
-    return df.select("doc_id", blob_col).mapInPandas(kernel, schema=RESIZED)
-
-
 def sample_frames(
     df: DataFrame,
     frame_bytes: int = 256,

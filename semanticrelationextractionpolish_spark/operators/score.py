@@ -13,8 +13,8 @@ JVM-side Column algebra: no Python in the scoring hot path at all, which
 at 100 TB means the whole stage fuses into the pair-generation stage's
 output pipeline with zero extra shuffle.
 
-Also provided: the P/R evaluation harness (A9, the sklearn
-classification_report analog) as a confusion-matrix aggregation.
+Also provided: the micro P/R/F1 evaluation harness (A9) over exact
+triple matches.
 """
 
 from __future__ import annotations
@@ -96,32 +96,3 @@ def precision_recall(
         "recall": recall,
         "f1": f1,
     }
-
-
-def classification_report_df(scored: DataFrame) -> DataFrame:
-    """Per-class P/R/F1 from the confusion matrix - the Spark restatement
-    of sklearn.classification_report (RelacjoSzukaczLSTM.py:69-77), as a
-    single groupBy aggregation."""
-    cm = scored.groupBy("gold_class", "pred_class").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tp = (
-        cm.where(F.col("gold_class") == F.col("pred_class"))
-        .select(F.col("gold_class").alias("cls"), F.col("n").alias("tp"))
-    )
-    gold_tot = cm.groupBy("gold_class").agg(F.sum("n").alias("n_gold"))
-    pred_tot = cm.groupBy("pred_class").agg(F.sum("n").alias("n_pred"))
-    rep = (
-        gold_tot.withColumnRenamed("gold_class", "cls")
-        .join(pred_tot.withColumnRenamed("pred_class", "cls"), "cls", "full")
-        .join(tp, "cls", "left")
-        .na.fill(0, ["tp", "n_gold", "n_pred"])
-    )
-    return rep.select(
-        "cls",
-        "tp",
-        "n_gold",
-        "n_pred",
-        (F.col("tp") / F.greatest(F.col("n_pred"), F.lit(1))).alias("precision"),
-        (F.col("tp") / F.greatest(F.col("n_gold"), F.lit(1))).alias("recall"),
-    )

@@ -477,60 +477,6 @@ def brute_force_topk_blocked(
     )
 
 
-def ann_recall_sweep(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    plane_counts: tuple[int, ...] = (4, 6, 8, 10, 12),
-    dim: int = DEFAULT_DIM,
-) -> list[dict]:
-    """Mean recall@k and candidate fraction per hyperplane count - the
-    measured bucket-count knob (round-2 verdict item #8): more planes =
-    2x fewer candidates per doubling but lower recall. Returns one dict
-    per n_planes for the BENCH table."""
-    total = embeddings.count()
-    out = []
-    for np_ in plane_counts:
-        n_probe = np_[1] if isinstance(np_, tuple) else 1
-        np_ = np_[0] if isinstance(np_, tuple) else np_
-        rec = ann_recall(embeddings, query_ids, k, np_, dim, n_probe=n_probe)
-        mean_recall = rec.agg(F.avg("recall")).first()[0]
-        # candidate fraction: expected probed-bucket share of the corpus
-        # (measured over the actual query probe sets, not the whole
-        # corpus, so multi-probe fan-out is priced in)
-        base = embeddings.select(
-            F.col("vec_id").alias("nid"),
-            lsh_bucket(_as_double(F.col("embedding")), dim, np_).alias("b"),
-        )
-        sizes = base.groupBy("b").agg(F.count(F.lit(1)).alias("n"))
-        probes = (
-            embeddings.where(F.col("vec_id").isin(query_ids))
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.explode(
-                    lsh_probe_buckets(
-                        _as_double(F.col("embedding")), dim, np_, n_probe
-                    )
-                ).alias("b"),
-            )
-        )
-        exp_bucket = (
-            probes.join(sizes, "b", "left")
-            .agg(F.sum(F.coalesce("n", F.lit(0))) / F.countDistinct("query_id"))
-            .first()[0]
-        )
-        out.append(
-            {
-                "n_planes": np_,
-                "n_probe": n_probe,
-                "mean_recall": round(float(mean_recall), 4),
-                "avg_candidates": round(exp_bucket, 1),
-                "candidate_frac": round(exp_bucket / total, 4),
-            }
-        )
-    return out
-
-
 def ann_recall(
     embeddings: DataFrame,
     query_ids: list[int],

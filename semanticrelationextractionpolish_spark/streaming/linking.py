@@ -116,6 +116,16 @@ def merge_mentions_batch(
     REPLACES any prior segment of the same batch, and nothing becomes
     visible before the single atomic manifest swap at the end."""
     store = VersionedState(spark, state_dir)
+    # a state_dir committed before the band-index table existed has sigs
+    # but no bands: its probe would never see historical bands and new
+    # lemmas would silently stop matching history. Such state dirs are
+    # rejected, not migrated (every commit writes both tables).
+    if store.segments("sigs") and not store.segments("bands"):
+        raise ValueError(
+            f"state_dir {state_dir!r} has committed signatures but no band "
+            "index; it predates the band-index table and cannot be merged "
+            "into - rebuild it from its mentions"
+        )
 
     batch_agg = batch_mentions.groupBy("lemma").agg(
         F.count(F.lit(1)).alias("n_mentions"),
@@ -150,18 +160,6 @@ def merge_mentions_batch(
         # anti-join only removes rows - skip the defensive distinct()
         assume_distinct=True,
     )
-    # snapshot the migration condition BEFORE staging this batch's sigs
-    # (round-4 advice: checking after staging made segments("sigs")
-    # non-empty on the very first batch of a brand-new state_dir, so the
-    # backfill fired and wrote a useless empty batch_id=-1 bands segment
-    # carried in the manifest forever). This batch's own segments are
-    # excluded on both sides so a replayed migrated batch neither
-    # re-backfills nor mistakes its own staged rows for history.
-    needs_band_backfill = any(
-        s["batch_id"] != int(batch_id) for s in store.segments("sigs")
-    ) and not any(
-        s["batch_id"] != int(batch_id) for s in store.segments("bands")
-    )
     new_sig_rows = new_sigs.select("lemma", "shingles", "sigs")
     store.append_batch("sigs", new_sig_rows, batch_id)
     all_sigs = old_sigs.unionByName(new_sig_rows)
@@ -173,18 +171,6 @@ def merge_mentions_batch(
     # grew with the stream); bucket-size gating reads only the buckets
     # this batch's bands touch, so probe cost follows batch size x
     # bucket occupancy, not history size.
-    if needs_band_backfill:
-        # migration: a state_dir committed before the band-index table
-        # existed has sigs but no bands - without this backfill the
-        # probe would only ever see the current batch's own bands and
-        # new lemmas would silently stop matching history (round-4
-        # review). One-time cost = one band derivation over the sig
-        # state; batch_id -1 is reserved (foreachBatch ids are >= 0)
-        store.append_batch(
-            "bands",
-            _band_rows(old_sigs, "lemma").localCheckpoint(eager=True),
-            -1,
-        )
     new_bands = _band_rows(new_sigs, "lemma").localCheckpoint(eager=True)
     store.append_batch("bands", new_bands, batch_id)
     all_bands = store.read("bands", BANDS_SCHEMA)  # staged view incl. this batch

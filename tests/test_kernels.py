@@ -248,12 +248,6 @@ def test_mk_labels_map_bilou():
     assert [m[f"{p}-x_nam"] for p in "BILU"] == [1, 2, 3, 4]
 
 
-def test_mk_rels_map_pins_no_relation():
-    m = K.mk_rels_map(["works_for", "born_in"])
-    assert m["NO_RELATION"] == 0
-    assert m["born_in"] == 1 and m["works_for"] == 2
-
-
 def test_get_kpwr_entity_id_strips_index():
     m = K.mk_labels_map(["person_nam"], "iob")
     assert K.get_kpwr_entity_id_from_indexed_label("B-person_nam-7", m, "iob") == 1
@@ -299,7 +293,7 @@ def _kpwr_fixture():
         [K.get_kpwr_entity_id_from_indexed_label(l, labels_map, "iob") for l in ls]
         for ls in multients
     ]
-    rels_map = K.mk_rels_map(["lives_in"])
+    rels_map = {"NO_RELATION": 0, "lives_in": 1}
     return tokens, token_ids, multients, multient_ids, labels_map, rels_map
 
 
@@ -340,7 +334,7 @@ def test_kpwr_overlap_skipped_sentence_survives():
         [K.get_kpwr_entity_id_from_indexed_label(l, labels_map, "iob") for l in ls]
         for ls in multients
     ]
-    rels_map = K.mk_rels_map(["rel_x"])
+    rels_map = {"NO_RELATION": 0, "rel_x": 1}
     rows, skipped = K.kpwr_multientities_to_relations(
         sentence_id="s",
         relevant_relations=[
@@ -374,7 +368,7 @@ def test_kpwr_negatives_capped_and_deterministic():
         [K.get_kpwr_entity_id_from_indexed_label(l, labels_map, "iob") for l in ls]
         for ls in multients
     ]
-    rels_map = K.mk_rels_map(["rel_x"])
+    rels_map = {"NO_RELATION": 0, "rel_x": 1}
     kwargs = dict(
         sentence_id="sent9",
         relevant_relations=[
@@ -456,20 +450,6 @@ def test_kpwr_conflicting_flags():
         )
 
 
-# --- KBP37 normalization (readers.py:677-689) -------------------------------
-
-def test_kbp37_describe_relation():
-    assert K.kbp37_describe_relation("no_relation") == "NO_RELATION"
-    assert K.kbp37_describe_relation("org:founded(e1,e2)") == "org:founded"
-    assert K.kbp37_describe_relation("org:founded(e2,e1)") == "org:founded_rev"
-    assert (
-        K.kbp37_describe_relation("org:founded(e2,e1)", ignore_directionality=True)
-        == "org:founded"
-    )
-    with pytest.raises(K.MalformedEntityError):
-        K.kbp37_describe_relation("weird(e3,e4)")
-
-
 # --- document-level inline processing (readers.py:422-547) ------------------
 
 def test_process_document_inline_explode(tok):
@@ -501,12 +481,13 @@ def test_process_document_inline_explode(tok):
     assert tok.detokenize(e1_span) == "adam kowalski"
 
 
-def test_reference_label_pickle_parity():
+def test_reference_label_pickle_parity(spark):
     """The one ground-truth artifact the reference ships: the pickled
     KPWr label vocabulary built by readers_kpwr.py:14-95
     (kpwr_labels_iob.bak-zklasa0 = (labels_map, rev_labels_map, rels_map,
-    rev_rels_map, label_counts)). Our mk_labels_map / mk_rels_map must
-    reproduce it exactly from the same channel/relation inventory."""
+    rev_rels_map, label_counts)). mk_labels_map and the Spark
+    kpwr_relation_vocab must reproduce it exactly from the same
+    channel/relation inventory."""
     import os
     import pickle
 
@@ -522,87 +503,16 @@ def test_reference_label_pickle_parity():
     ours = K.mk_labels_map(channels, "iob")
     assert ours == labels_map  # all 115 ids, IOB order, O pinned to 0
     assert {v: k for k, v in ours.items()} == rev_labels_map
-    rel_names = [r for r in rels_map if r != "NO_RELATION"]
-    ours_rels = K.mk_rels_map(rel_names)
+    from semanticrelationextractionpolish_spark.sources.kpwr import (
+        kpwr_relation_vocab,
+    )
+
+    rel_names = spark.createDataFrame(
+        [(r,) for r in rels_map if r != "NO_RELATION"], "name string"
+    )
+    ours_rels = {
+        r["rel_class"]: r["rel_id"]
+        for r in kpwr_relation_vocab(rel_names).collect()
+    }
     assert ours_rels == rels_map
     assert {v: k for k, v in ours_rels.items()} == rev_rels_map
-
-
-def test_tokenize_encoded_xml_v1_normal_case():
-    """v1 driver (readers.py:249-420): scheme-1 slicing insertion. With
-    e1's span before e2's, positions match the v2 arithmetic."""
-    from semanticrelationextractionpolish_spark.functions.tokenizer import (
-        DeterministicTokenizer,
-    )
-
-    tok = DeterministicTokenizer()
-    doc = (
-        'Ala <entity id="d.1">Kowalska</entity> zna '
-        '<entity id="d.2">Opole</entity> dobrze.'
-    )
-    t, ti, e, ei, ann = K.tokenize_encoded_xml_v1(
-        doc_id="d",
-        doc_text=doc,
-        tokenizer=tok,
-        entity_encoding_scheme="iob",
-        raw_relations={"d": {("d.1", "d.2"): "knows"}},
-    )
-    assert t[0] == [
-        "▁ala", "<e1>", "▁kowals", "ka", "</e1>",
-        "▁zna", "<e2>", "▁opole", "</e2>", "▁dobrze", ".",
-    ]
-    assert ann[0] == {
-        "e1_beg": 1, "e1_end": 4, "e2_beg": 6, "e2_end": 8,
-        "relation_class": "knows", "is_reversed": "FIXME",
-    }
-    assert e[0][1] == "B-ENT" and e[0][2] == "I-ENT"
-    assert len(t[0]) == len(ti[0]) == len(e[0]) == len(ei[0])
-    # marker ids come from the tokenizer's special inventory
-    assert ti[0][1] == tok.special_token_ids["<e1>"]
-
-
-def test_tokenize_encoded_xml_v1_stale_index_quirk():
-    """When the pair's FIRST entity occurs AFTER the second in the
-    sentence, v1 inserts the e1 markers at indices computed before the
-    e2 insertion shifted the list (readers.py:341-344 vs :381-386).
-    The garbled layout below is the reference's own output shape -
-    preserved bug-for-bug; v2 (process_document_inline) fixes it."""
-    from semanticrelationextractionpolish_spark.functions.tokenizer import (
-        DeterministicTokenizer,
-    )
-
-    tok = DeterministicTokenizer()
-    doc = '<entity id="d.2">Opole</entity> zna <entity id="d.1">Ala</entity> dobrze.'
-    t, _, _, _, ann = K.tokenize_encoded_xml_v1(
-        doc_id="d",
-        doc_text=doc,
-        tokenizer=tok,
-        entity_encoding_scheme="iob",
-        raw_relations={"d": {("d.1", "d.2"): "knows"}},
-    )
-    assert t[0] == [
-        "<e2>", "▁opole", "<e1>", "</e2>", "</e1>", "▁zna", "▁ala", "▁dobrze", ".",
-    ]
-    assert ann[0]["e1_beg"] == 2 and ann[0]["e2_end"] == 3
-
-
-def test_tokenize_encoded_xml_v1_no_rel_retention():
-    from semanticrelationextractionpolish_spark.functions.tokenizer import (
-        DeterministicTokenizer,
-    )
-
-    tok = DeterministicTokenizer()
-    doc = "Nic tu nie ma."
-    t, _, _, _, ann = K.tokenize_encoded_xml_v1(
-        doc_id="d", doc_text=doc, tokenizer=tok, entity_encoding_scheme="iob"
-    )
-    assert len(t) == 1
-    assert ann[0] == {"comment": "global", "relation_class": "NO_RELATION"}
-    t2, _, _, _, ann2 = K.tokenize_encoded_xml_v1(
-        doc_id="d",
-        doc_text=doc,
-        tokenizer=tok,
-        entity_encoding_scheme="iob",
-        retain_natural_no_rels=False,
-    )
-    assert t2 == [] and ann2 == []

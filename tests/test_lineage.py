@@ -35,32 +35,6 @@ def test_partition_counters(spark):
     assert all(r["_pid"] >= 0 for r in pc)
 
 
-def test_salted_repartition_deterministic(spark):
-    """The salt must be a pure function of row content: two evaluations
-    of the same input place every row in the same partition (stable under
-    task retry/recomputation - round-1 judge flagged the
-    monotonically_increasing_id salt as retry-unstable)."""
-    from semanticrelationextractionpolish_spark.operators.materialize import (
-        domain_of,
-        salted_repartition,
-    )
-
-    pages, _ = synth_pages(spark, 200)
-    keyed = pages.withColumn("domain", domain_of(F.col("url")))
-
-    def placement():
-        out = salted_repartition(keyed, "domain", 16).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        return {r["url"]: r["_pid"] for r in out.select("url", "_pid").collect()}
-
-    p1, p2 = placement(), placement()
-    assert p1 == p2
-    # the hot domain's rows actually spread over multiple partitions
-    hot_pids = {pid for url, pid in p1.items() if "hot.example.pl" in url}
-    assert len(hot_pids) > 1
-
-
 def test_checkpoint_resume_skips_recompute(spark, tmp_path):
     calls = {"n": 0}
     pages, _ = synth_pages(spark, 10)
@@ -186,51 +160,6 @@ def test_barrier_default_is_local_checkpoint(spark, tmp_path):
     out = barrier(df.withColumn("x", F.col("id") * 2), str(tmp_path / "never"))
     assert out.count() == 10
     assert not os.path.exists(str(tmp_path / "never"))
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """write_bucketed: a join of two tables bucketed on the join key
-    must run with ZERO Exchange operators (co-located join), and the
-    result must equal the plain shuffled join."""
-    from semanticrelationextractionpolish_spark.operators.materialize import (
-        write_bucketed,
-    )
-    from semanticrelationextractionpolish_spark.sources.synth import synth_pages
-
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS bktest LOCATION '{tmp_path}/warehouse'"
-    )
-    old_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        pages, rels = synth_pages(spark, 200)
-        bp = write_bucketed(
-            pages.select("url", "lang"), "bktest.pages_b", "url", n_buckets=4
-        )
-        br = write_bucketed(
-            rels.select("url", "rel_class"), "bktest.rels_b", "url", n_buckets=4
-        )
-        joined = bp.join(br, "url")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        got = sorted(map(tuple, joined.collect()))
-        want = sorted(
-            map(
-                tuple,
-                pages.select("url", "lang")
-                .join(rels.select("url", "rel_class"), "url")
-                .collect(),
-            )
-        )
-        assert got == want and got
-        # bucket-aware aggregation: groupBy on the bucket key, no shuffle
-        agg = bp.groupBy("url").count()
-        assert "Exchange" not in agg._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bcast)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        spark.sql("DROP DATABASE IF EXISTS bktest CASCADE")
 
 
 def test_write_graph_round_trip(spark, tmp_path):

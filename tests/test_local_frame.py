@@ -15,10 +15,6 @@ from semanticrelationextractionpolish_spark.operators.linking import (
     connected_components,
 )
 from semanticrelationextractionpolish_spark.operators.materialize import local_frame
-from semanticrelationextractionpolish_spark.operators.vocab import (
-    entity_label_vocab,
-    relation_vocab,
-)
 from semanticrelationextractionpolish_spark.sources.kpwr import (
     kpwr_label_vocab,
     kpwr_relation_vocab,
@@ -90,26 +86,16 @@ def test_connected_components_fast_path_is_jvm_only(spark, values):
 
 
 def test_pinned_vocab_rows_are_jvm_only(spark):
-    mentions = spark.sql(
-        "SELECT * FROM VALUES ('per_nam'), ('loc_nam'), ('ENT') AS t(entity_class)"
-    )
-    rels = spark.sql(
-        "SELECT * FROM VALUES ('located_in'), ('NO_RELATION') AS t(rel_class)"
-    )
     kpwr_docs = spark.sql(
         """SELECT * FROM VALUES ('<ann chan="loc_nam">1</ann>') AS t(xml)"""
     )
     kpwr_rels = spark.sql("SELECT * FROM VALUES ('located_in') AS t(name)")
-    ev = entity_label_vocab(mentions)
-    rv = relation_vocab(rels)
     kv = kpwr_label_vocab(kpwr_docs)
     kr = kpwr_relation_vocab(kpwr_rels)
-    for df in (ev, rv, kv, kr):
+    for df in (kv, kr):
         _assert_jvm_only(df)
-    assert ("O", 0) in {(r["label"], r["label_id"]) for r in ev.collect()}
-    assert {(r["rel_class"], r["rel_id"]) for r in rv.collect()} == {
+    assert ("O", 0) in {(r["label"], r["label_id"]) for r in kv.collect()}
+    assert {(r["rel_class"], r["rel_id"]) for r in kr.collect()} == {
         ("NO_RELATION", 0),
         ("located_in", 1),
     }
-    assert ("O", 0) in {(r["label"], r["label_id"]) for r in kv.collect()}
-    assert ("NO_RELATION", 0) in {(r["rel_class"], r["rel_id"]) for r in kr.collect()}

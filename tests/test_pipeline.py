@@ -29,10 +29,6 @@ from semanticrelationextractionpolish_spark.operators.segment import (
     segment_and_pair,
     segment_and_tag,
 )
-from semanticrelationextractionpolish_spark.operators.vocab import (
-    entity_label_vocab,
-    relation_vocab,
-)
 from semanticrelationextractionpolish_spark.plans.pipeline import (
     build_kg,
     evaluate_parity,
@@ -251,21 +247,6 @@ def test_mentions_surface_and_lemma(stages):
     assert rows == 0
     one = m.where(F.col("entity_class") == "city_nam").first()
     assert one is not None and one["lemma"]
-
-
-def test_vocab_tables(spark, stages, corpus):
-    _, rels = corpus
-    ev = entity_label_vocab(stages["mentions"]).collect()
-    by_label = {r["label"]: r["label_id"] for r in ev}
-    assert by_label["O"] == 0
-    # IOB doubling in sorted channel order
-    chans = sorted({r["label"][2:] for r in ev if r["label"] != "O"})
-    for i, c in enumerate(chans):
-        assert by_label[f"B-{c}"] == 1 + 2 * i
-        assert by_label[f"I-{c}"] == 2 + 2 * i
-    rv = {r["rel_class"]: r["rel_id"] for r in relation_vocab(rels).collect()}
-    assert rv["NO_RELATION"] == 0
-    assert len(set(rv.values())) == len(rv)
 
 
 def test_triples_deterministic_across_runs(spark, corpus):

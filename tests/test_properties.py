@@ -2,7 +2,7 @@
 
 from itertools import combinations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from semanticrelationextractionpolish_spark.functions import kernels as K
@@ -259,6 +259,16 @@ _vs_ops = st.lists(
 
 
 @given(_vs_ops)
+# a bucketed replace over committed buckets must drop the touched
+# buckets' old segments; 20 random examples rarely build this sequence
+@example(
+    [
+        ("replace", 0, [1, 2]),
+        ("commit", 0, []),
+        ("replace", 0, [1, 3]),
+        ("commit", 0, []),
+    ]
+)
 @settings(max_examples=20, deadline=None)
 def test_versioned_state_matches_model(spark, tmp_path_factory, ops):
     """VersionedState's read view must always equal a pure-Python model:

@@ -86,8 +86,11 @@ def fixture_dir(tmp_path_factory):
     return str(d)
 
 
-def test_read_kbp37(spark, fixture_dir):
-    from semanticrelationextractionpolish_spark.sources.kbp37 import read_kbp37
+def test_read_kbp37(spark, fixture_dir, tmp_path):
+    from semanticrelationextractionpolish_spark.sources.kbp37 import (
+        kbp37_quarantine,
+        read_kbp37,
+    )
 
     df = read_kbp37(spark, os.path.join(fixture_dir, "kbp37.txt"))
     rows = {r["doc_id"]: r for r in df.collect()}
@@ -99,6 +102,21 @@ def test_read_kbp37(spark, fixture_dir):
     assert "<e1> thomas burke </e1>" in rows["1"]["text"]
     # quotes stripped (reference reads the quoted-sentence convention)
     assert not rows["1"]["text"].startswith('"')
+
+    # ignore_directionality: (e2,e1) loses its _rev suffix and is not
+    # reversed; a relation line that is neither direction is quarantined
+    path = tmp_path / "kbp37_malformed.txt"
+    path.write_text(
+        KBP37_SAMPLE + '\n4\t" <e1> x </e1> and <e2> y </e2> . "\nweird(e3,e4)\n',
+        encoding="utf-8",
+    )
+    df = read_kbp37(spark, str(path), ignore_directionality=True)
+    rows = {r["doc_id"]: r for r in df.collect()}
+    assert rows["1"]["relation"] == "per:employee_of"
+    assert rows["2"]["relation"] == "org:city_of_headquarters"
+    assert rows["2"]["is_reversed"] is False
+    assert rows["3"]["relation"] == "NO_RELATION"
+    assert [r["doc_id"] for r in kbp37_quarantine(df).collect()] == ["4"]
 
 
 def test_read_conll(spark, fixture_dir):

@@ -3,6 +3,7 @@ file source, exactly-once via streaming checkpoint)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from semanticrelationextractionpolish_spark.sources.synth import synth_pages
@@ -510,19 +511,17 @@ def test_stream_kg_matches_batch_graph(spark, tmp_path):
     assert got_nodes == want_nodes
 
 
-def test_bands_state_backfill_for_pre_band_state_dirs(spark, tmp_path):
-    """Migration guard (round-4 review): a state_dir committed before
-    the band-index table existed (sigs present, no bands) must backfill
-    the historical bands on the next batch - otherwise new lemmas would
-    silently never match stored ones."""
+def test_pre_band_state_dir_is_rejected(spark, tmp_path):
+    """A state_dir committed before the band-index table existed (sigs
+    present, no bands) cannot be merged into: its probe would never see
+    the historical bands, so new lemmas would silently stop matching
+    stored ones. The next batch raises, naming the state_dir, and
+    commits nothing."""
     import json as _json
     import shutil as _shutil
 
     from semanticrelationextractionpolish_spark.streaming.linking import (
         merge_mentions_batch,
-    )
-    from semanticrelationextractionpolish_spark.streaming.state import (
-        read_state_table,
     )
 
     schema = (
@@ -543,44 +542,13 @@ def test_bands_state_backfill_for_pre_band_state_dirs(spark, tmp_path):
     mpath.write_text(_json.dumps(manifest))
     _shutil.rmtree(tmp_path / "state" / "bands", ignore_errors=True)
 
-    # next batch brings a near-dup of the historical lemma: without the
-    # backfill its probe finds no historical bands and the pair is lost
     m1 = spark.createDataFrame(
         [("u2", 0, "e1", "city_nam", 0, 1, "Warszawie", "warszawi")], schema
     )
-    assigns = merge_mentions_batch(spark, m1, state, batch_id=1)
-    canon = {r["lemma"]: r["canonical"] for r in assigns.collect()}
-    assert canon["warszaw"] == canon["warszawi"]  # merged via backfill
-    bands = read_state_table(spark, state, "bands")
-    assert bands.where("lemma = 'warszaw'").count() > 0  # backfilled
-
-
-def test_no_phantom_backfill_on_fresh_state_dir(spark, tmp_path):
-    """Round-4 advice (low): the migration condition used to be
-    evaluated AFTER this batch's sigs segment was staged, so batch 0 of
-    a brand-new state_dir saw segments("sigs") non-empty and wrote a
-    useless empty batch_id=-1 bands segment carried in the manifest
-    forever. A fresh dir's first batch must produce NO batch_id=-1
-    bands segment — and the genuine migration path must still fire
-    (covered by test_bands_state_backfill_for_pre_band_state_dirs)."""
-    import json as _json
-
-    from semanticrelationextractionpolish_spark.streaming.linking import (
-        merge_mentions_batch,
-    )
-
-    schema = (
-        "url string, sent_idx int, entity_id string, entity_class string, "
-        "beg int, end int, surface string, lemma string"
-    )
-    state = str(tmp_path / "state")
-    m0 = spark.createDataFrame(
-        [("u1", 0, "e1", "city_nam", 0, 1, "Warszawa", "warszaw")], schema
-    )
-    merge_mentions_batch(spark, m0, state, batch_id=0)
-    manifest = _json.loads((tmp_path / "state" / "MANIFEST.json").read_text())
-    band_batches = [s["batch_id"] for s in manifest["tables"]["bands"]]
-    assert band_batches == [0], band_batches  # no phantom -1 segment
+    with pytest.raises(ValueError, match="no band index") as err:
+        merge_mentions_batch(spark, m1, state, batch_id=1)
+    assert state in str(err.value)
+    assert _json.loads(mpath.read_text()) == manifest  # nothing committed
 
 
 def test_stream_kg_under_durable_barriers(spark, tmp_path):
@@ -865,8 +833,7 @@ def test_stream_kg_storage_is_bounded_per_batch(spark, tmp_path):
     )
     q.awaitTermination(300)
     leaked = stored() - before
-    # one-time allowances (e.g. the bands-backfill migration barrier),
-    # NOT per-batch growth: 5 batches each checkpoint ~9 frames, so an
+    # one-time allowances, NOT per-batch growth: 5 batches each checkpoint ~9 frames, so an
     # unreleased pipeline would leave ~45 blocks here
     assert len(leaked) <= 4, f"{len(leaked)} blocks left: {sorted(leaked)}"
 
