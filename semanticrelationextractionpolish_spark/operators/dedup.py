@@ -19,6 +19,8 @@ the verification oracle for the LSH path on small slices.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .linking import N_BANDS, N_HASHES
 from .materialize import barrier
 
 
@@ -143,6 +146,21 @@ def ngram_jaccard_pairs(
 MERSENNE_P = (1 << 31) - 1  # modulus of the cross-engine sig-hash family
 
 
+def _md5_int(tag: str, i: int) -> int:
+    return int(hashlib.md5(f"{tag}:{i}".encode("utf-8")).hexdigest(), 16)
+
+
+# the N_HASHES universal hashes (h * a_i + b_i) % p. a_i and b_i are drawn
+# independently (md5 of a tag and i): coefficients that are arithmetic
+# in i make each shingle's hash values an arithmetic progression mod p,
+# so one shingle with a low hash and a small step wins most positions
+# and near-duplicates share fewer signatures than their Jaccard implies
+MINHASH_A = tuple(
+    1 + _md5_int("minhash-a", i) % (MERSENNE_P - 1) for i in range(N_HASHES)
+)
+MINHASH_B = tuple(_md5_int("minhash-b", i) % MERSENNE_P for i in range(N_HASHES))
+
+
 def _minhash_md5_kernel(n: int):
     """mapInPandas kernel computing the ENTIRE md5 minhash signature
     block per doc from its token array - value-identical to the JVM
@@ -153,25 +171,20 @@ def _minhash_md5_kernel(n: int):
     * sh_h: int(md5(s)[:15hex], 16) % p - hashlib md5 of UTF-8 bytes ==
       Spark/DuckDB md5; 15 hex chars < 2^60 fit an int64;
     * sigs: min over shingles of (h*a_i + b_i) % p for the 16 universal
-      hashes - operands < 2^31, products < 2^62: int64 never wraps and
-      numpy % on non-negatives == Java %; one numpy broadcast per doc
-      (per-ROW, keeping the (n_shingles x 16) temporary cache-resident
-      - the round-6 simhash finding: batch-flat goes memory-bound);
+      hashes (``MINHASH_A``/``MINHASH_B``) - operands < 2^31, products
+      < 2^62: int64 never wraps and numpy % on non-negatives == Java %;
+      one numpy broadcast per doc (per-ROW, keeping the (n_shingles x
+      16) temporary cache-resident - the round-6 simhash finding:
+      batch-flat goes memory-bound);
       empty docs yield [NULL]*16 exactly like array_min(empty);
     * bands: md5 of ``"{b}|{sig,sig}"`` - for empty docs the JVM
       array_join SKIPS null sigs (no null replacement), producing
       ``"{b}|"``, mirrored here.
     """
-    import hashlib
-
-    from .linking import N_BANDS, N_HASHES
-
     p = MERSENNE_P
     rpb = N_HASHES // N_BANDS
-    A = np.array(
-        [(i * 2654435761) % p + 1 for i in range(N_HASHES)], dtype=np.int64
-    )
-    B = np.array([i * 40503 + 7 for i in range(N_HASHES)], dtype=np.int64)
+    A = np.array(MINHASH_A, dtype=np.int64)
+    B = np.array(MINHASH_B, dtype=np.int64)
 
     def _h15(s: str) -> int:
         return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
@@ -276,17 +289,16 @@ def minhash_near_dup_pairs(
             "sigs array<long>, bands array<long>"
         ),
     )
-    # checkpoint name VERSIONED (v2): the round-7 schema adds the
-    # per-doc bands array. A durable-mode resume of a pre-round-7
-    # "minhash_sigs" checkpoint (no bands column) would fail the
-    # posexplode; under the new name such a dir simply has no _SUCCESS,
-    # so the stage recomputes fresh - cross-version resume degrades to
-    # recompute instead of crashing, and within-version kill-resume
-    # keeps its stable name.
+    # checkpoint name VERSIONED (v3): v2 added the per-doc bands array,
+    # v3 the independent MINHASH_A/MINHASH_B coefficients. A durable
+    # resume of an older checkpoint would fail the posexplode (pre-v2)
+    # or mix two hash families (v2); under the new name such a dir
+    # simply has no _SUCCESS, so the stage recomputes fresh, and
+    # within-version kill-resume keeps its stable name.
     with_sigs, m = barrier_with_metrics(
-        sig_block, "minhash_sigs_v2", {"n": F.count(F.lit(1))}
+        sig_block, "minhash_sigs_v3", {"n": F.count(F.lit(1))}
     )
-    # doc ids back to long OVER the checkpoint (its v2 schema stays
+    # doc ids back to long OVER the checkpoint (its schema stays
     # valid): pairs then order and join on the numeric id directly
     docs = with_sigs.select(
         F.col("lemma").cast("long").alias("doc_id"), "shingles", "sigs", "bands"
@@ -306,10 +318,11 @@ def minhash_md5_oracle_sql(
     recomputes the identical shingles, signatures, band keys, bucket cap
     and Jaccard verification. ``docs2_cte`` must define a CTE named
     ``docs2(doc_id, text)`` (e.g. the planted-duplicates union)."""
-    from .linking import MAX_BUCKET, N_BANDS, N_HASHES
+    from .linking import MAX_BUCKET
 
     rpb = N_HASHES // N_BANDS
     h = lambda expr: f"('0x' || substr(md5({expr}), 1, 15))::BIGINT"
+    coeffs = lambda xs: f"{list(xs)}::BIGINT[]"
     return f"""
         {docs2_cte}
         , toks AS (
@@ -331,7 +344,7 @@ def minhash_md5_oracle_sql(
           SELECT doc_id, shingles,
                  list_transform(range(0, {N_HASHES}),
                    i -> list_min(list_transform(sh_h,
-                          h -> (h * ((i * 2654435761) % {MERSENNE_P} + 1) + i * 40503 + 7) % {MERSENNE_P}))) AS sigs
+                          h -> (h * ({coeffs(MINHASH_A)})[i + 1] + ({coeffs(MINHASH_B)})[i + 1]) % {MERSENNE_P}))) AS sigs
           FROM hashed
         ), banded AS (
           SELECT doc_id, b AS band_idx,

@@ -113,30 +113,18 @@ def _bands_expr():
 
 
 def shingle_table(
-    df: DataFrame,
-    key: str = "lemma",
-    ckpt_name: str | None = None,
-    assume_distinct: bool = False,
+    df: DataFrame, key: str = "lemma", ckpt_name: str | None = None
 ) -> DataFrame:
-    """One row per key: (key, shingles, sigs, bands) - the MinHash
-    signature table. Materialized (barrier) because it feeds both the
-    band explode and the verification join-back, and because Generate
-    would otherwise re-evaluate the 16 array_min signature scans per
-    exploded band (8x). Callers invoking this repeatedly on DIFFERENT
-    inputs in one job (e.g. streaming incremental linking) must pass a
-    distinct ``ckpt_name`` per call, or durable-checkpoint mode would
-    resume the first call's table.
-
-    ``assume_distinct``: skip the defensive ``distinct()``. Both
-    production call sites (``canonicalize``'s lemma groupBy, streaming's
-    per-batch new-lemma anti-join) feed inputs that are ALREADY unique
-    per key, but a persist/cache boundary between them and this plan
-    hides that from Catalyst's RemoveRedundantAggregates rule - the
-    defensive distinct then costs a real full shuffle of the lemma set
-    (round-6 verdict #1, persist audit)."""
-    return barrier(
-        _shingle_plan(df, key, assume_distinct), ckpt_name or f"lsh_sigs_{key}"
-    )
+    """One row per key of ``df``, which must already be unique per key:
+    (key, shingles, sigs, bands) - the MinHash signature table.
+    Materialized (barrier) because it feeds both the band explode and
+    the verification join-back, and because Generate would otherwise
+    re-evaluate the 16 array_min signature scans per exploded band (8x).
+    Callers invoking this repeatedly on DIFFERENT inputs in one job
+    (e.g. streaming incremental linking) must pass a distinct
+    ``ckpt_name`` per call, or durable-checkpoint mode would resume the
+    first call's table."""
+    return barrier(_shingle_plan(df, key, True), ckpt_name or f"lsh_sigs_{key}")
 
 
 def _shingle_plan(df: DataFrame, key: str, assume_distinct: bool) -> DataFrame:
@@ -347,7 +335,12 @@ def lsh_candidate_pairs(
     signature agreement >= MIN_SIG_AGREE (see the constant's derivation
     - an extra ~0.5% miss at the exact threshold, in exchange for
     dropping the quadratic accidental-candidate term a small shingle
-    universe produces)."""
+    universe produces).
+
+    ``assume_distinct``: skip the defensive ``distinct()`` when
+    ``entities`` is already unique per key - a persist boundary hides a
+    groupBy's uniqueness from Catalyst, and the distinct would then
+    re-shuffle the whole key set."""
     sig_table, m = barrier_with_metrics(
         _shingle_plan(entities, key, assume_distinct),
         f"lsh_sigs_{key}",
@@ -653,8 +646,20 @@ def canonicalize(mentions: DataFrame, jaccard: float = DEFAULT_JACCARD):
         .withColumn("canonical", F.coalesce("comp", "lemma"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )  # feeds nodes + node_assignments (edge join)
-    nodes = (
-        assignments.groupBy("canonical")
+    nodes = canonical_nodes(assignments)
+    node_assignments = assignments.select(
+        "lemma", F.xxhash64("canonical").alias("node_id"), "canonical"
+    )
+    return node_assignments, nodes
+
+
+def canonical_nodes(lemma_assignments: DataFrame) -> DataFrame:
+    """(canonical, n_mentions, surfaces) rows, one or more per lemma ->
+    nodes (node_id, canonical, surfaces, n_mentions): the one node
+    assembly batch ``canonicalize`` and the stream's ``streamed_graph``
+    share, so stream nodes equal batch nodes by construction."""
+    return (
+        lemma_assignments.groupBy("canonical")
         .agg(
             F.sum("n_mentions").alias("n_mentions"),
             F.array_sort(
@@ -664,10 +669,6 @@ def canonicalize(mentions: DataFrame, jaccard: float = DEFAULT_JACCARD):
         .withColumn("node_id", F.xxhash64("canonical"))
         .select("node_id", "canonical", "surfaces", "n_mentions")
     )
-    node_assignments = assignments.select(
-        "lemma", F.xxhash64("canonical").alias("node_id"), "canonical"
-    )
-    return node_assignments, nodes
 
 
 def edges_from_triples(triples: DataFrame, node_assignments: DataFrame) -> DataFrame:

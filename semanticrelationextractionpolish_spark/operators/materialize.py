@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def checkpoint_parquet(
-    df: DataFrame, path: str, resume: bool = True, partition_by: list[str] | None = None
-) -> DataFrame:
+def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
     """Write ``df`` to parquet unless ``path`` already holds a complete
     checkpoint (_SUCCESS) with ``df``'s columns, then read it back. This
     is the stage-level resume mechanism: a re-run after failure skips
@@ -27,15 +25,11 @@ def checkpoint_parquet(
     columns (one an older layout of the stage wrote) instead of
     returning it."""
     spark = df.sparkSession
-    if resume and os.path.exists(os.path.join(path, "_SUCCESS")):
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
         done = spark.read.parquet(path)
-        # a set: partition columns come back last
         if set(done.columns) == set(df.columns):
             return done
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
@@ -97,7 +91,7 @@ def barrier(df: DataFrame, name: str) -> DataFrame:
     spark = df.sparkSession
     ckpt_dir = spark.conf.get(BARRIER_CONF, None)
     if ckpt_dir:
-        return checkpoint_parquet(df, os.path.join(ckpt_dir, name), resume=True)
+        return checkpoint_parquet(df, os.path.join(ckpt_dir, name))
     return df.localCheckpoint(eager=True)
 
 

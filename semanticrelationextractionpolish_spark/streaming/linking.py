@@ -14,7 +14,8 @@ Per batch (``foreachBatch`` over a mentions stream):
    index probe costing ~new_lemmas x bucket occupancy, not the full
    O(n) re-blocking of batch ``lsh_candidate_pairs``;
 3. Jaccard-verify candidates against the shingle state; the surviving
-   edges become this batch's edge segment;
+   edges are this batch's new edges (checkpointed for the merge below,
+   never stored: no later batch reads them);
 4. **incremental component merge** (round-3 verdict "Next" #4 - the
    old path re-ran connected components over the ENTIRE accumulated
    edge set every batch): map each new edge's endpoints through the
@@ -68,33 +69,31 @@ from ..operators.linking import (
     shingle_table,
     sig_agreement,
 )
-from ..operators.materialize import local_checkpoint_with_count, local_frame
+from ..operators.materialize import local_checkpoint_with_count
 from .state import VersionedState
 
-LEMMAS_SCHEMA = "batch_id long, lemma string, n_mentions long, surfaces array<string>"
 SIGS_SCHEMA = "lemma string, shingles array<string>, sigs array<int>"
 BANDS_SCHEMA = "lemma string, band_idx int, band_hash int"
-EDGES_SCHEMA = "a string, b string"
 ASSIGN_SCHEMA = "lemma string, node_id long, canonical string"
 
-# assignments bucketing: default count for a fresh state, and the
-# sizing helper for callers that know their corpus scale up front
+# assignments bucketing: the smallest count, and the rows per bucket
+# the count is sized for
 ASSIGN_BUCKETS_DEFAULT = 32
 ASSIGN_BUCKET_TARGET_ROWS = 250_000
 
 
-def pick_assign_buckets(expected_lemmas: int) -> int:
+def pick_assign_buckets(n_lemmas: int) -> int:
     """Power-of-two bucket count targeting ~250k assignment rows per
-    bucket, clamped to [32, 8192]: at 1M lemmas -> 32 (the historical
-    default), at 10^9 -> 4096 (~244k rows/bucket). Choose ONCE at state
-    setup from expected corpus scale and pass to
-    ``incremental_canonicalize`` - per-bucket rewrite cost is
-    O(total/n_buckets), so a fixed 32 at 10^9 lemmas means multi-GB
-    rewrites per touched bucket (round-5 verdict #3). The count is
-    sticky once committed (``VersionedState.bucket_count``); growing it
-    later is allowed but costs a one-time full-table migration."""
+    bucket, clamped to [32, 8192]: at 1M lemmas -> 32, at 10^9 -> 4096
+    (~244k rows/bucket) - per-bucket rewrite cost is O(total/n_buckets),
+    so a fixed 32 at 10^9 lemmas would mean multi-GB rewrites per
+    touched bucket. ``merge_mentions_batch`` sizes every batch's
+    assignments from the state's lemma count: that count never falls and
+    a replay recomputes it exactly, so the bucketing stays put from
+    batch to batch and migrates (one full-table rewrite) only when the
+    lemma count crosses the next power-of-two threshold."""
     b = ASSIGN_BUCKETS_DEFAULT
-    while b < 8192 and expected_lemmas > b * ASSIGN_BUCKET_TARGET_ROWS:
+    while b < 8192 and n_lemmas > b * ASSIGN_BUCKET_TARGET_ROWS:
         b *= 2
     return b
 
@@ -105,7 +104,6 @@ def merge_mentions_batch(
     state_dir: str,
     jaccard: float = DEFAULT_JACCARD,
     batch_id: int = 0,
-    n_assign_buckets: int | None = None,
 ) -> DataFrame:
     """One incremental merge step; returns the rewritten assignments
     (lemma, node_id, canonical). Usable directly for batch-incremental
@@ -127,9 +125,16 @@ def merge_mentions_batch(
             "into - rebuild it from its mentions"
         )
 
-    batch_agg = batch_mentions.groupBy("lemma").agg(
-        F.count(F.lit(1)).alias("n_mentions"),
-        F.collect_set("surface").alias("surfaces"),
+    # null lemmas get no assignment, as in batch canonicalize (a null
+    # would also never match the anti-join below and count as new on
+    # every batch)
+    batch_agg = (
+        batch_mentions.where(F.col("lemma").isNotNull())
+        .groupBy("lemma")
+        .agg(
+            F.count(F.lit(1)).alias("n_mentions"),
+            F.collect_set("surface").alias("surfaces"),
+        )
     )
     store.append_batch(
         "lemmas",
@@ -152,14 +157,9 @@ def merge_mentions_batch(
     # shingle_table already returns a barrier (eager localCheckpoint or
     # durable parquet) - a second localCheckpoint here would pin a
     # duplicate copy of the table that release() can't reach
-    new_sigs = shingle_table(
-        new_lemmas,
-        "lemma",
-        ckpt_name=f"inc_sigs_b{batch_id}",
-        # unique by construction: batch_agg is grouped by lemma and the
-        # anti-join only removes rows - skip the defensive distinct()
-        assume_distinct=True,
-    )
+    # new_lemmas is unique by construction: batch_agg is grouped by
+    # lemma and the anti-join only removes rows
+    new_sigs = shingle_table(new_lemmas, "lemma", ckpt_name=f"inc_sigs_b{batch_id}")
     new_sig_rows = new_sigs.select("lemma", "shingles", "sigs")
     store.append_batch("sigs", new_sig_rows, batch_id)
     all_sigs = old_sigs.unionByName(new_sig_rows)
@@ -199,18 +199,15 @@ def merge_mentions_batch(
     # cand is checkpointed (with its count, in the same job) so the
     # semi-join and the verification join do not both re-run the probe
     cand, n_cand = local_checkpoint_with_count(cand)
-    sh = None
-    if n_cand == 0:
-        # empty-delta short-circuit (round-7): no candidate pair means
-        # the verification output is empty BY CONSTRUCTION - skip the
-        # key semi-join, the verify-table checkpoint and the two joins
-        # (three jobs) and append the empty edge segment directly. The
-        # common steady-state batch (no new near-duplicates) pays none
-        # of the verify machinery; the count rides the candidate
-        # checkpoint as an Observation (zero extra jobs).
-        new_edges = local_frame(spark, [], EDGES_SCHEMA)
-        n_new_edges = 0
-    else:
+    sh = new_edges = None
+    n_new_edges = 0
+    # empty-delta short-circuit (round-7): no candidate pair means the
+    # verification output is empty BY CONSTRUCTION - the key semi-join,
+    # the verify-table checkpoint and the two joins are skipped. The
+    # common steady-state batch (no new near-duplicates) pays none of
+    # the verify machinery; the count rides the candidate checkpoint as
+    # an Observation (zero extra jobs).
+    if n_cand:
         # verification as in the batch core (linking.lsh_pairs): the
         # state-sized sig table cut to candidate keys, then the join-back
         # and guarded Jaccard. sigs ride along for the SAME
@@ -227,7 +224,6 @@ def merge_mentions_batch(
             .where(F.col("jaccard") >= F.lit(jaccard))
             .select("a", "b")
         )
-    store.append_batch("edges", new_edges, batch_id)
 
     # --- incremental component merge -------------------------------------
     prev = store.read("assignments", ASSIGN_SCHEMA).select("lemma", "canonical")
@@ -270,11 +266,10 @@ def merge_mentions_batch(
     # relabel below degenerates to canonical = rep, which is exactly
     # what an empty comp table produces through coalesce.
 
-    merged = store.read("lemmas", LEMMAS_SCHEMA).groupBy("lemma").agg(
-        F.sum("n_mentions").alias("n_mentions")
-    )
+    # the state's lemma set: every lemma got exactly one signature row,
+    # in the batch that first saw it
     assignments = (
-        merged.select("lemma")
+        all_sigs.select("lemma")
         .join(prev, "lemma", "left")
         .withColumn("rep", F.coalesce("canonical", "lemma"))
     )
@@ -286,10 +281,10 @@ def merge_mentions_batch(
         assignments = assignments.select(
             "lemma", F.col("rep").alias("canonical")
         )
-    assignments = (
-        assignments
-        .select("lemma", F.xxhash64("canonical").alias("node_id"), "canonical")
-        .localCheckpoint(eager=True)
+    assignments, n_lemmas = local_checkpoint_with_count(
+        assignments.select(
+            "lemma", F.xxhash64("canonical").alias("node_id"), "canonical"
+        )
     )
     # bucketed MERGE INTO stand-in (round-4 verdict #3): only buckets
     # holding a changed assignment row are rewritten. The change set is
@@ -308,19 +303,14 @@ def merge_mentions_batch(
                 "canonical",
             ).select("lemma")
         )
-    # bucket count: explicit arg > the state's committed value > default.
-    # Sticky-by-default keeps repeat/replayed batches on the SAME
-    # bucketing (a drifting count would migrate-rewrite every bucket and
-    # break the repeat-batches-rewrite-0-buckets contract).
-    nb = (
-        n_assign_buckets
-        if n_assign_buckets is not None
-        else store.bucket_count("assignments", ASSIGN_BUCKETS_DEFAULT)
-    )
     store.replace_buckets(
-        "assignments", assignments, changed, key_col="lemma", n_buckets=nb
+        "assignments",
+        assignments,
+        changed,
+        key_col="lemma",
+        n_buckets=pick_assign_buckets(n_lemmas),
     )
-    store.commit()  # the single atomic publish point for all four tables
+    store.commit()  # the single atomic publish point for all the tables
     # every intermediate barrier's last consumer has now run (the state
     # writes + the assignments checkpoint are eager). Release them, or
     # a long-running stream pins every batch's sigs/bands/candidates in
@@ -341,28 +331,17 @@ def incremental_canonicalize(
     checkpoint_dir: str,
     jaccard: float = DEFAULT_JACCARD,
     available_now: bool = True,
-    n_assign_buckets: int | None = None,
 ):
     """foreachBatch driver for the merge step. Returns the started
     StreamingQuery; exactly-once batch replay is the streaming
     checkpoint's job, and the state writes are idempotent under replay
-    (re-merging the same batch reproduces the same state).
-
-    ``n_assign_buckets``: assignments bucket count for the bucketed
-    MERGE stand-in - size it from expected corpus scale with
-    ``pick_assign_buckets`` on a FRESH state dir; None keeps whatever
-    the state already committed (or the default for a new one)."""
+    (re-merging the same batch reproduces the same state)."""
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
         assignments = merge_mentions_batch(
-            spark,
-            batch_df,
-            state_dir,
-            jaccard,
-            batch_id=batch_id,
-            n_assign_buckets=n_assign_buckets,
+            spark, batch_df, state_dir, jaccard, batch_id=batch_id
         )
         # this driver never reads the in-memory result (next batch
         # reads committed state from disk) - drop its pinned block

@@ -164,7 +164,6 @@ def stream_kg(
     available_now: bool = True,
     max_files_per_trigger: int = 8,
     batch_metrics: list | None = None,
-    n_assign_buckets: int | None = None,
 ):
     """Full continuous KG construction - the north-rule pipeline in
     streaming form. Every micro-batch of new pages:
@@ -177,7 +176,9 @@ def stream_kg(
     2. merges the batch's mentions into the rolling canonicalization
        state (``merge_mentions_batch``: crash-atomic VersionedState +
        incremental component merge), so entity canonicalization stays
-       current without re-linking history.
+       current without re-linking history. The assignment table's
+       bucket count follows the state's lemma count
+       (``pick_assign_buckets``); there is nothing to size up front.
 
     ``streamed_graph`` assembles the canonical (nodes, edges) view from
     the triples sink + the assignment state; equality with batch
@@ -219,17 +220,7 @@ def stream_kg(
         ).parquet(os.path.join(output_dir, "triples", f"batch_id={batch_id}"))
         t2 = _time.time()
         assignments = merge_mentions_batch(
-            spark,
-            mentions_from_sentences(sents),
-            state_dir,
-            batch_id=batch_id,
-            # size the assignment bucketing from expected corpus scale
-            # (pick_assign_buckets) on a FRESH state dir; None keeps
-            # the state's committed count. Without this plumb a state
-            # created through stream_kg was permanently stuck at the
-            # 32-bucket default - the multi-GB-per-bucket rewrite
-            # pathology at large corpus scale (round-6 advice)
-            n_assign_buckets=n_assign_buckets,
+            spark, mentions_from_sentences(sents), state_dir, batch_id=batch_id
         )
         # the batch is fully committed (triples parquet + state
         # manifest) - release this batch's pinned blocks so a stream
@@ -261,7 +252,7 @@ def streamed_graph(spark: SparkSession, output_dir: str, state_dir: str) -> dict
     """Assemble the canonical graph from a ``stream_kg`` run: triples
     from the partitioned sink, assignments/nodes from the rolling state,
     edges via the same broadcast joins as the batch ``link_kg``."""
-    from ..operators.linking import edges_from_triples
+    from ..operators.linking import canonical_nodes, edges_from_triples
     from .state import read_state_table
 
     sink = os.path.join(output_dir, "triples")
@@ -273,28 +264,10 @@ def streamed_graph(spark: SparkSession, output_dir: str, state_dir: str) -> dict
         )
     triples = spark.read.parquet(sink)
     assignments = read_state_table(spark, state_dir, "assignments")
-    lemma_stats = (
-        read_state_table(spark, state_dir, "lemmas")
-        .groupBy("lemma")
-        .agg(
-            F.sum("n_mentions").alias("n_mentions"),
-            F.array_distinct(F.flatten(F.collect_list("surfaces"))).alias(
-                "surfaces"
-            ),
-        )
-    )
-    nodes = (
-        assignments.join(lemma_stats, "lemma")
-        .groupBy("canonical")
-        .agg(
-            F.sum("n_mentions").alias("n_mentions"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("surfaces")))
-            ).alias("surfaces"),
-        )
-        .withColumn("node_id", F.xxhash64("canonical"))
-        .select("node_id", "canonical", "surfaces", "n_mentions")
-    )
+    # one lemmas row per (lemma, batch): the node aggregation sums and
+    # flattens across batches as it does across a component's lemmas
+    lemmas = read_state_table(spark, state_dir, "lemmas")
+    nodes = canonical_nodes(assignments.join(lemmas, "lemma"))
     edges = edges_from_triples(triples, assignments)
     return {
         "triples": triples,

@@ -20,10 +20,9 @@ two primitives every POSIX/HDFS/S3 filesystem offers -
   ANY point before the swap leaves the previous manifest - and
   therefore the previous state of ALL tables - fully intact; partial
   segment directories are unreferenced garbage that the next commit's
-  prune sweeps up. The swap also makes the whole batch's writes (lemma
-  + sig + edge + assignment tables) one all-or-nothing commit, which
-  the old per-table overwrite ordering ("edges before sigs") only
-  approximated.
+  prune sweeps up. The swap also makes the whole batch's writes (lemma,
+  signature, band-index and assignment tables) one all-or-nothing
+  commit, which the old per-table overwrite ordering only approximated.
 
 Tables come in two flavors:
 
@@ -40,7 +39,7 @@ Tables come in two flavors:
 
 Stream-age growth control (round-4 verdict #3): every commit,
 append tables whose per-batch segment count (excluding the LATEST
-batch) reaches ``compact_threshold`` are compacted into one segment
+batch) reaches ``COMPACT_THRESHOLD`` are compacted into one segment
 annotated with the batch ids it ``covers``. The manifest swap makes
 compaction crash-safe like any other write. The latest batch is never
 compacted because it is the only batch a ``foreachBatch`` replay can
@@ -159,16 +158,6 @@ class VersionedState:
         ]
         self._pending[table] = staged + [seg]
 
-    def bucket_count(self, table: str, default: int) -> int:
-        """The committed ``n_buckets`` of a bucketed table, or
-        ``default`` for a fresh/legacy one. Callers that pass this back
-        into ``replace_buckets`` keep the stored bucketing STICKY across
-        batches - changing the count is an explicit choice (it costs a
-        one-time full-table migration rewrite), never a side effect of a
-        drifting default (round-5 verdict #3)."""
-        stored = self._manifest.get("meta", {}).get(table, {}).get("n_buckets")
-        return int(stored) if stored else default
-
     def replace_buckets(
         self,
         table: str,
@@ -274,23 +263,20 @@ class VersionedState:
         self._pending_replace.add(table)
 
     # -- commit ------------------------------------------------------------
-    def commit(self, compact_threshold: int | None = COMPACT_THRESHOLD) -> None:
+    def commit(self) -> None:
         """Atomically publish every staged write; then prune segments
         unreferenced since before the PREVIOUS commit. Append tables
-        holding more than ``compact_threshold`` non-latest segments are
-        compacted first (pass None to disable)."""
-        if compact_threshold is not None:
-            for table in sorted(
-                set(self._manifest["tables"]) | set(self._pending)
-            ):
-                if table in self._pending_replace:
-                    continue  # replace/bucketed tables never accumulate
-                n_nonlatest = (
-                    len([s for s in self.segments(table) if s["batch_id"] is not None])
-                    - 1
-                )
-                if n_nonlatest >= compact_threshold:
-                    self._compact_table(table)
+        holding ``COMPACT_THRESHOLD`` or more non-latest segments are
+        compacted first."""
+        for table in sorted(set(self._manifest["tables"]) | set(self._pending)):
+            if table in self._pending_replace:
+                continue  # replace/bucketed tables never accumulate
+            n_nonlatest = (
+                len([s for s in self.segments(table) if s["batch_id"] is not None])
+                - 1
+            )
+            if n_nonlatest >= COMPACT_THRESHOLD:
+                self._compact_table(table)
         new_tables = dict(self._manifest["tables"])
         for table in self._pending:
             new_tables[table] = self.segments(table)

@@ -554,3 +554,27 @@ def test_lsh_core_logs_verify_branch(spark, caplog, monkeypatch):
     reduced_pairs, reduced = decisions()
     assert reduced == [{"key": "lemma", "branch": "reduced", "n_keys": 3, "cap": 0}]
     assert direct_pairs == reduced_pairs == {("wrocław", "wrocławi")}
+
+
+def test_minhash_family_bands_a_one_word_twin():
+    """The md5 MinHash family's 16 hashes must be independent: with
+    coefficients arithmetic in the hash index, each shingle's 16 values
+    form an arithmetic progression mod p and this 48-word document and
+    its one-extra-word twin (Jaccard 46/47, a missed pair of the
+    link_stream benchmark) shared no band at all. Pure kernel, no
+    Spark."""
+    import hashlib
+
+    import pandas as pd
+
+    from semanticrelationextractionpolish_spark.operators.dedup import (
+        _minhash_md5_kernel,
+    )
+
+    h = hashlib.sha512(b"78:3264").hexdigest()
+    a = " ".join(h[2 * i : 2 * i + 5] for i in range(48))
+    b = a + " zz"
+    pdf = pd.DataFrame({"lemma": ["a", "b"], "toks": [a.split(" "), b.split(" ")]})
+    out = next(_minhash_md5_kernel(3)(iter([pdf])))
+    bands_a, bands_b = out["bands"]
+    assert sum(x == y for x, y in zip(bands_a, bands_b)) >= 1

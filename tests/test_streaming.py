@@ -363,6 +363,43 @@ def test_incremental_merge_replay_idempotent(spark, tmp_path):
     assert {t[2] for t in a1} == {"warszaw"} or len({t[1] for t in a1}) == 1
 
 
+def test_stream_merge_drops_null_lemmas_like_batch(spark, tmp_path):
+    """A mention with a null lemma gets no assignment in batch
+    canonicalize(), and none in the stream either. Nor may it count as a
+    new lemma on every batch (null never matches the anti-join): over
+    repeated identical batches the signature state keeps one row per
+    real lemma and a repeat batch rewrites no assignment bucket."""
+    import json as _json
+
+    from semanticrelationextractionpolish_spark.operators.linking import (
+        canonicalize,
+    )
+    from semanticrelationextractionpolish_spark.streaming.linking import (
+        merge_mentions_batch,
+    )
+    from semanticrelationextractionpolish_spark.streaming.state import (
+        read_state_table,
+    )
+
+    m = spark.createDataFrame(
+        [("gdańsk", "Gdańsk"), ("gdańska", "Gdańska"), (None, "Gdańskiem")],
+        "lemma string, surface string",
+    )
+    want, _ = canonicalize(m)
+    want = sorted(map(tuple, want.collect()))
+    state = str(tmp_path / "state")
+    manifest = tmp_path / "state" / "MANIFEST.json"
+    buckets = []
+    for batch_id in range(3):
+        got = merge_mentions_batch(spark, m, state, batch_id=batch_id)
+        assert sorted(map(tuple, got.collect())) == want
+        sigs = [r["lemma"] for r in read_state_table(spark, state, "sigs").collect()]
+        assert sorted(sigs) == ["gdańsk", "gdańska"]
+        tables = _json.loads(manifest.read_text())["tables"]
+        buckets.append({s["path"] for s in tables["assignments"]})
+    assert buckets[0] == buckets[1] == buckets[2]
+
+
 def test_versioned_state_crash_mid_write_recovers_previous_state(
     spark, tmp_path
 ):
@@ -420,7 +457,7 @@ def test_versioned_state_crash_mid_write_recovers_previous_state(
         "assignments", bogus, bogus.select("lemma"), key_col="lemma", n_buckets=32
     )
     # plus a half-written parquet segment (crash mid-write)
-    garbage = _os.path.join(crash_dir, "edges", "seg-c2-b1")
+    garbage = _os.path.join(crash_dir, "lemmas", "seg-c2-b1")
     _os.makedirs(garbage, exist_ok=True)
     open(_os.path.join(garbage, "part-00000.parquet"), "wb").write(b"\x00trunc")
     del store  # process dies here
@@ -704,37 +741,67 @@ def test_replace_buckets_rewrites_only_touched(spark, tmp_path):
     assert got == {f"key{i}": (1 if f"key{i}" in changed_keys else 0) for i in range(200)}
 
 
-def test_assign_bucket_count_sticky_and_sized(spark, tmp_path):
-    """Round-5 verdict #3: the assignments bucket count is configurable
-    end-to-end and STICKY - a state committed with B buckets keeps B on
-    later batches whose caller passes no explicit count (a drifting
-    default would migrate-rewrite the whole table and break the
-    repeat-batches-rewrite-0-buckets contract)."""
-    from semanticrelationextractionpolish_spark.streaming.linking import (
-        ASSIGN_BUCKETS_DEFAULT,
-        pick_assign_buckets,
-    )
-    from semanticrelationextractionpolish_spark.streaming.state import (
-        VersionedState,
+def test_assign_bucket_count_sticky_and_sized(spark, tmp_path, monkeypatch):
+    """The assignments bucket count is derived, not configured: every
+    batch sizes it from the state's lemma count (pick_assign_buckets).
+    That count never falls and a replay recomputes it, so a repeat
+    batch keeps the bucketing (0 buckets rewritten), while growth past
+    a power-of-two threshold migrates the table once - and the
+    assignments still equal batch canonicalize() after every batch."""
+    import hashlib
+    import json as _json
+
+    import semanticrelationextractionpolish_spark.streaming.linking as SL
+    from semanticrelationextractionpolish_spark.operators.linking import (
+        canonicalize,
     )
 
     # sizing helper: historical default at 1M, scales as powers of two
-    assert pick_assign_buckets(1_000_000) == ASSIGN_BUCKETS_DEFAULT
-    assert pick_assign_buckets(10_000_000) == 64
-    assert pick_assign_buckets(1_000_000_000) == 4096
-    assert pick_assign_buckets(10**12) == 8192  # clamp
+    assert SL.pick_assign_buckets(1_000_000) == SL.ASSIGN_BUCKETS_DEFAULT
+    assert SL.pick_assign_buckets(10_000_000) == 64
+    assert SL.pick_assign_buckets(1_000_000_000) == 4096
+    assert SL.pick_assign_buckets(10**12) == 8192  # clamp
 
-    root = str(tmp_path / "state")
-    schema = "k string, val long"
-    df = spark.createDataFrame([(f"key{i}", 0) for i in range(50)], schema)
-    store = VersionedState(spark, root)
-    store.replace_buckets("a", df, df.select("k"), key_col="k", n_buckets=16)
-    store.commit()
+    # one row per bucket: 30 lemmas fit 32 buckets, 40 need 64, 70 need 128
+    monkeypatch.setattr(SL, "ASSIGN_BUCKET_TARGET_ROWS", 1)
 
-    fresh = VersionedState(spark, root)
-    assert fresh.bucket_count("a", ASSIGN_BUCKETS_DEFAULT) == 16
-    # unknown table falls back to the given default
-    assert fresh.bucket_count("nope", ASSIGN_BUCKETS_DEFAULT) == 32
+    def lemma(i):
+        return hashlib.md5(str(i).encode()).hexdigest()[:12]
+
+    # a few planted near-duplicate twins so the merge relabels too
+    lemmas = [lemma(i) for i in range(64)] + [lemma(i) + "a" for i in range(6)]
+    batches = [lemmas[:28] + lemmas[64:66], lemmas[28:38], lemmas[38:]]
+    schema = "lemma string, surface string"
+    state = str(tmp_path / "state")
+    manifest = tmp_path / "state" / "MANIFEST.json"
+
+    def assignment_buckets():
+        tables = _json.loads(manifest.read_text())["tables"]
+        return {s["bucket"]: s["path"] for s in tables["assignments"]}
+
+    seen: list[str] = []
+    for batch_id, batch in enumerate(batches):
+        seen += batch
+        rows = [(le, le.upper()) for le in batch]
+        got = SL.merge_mentions_batch(
+            spark, spark.createDataFrame(rows, schema), state, batch_id=batch_id
+        )
+        meta = _json.loads(manifest.read_text())["meta"]["assignments"]
+        assert meta["n_buckets"] == SL.pick_assign_buckets(len(seen))
+        want, _ = canonicalize(
+            spark.createDataFrame([(le, le.upper()) for le in seen], schema)
+        )
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+    assert meta["n_buckets"] == 128
+
+    # a repeat of the last batch keeps the count and rewrites no bucket
+    before = assignment_buckets()
+    SL.merge_mentions_batch(
+        spark, spark.createDataFrame(rows, schema), state, batch_id=len(batches)
+    )
+    assert assignment_buckets() == before
 
 
 def test_stream_vs_batch_bucket_cap_divergence_pinned(spark, tmp_path, monkeypatch):
@@ -858,16 +925,13 @@ def test_spread_widens_skinny_batches_only(spark):
 
 def test_merge_empty_delta_short_circuit_then_relabel(spark, tmp_path):
     """Round-7 empty-delta short-circuit: a batch with no candidate
-    pairs must produce self-assignments and an EMPTY edges segment
-    without running the verify/CC machinery, and a later batch that
+    pairs must produce self-assignments without running the verify/CC
+    machinery, and a later batch that
     introduces a near-duplicate must still relabel the earlier lemma -
     proving the short-circuited state is indistinguishable from the
     full-path state."""
     from semanticrelationextractionpolish_spark.streaming.linking import (
         merge_mentions_batch,
-    )
-    from semanticrelationextractionpolish_spark.streaming.state import (
-        read_state_table,
     )
 
     state = str(tmp_path / "state")
@@ -879,8 +943,6 @@ def test_merge_empty_delta_short_circuit_then_relabel(spark, tmp_path):
     a0 = merge_mentions_batch(spark, b0, state, batch_id=0)
     got0 = {(r["lemma"], r["canonical"]) for r in a0.collect()}
     assert got0 == {("alfa", "alfa"), ("gamma", "gamma"), ("omikron", "omikron")}
-    edges0 = read_state_table(spark, state, "edges")
-    assert edges0.count() == 0  # empty segment still appended
     # batch 1: a near-duplicate of 'omikron' -> candidate + verified
     # edge + relabel of the existing lemma through the CC path
     b1 = spark.createDataFrame(
@@ -892,4 +954,43 @@ def test_merge_empty_delta_short_circuit_then_relabel(spark, tmp_path):
     # both variants must share one canonical
     canon = {c for (l, c) in got1 if l in ("omikron", "omikrona")}
     assert len(canon) == 1
-    assert read_state_table(spark, state, "edges").count() == 1
+
+
+def test_merge_job_count_pinned(spark, tmp_path):
+    """Pins how many Spark jobs one merge runs, so a state write (or any
+    other per-batch job) cannot creep back in unseen: a new batch of 44
+    lemmas (LSH probe, verify and CC run) and a repeat of it (no new
+    lemma: the empty-delta short-circuit). AQE submits each query stage
+    as a job of its own, and whether one extra stage job runs depends on
+    timing (the new batch measured 31 or 32), so both counts are pinned
+    as upper bounds; lower them when a job is removed."""
+    import hashlib
+
+    from semanticrelationextractionpolish_spark.operators.materialize import (
+        release,
+    )
+    from semanticrelationextractionpolish_spark.streaming.linking import (
+        merge_mentions_batch,
+    )
+
+    def lemma(i):
+        return hashlib.md5(str(i).encode()).hexdigest()[:12]
+
+    lemmas = [lemma(i) for i in range(40)] + [lemma(i) + "a" for i in range(4)]
+    m = spark.createDataFrame(
+        [(le, le.upper()) for le in lemmas], "lemma string, surface string"
+    )
+    state = str(tmp_path / "state")
+    sc = spark.sparkContext
+    jobs = []
+    for batch_id in range(2):
+        group = f"merge-job-count-{batch_id}"
+        sc.setJobGroup(group, group)
+        try:
+            release(merge_mentions_batch(spark, m, state, batch_id=batch_id))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    new_batch, repeat_batch = jobs
+    assert 0 < new_batch <= 32, jobs
+    assert 0 < repeat_batch <= 11, jobs
