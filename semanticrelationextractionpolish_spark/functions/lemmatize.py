@@ -4,13 +4,16 @@ The reference relies on gold per-sentence entity indices and never
 lemmatizes; the target pipeline (BASELINE.json north rule) adds
 "lemma-based canonicalization of Polish surface forms" for entity
 linking. This is a light, rule-based suffix stripper - linguistically
-shallow but *deterministic and vectorizable*, which is what the linking
+shallow but *deterministic*, which is what the linking
 stage needs (the canonicalizer only requires that inflectional variants
 of the same name map close enough for exact-lemma or LSH blocking to
 bucket them together).
 
-Implemented both as a plain-Python kernel (for pandas UDF + tests) and as
-a Spark Column expression (for the JVM-side hot path).
+It runs only in Python: the page kernels lemmatize every mention
+surface and pair between-text (``mentions.sentence_mentions``,
+``pairs.document_pairs``), so a triple's subject/object lemma and the
+mention lemma that linking assigns a node to come from this one
+function.
 """
 
 from __future__ import annotations
@@ -18,9 +21,6 @@ from __future__ import annotations
 import re
 import unicodedata
 from functools import lru_cache
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Common Polish inflectional endings, longest-first so the regex engine
 # strips the most specific suffix (public morphology knowledge).
@@ -52,21 +52,3 @@ def lemma_phrase(phrase: str) -> str:
     # hits skip the NFC+regex (round-7, guide §4.5)
     return " ".join(lemma_token(t) for t in phrase.split() if t)
 
-
-def lemma_col(col: Column) -> Column:
-    """JVM-side equivalent of :func:`lemma_phrase` (regexp_replace per
-    word) - keeps the linking stage inside whole-stage codegen."""
-    lowered = F.lower(col)
-    words = F.split(lowered, r"\s+")
-    stemmed = F.transform(
-        words,
-        lambda w: F.when(
-            F.length(w) <= _MIN_STEM, w
-        ).otherwise(
-            F.when(
-                F.length(F.regexp_replace(w, f"(?:{_SUFFIXES})$", "")) < _MIN_STEM,
-                F.substring(w, 1, _MIN_STEM),
-            ).otherwise(F.regexp_replace(w, f"(?:{_SUFFIXES})$", ""))
-        ),
-    )
-    return F.array_join(F.filter(stemmed, lambda w: w != F.lit("")), " ")

@@ -89,15 +89,14 @@ def show_scored(scored_df, n: int = 10, use_color: bool = True) -> list[str]:
     """Collect ``n`` scored pairs (url, tokens or detokenized text, gold,
     predicted) and render them as the reference's colored CLI output.
     Driver-side debug by design."""
-    from .tokenizer import DeterministicTokenizer
+    from .tokenizer import detokenize
 
-    tok = DeterministicTokenizer()
     cols = set(scored_df.columns)
     rows = scored_df.limit(n).collect()
     out = []
     for r in rows:
         if "tokens" in cols and r["tokens"] is not None:
-            seq = tok.detokenize(list(r["tokens"]))
+            seq = detokenize(r["tokens"])
         else:
             seq = r["url"]
         gold = r["gold_class"] if "gold_class" in cols else "?"

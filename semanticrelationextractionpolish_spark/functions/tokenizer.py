@@ -31,7 +31,6 @@ import zlib
 WORD_MARKER = "▁"  # '▁' SentencePiece word-initial marker
 
 VOCAB_SIZE = 50_000
-PAD_ID = 0
 # scheme_1 positional tokens live right after the "base vocab", mirroring
 # readers.py:42-44 (last_index..last_index+3).
 SPECIAL_TOKEN_IDS = {
@@ -144,11 +143,15 @@ class DeterministicTokenizer:
             )
         return {"tokens": tokens, "token_ids": token_ids}
 
-    def detokenize(self, tokens: list[str]) -> str:
-        """Inverse of the ``▁`` convention (readers.py:112-120, debug only)."""
-        return "".join(
-            (" " + t[1:]) if t.startswith(WORD_MARKER) else t for t in tokens
-        ).strip()
+
+def detokenize(tokens) -> str:
+    """Inverse of the ``▁`` convention (readers.py:112-120): a piece's
+    leading ``▁`` marks a word start and becomes a space; a ``▁``
+    anywhere else is text and stays. The package's one detokenizer:
+    mention surfaces, pair between-texts and the debug renderer."""
+    return "".join(
+        (" " + t[1:]) if t.startswith(WORD_MARKER) else t for t in tokens
+    ).strip()
 
 
 _SENT_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")

@@ -45,8 +45,9 @@ from __future__ import annotations
 
 import json
 import logging
+import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .materialize import barrier, barrier_with_metrics
@@ -671,16 +672,55 @@ def canonical_nodes(lemma_assignments: DataFrame) -> DataFrame:
     )
 
 
-def edges_from_triples(triples: DataFrame, node_assignments: DataFrame) -> DataFrame:
+def edges_from_triples(
+    triples: DataFrame,
+    node_assignments: DataFrame,
+    unlinked: Observation | None = None,
+) -> DataFrame:
     """triples (subj/obj lemmas) -> aggregated edges over canonical nodes.
-    Two joins against the assignment dim + one groupBy.
+    Two left joins against the assignment dim + one groupBy.
 
     The assignment dim is broadcast: it is entity-scale, orders of
-    magnitude smaller than the triples fact side."""
+    magnitude smaller than the triples fact side.
+
+    A triple whose subject or object lemma has no assignment has no
+    edge. It is dropped, but not silently: ``unlinked`` (a fresh
+    Observation when None) counts those triples as ``rows`` with the
+    action that computes the edges, so no job is added, and a warning
+    is logged once that count arrives non-zero.
+    """
     na = F.broadcast(node_assignments.select("lemma", "node_id"))
+    linked = triples.join(
+        na.withColumnRenamed("lemma", "subj").withColumnRenamed("node_id", "src"),
+        "subj",
+        "left",
+    ).join(
+        na.withColumnRenamed("lemma", "obj").withColumnRenamed("node_id", "dst"),
+        "obj",
+        "left",
+    )
+    no_node = F.col("src").isNull() | F.col("dst").isNull()
+    unlinked = unlinked or Observation()
+    linked = linked.observe(unlinked, F.count(F.when(no_node, 1)).alias("rows"))
+    threading.Thread(
+        target=_warn_unlinked, args=(unlinked,), name="edges_unlinked", daemon=True
+    ).start()
     return (
-        triples.join(na.withColumnRenamed("lemma", "subj").withColumnRenamed("node_id", "src"), "subj")
-        .join(na.withColumnRenamed("lemma", "obj").withColumnRenamed("node_id", "dst"), "obj")
+        linked.where(~no_node)
         .groupBy("src", "dst", "pred")
         .agg(F.count(F.lit(1)).alias("n_evidence"))
     )
+
+
+def _warn_unlinked(unlinked: Observation) -> None:
+    """Wait for ``edges_from_triples``' unlinked count; warn if non-zero."""
+    try:
+        n = unlinked.get["rows"]
+    except Exception:  # the session went away before the edges ran
+        return
+    if n:
+        log.warning(
+            "edges_from_triples: %d triples have a subject or object lemma "
+            "with no node assignment; their edges are dropped",
+            n,
+        )

@@ -1,93 +1,70 @@
-"""Mention table derivation - pure DataFrame ops, zero Python.
+"""Entity mentions: one per distinct entity id of a sentence.
 
 The reference never materializes a mention table (mentions live as
-parallel label arrays); the linking stage needs one. Derived relationally
-so it stays inside whole-stage codegen.
+parallel label arrays); the linking stage needs one. The kernels that
+tag a sentence (``segment._kernel``, ``ner.detect_mentions``) call
+``sentence_mentions`` while they hold its arrays, and emit the result
+as the sentence row's ``mentions`` column. The pair loop
+(``pairs.document_pairs``) takes each pair's surfaces and lemmas from
+the same mentions, so every triple's subject and object lemma is the
+lemma of a mention of its sentence: the lemma that linking assigns a
+node to, and that ``linking.edges_from_triples`` joins on.
 
-Round-7 plan: ZERO-shuffle derivation. The entities/entity_ids/tokens
-arrays are parallel arrays WITHIN each sentence row, so every mention's
-span extent, class, surface and lemma are computable per row with array
-higher-order functions - the previous posexplode -> groupBy(url,
-sent_idx, entity_id) -> collect_list(struct) plan shuffled ~0.5M skinny
-rows and rebuilt with an ObjectHashAggregate exactly the grouping the
-input row already had (measured at 50k pages: 14.0 s first run / 0.9 s
-warm for the explode+groupBy plan vs 0.6 s / 0.3 s for this one, output
-row-set identical via exceptAll both ways). At 100 TB the difference is
-a full shuffle of the mention universe vs an embarrassingly parallel
-map over the sentence scan.
-
-Semantics notes vs the old groupBy plan:
-
-* pieces arrive in position order (the old plan array_sorted the
-  collected (pos, token) structs - same order);
-* entity_class comes from the mention's FIRST position (the old plan's
-  ``F.first`` picked an arbitrary arriving row; IOB classes are
-  constant within a mention, so the value is the same - this form is
-  additionally deterministic by construction);
-* a repeated entity_id with non-contiguous positions still yields ONE
-  mention spanning min..max position, exactly like the groupBy;
-* DUPLICATE (url, sent_idx) input rows (e.g. an un-deduped re-crawl
-  feeding the same url twice) now yield one mention row per sentence
-  row, where the old groupBy would have merged the two crawls' token
-  positions into a single garbage span. Every in-engine source emits
-  unique (url, sent_idx), so pipeline output is unchanged; for
-  duplicated inputs the per-row behavior is the defensible one (and
-  matches the per-annotation oracle counts).
+``mentions_from_sentences`` is then a JVM explode of that column, like
+``segment.pairs_of``: no Python crossing and no shuffle. Two sentence
+rows with the same (url, sent_idx), such as an un-deduped re-crawl,
+yield one set of mention rows each.
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.lemmatize import lemma_col
-from ..functions.tokenizer import WORD_MARKER
+from ..functions.lemmatize import lemma_phrase
+from ..functions.tokenizer import detokenize
+
+_IOB = re.compile("^[BI]-")
 
 
-def detok_col(tokens_col):
-    """JVM-side detokenizer mirroring DeterministicTokenizer.detokenize:
-    '▁'-prefixed pieces start a new space-separated word."""
-    joined = F.array_join(tokens_col, "")
-    spaced = F.regexp_replace(joined, WORD_MARKER, " ")
-    return F.trim(spaced)
+def sentence_mentions(tokens, entities, entity_ids) -> list[dict]:
+    """One ``schemas.MENTION`` dict per distinct non-null id of
+    ``entity_ids``, in order of first occurrence.
+
+    Span rule: ``beg``/``end`` are the id's first and last token
+    positions (the reference's marker coordinates, readers.py:513-514),
+    while ``surface`` is the detokenized text of the tokens tagged with
+    the id and nothing between them. When an id is tagged twice in a
+    sentence ("Jan czyli Janek") the surface is "jan janek", not the
+    untagged "czyli" between: the surface is what the annotation marked,
+    which is what a node shows. ``lemma`` is ``lemma_phrase(surface)``;
+    ``entity_class`` is the IOB class of the first position.
+    """
+    positions: dict[str, list[int]] = {}
+    for i, eid in enumerate(entity_ids):
+        if eid is not None:
+            positions.setdefault(eid, []).append(i)
+    out = []
+    for eid, pos in positions.items():
+        surface = detokenize([tokens[i] for i in pos])
+        label = entities[pos[0]]
+        out.append(
+            {
+                "entity_id": eid,
+                "entity_class": None if label is None else _IOB.sub("", label),
+                "beg": pos[0],
+                "end": pos[-1],
+                "surface": surface,
+                "lemma": lemma_phrase(surface),
+            }
+        )
+    return out
 
 
 def mentions_from_sentences(sentences: DataFrame) -> DataFrame:
-    ids = F.col("entity_ids")
-    n = F.size(ids)
-    uniq = F.array_distinct(F.filter(ids, lambda x: x.isNotNull()))
-
-    def mk(eid):
-        positions = F.filter(
-            F.sequence(F.lit(0), n - 1),
-            lambda i: F.element_at(ids, i + 1) == eid,
-        )
-        pieces = F.transform(
-            positions, lambda i: F.element_at(F.col("tokens"), i + 1)
-        )
-        cls = F.regexp_replace(
-            F.element_at(F.col("entities"), F.element_at(positions, 1) + 1),
-            "^[BI]-",
-            "",
-        )
-        return F.struct(
-            eid.alias("entity_id"),
-            cls.alias("entity_class"),
-            F.array_min(positions).alias("beg"),
-            F.array_max(positions).alias("end"),
-            detok_col(pieces).alias("surface"),
-        )
-
-    return (
-        sentences.select("url", "sent_idx", F.explode(F.transform(uniq, mk)).alias("m"))
-        .select(
-            "url",
-            "sent_idx",
-            F.col("m.entity_id").alias("entity_id"),
-            F.col("m.entity_class").alias("entity_class"),
-            F.col("m.beg").alias("beg"),
-            F.col("m.end").alias("end"),
-            F.col("m.surface").alias("surface"),
-            lemma_col(F.col("m.surface")).alias("lemma"),
-        )
-    )
+    """SENTENCES -> MENTIONS: one row per mention of each sentence row."""
+    return sentences.select(
+        "url", "sent_idx", F.explode("mentions").alias("m")
+    ).select("url", "sent_idx", "m.*")

@@ -20,15 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_bytes", T.IntegerType(), True),
-        T.StructField("magic", T.StringType(), True),
-        T.StructField("media_type", T.StringType(), True),
-    ]
-)
-
 FEATURE_DIM = 16
 
 MEDIA_FEATURES = T.StructType(

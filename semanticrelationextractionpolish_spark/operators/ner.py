@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions.lemmatize import lemma_phrase
 from ..functions.tokenizer import DeterministicTokenizer, sent_tokenize
+from .mentions import sentence_mentions
 
 MAX_PHRASE = 4  # longest gazetteer entry, in words
 
@@ -85,8 +86,8 @@ def detect_mentions(
     text_col: str = "text",
 ) -> DataFrame:
     """pages(url, text) with NO inline annotation -> SENTENCES rows with
-    IOB tags + synthesized per-page entity ids (``url-ordinal``), exactly
-    the shape the pair generator consumes."""
+    IOB tags, synthesized per-page entity ids (``url#eN``) and their
+    mentions, exactly the shape the pair generator consumes."""
     gaz = gazetteer or default_gazetteer()
     src = pages.select("url", text_col)
 
@@ -153,6 +154,10 @@ def detect_mentions(
                     out["entities"].append(ents)
                     out["entity_ids"].append(eids)
                     out["n_entities"].append(len(match_eids))
-            yield pd.DataFrame(out)
+                    out["mentions"].append(sentence_mentions(toks, ents, eids))
+            if out["url"]:
+                # an all-empty pandas frame infers float64 columns that
+                # Arrow cannot cast to the array types
+                yield pd.DataFrame(out)
 
     return src.mapInPandas(kernel, schema=schemas.SENTENCES)

@@ -10,10 +10,12 @@ bounded at scale.
 The per-document loop is ``document_pairs``: NO_RELATION pairs
 discovered in one sentence persist for later sentences of the same
 document, which is why the unit of processing must be the document, not
-the sentence. It emits skinny pairs (ids, marker coordinates, gold
-class, surfaces, lemmas) and runs no marker surgery: the marker
-coordinates are ``kernels.marker_locations`` of each id's first/last
-occurrence, the same rule ``insert_positional_tokens`` reports, which
+the sentence. It reads each sentence's mentions
+(``mentions.sentence_mentions``), emits skinny pairs (ids, marker
+coordinates, gold class, the two mentions' surfaces and lemmas, the
+between-text) and runs no marker surgery: the marker coordinates are
+``kernels.marker_locations`` of each id's first/last occurrence, the
+same rule ``insert_positional_tokens`` reports, which
 ``generate_pairs`` runs on those same spans for the marked arrays.
 
 Spark shape. Two operators call it, each on one row per document:
@@ -48,7 +50,8 @@ from ..functions.kernels import (
     mk_labels_map,
 )
 from ..functions.lemmatize import lemma_phrase
-from ..functions.tokenizer import DeterministicTokenizer
+from ..functions.tokenizer import DeterministicTokenizer, detokenize
+from .mentions import sentence_mentions
 
 # generic IOB label vocabulary for the synthetic channels; only used for
 # the marker label surgery's id lookups (insert_positional_tokens).
@@ -57,14 +60,6 @@ def default_labels_map():
         ["person_nam", "city_nam", "country_nam", "org_nam", "facility_nam", "ENT"],
         "iob",
     )
-
-
-def _detok(tokens):
-    from ..functions.tokenizer import WORD_MARKER
-
-    return "".join(
-        (" " + t[1:]) if t.startswith(WORD_MARKER) else t for t in tokens
-    ).strip()
 
 
 def relations_by_url(page_relations: DataFrame) -> DataFrame:
@@ -80,12 +75,15 @@ def relations_by_url(page_relations: DataFrame) -> DataFrame:
 def document_pairs(sentences, rels) -> list[list[tuple[dict, dict]]]:
     """The per-document pair loop (readers.py:494-534), without markers.
 
-    ``sentences`` holds (tokens, entity_ids) lists per sentence in
-    sent_idx order; ``rels`` the page's (e1_id, e2_id, rel_class)
-    mappings, or None. Returns one list per sentence of (spans, pair):
-    the pair's entity spans before marker insertion, and its
-    ``schemas.PAIR`` dict, whose coordinates are the marker locations of
-    those spans. The relation dict is document-level and mutable (the
+    ``sentences`` holds (tokens, mentions) per sentence in sent_idx
+    order, the mentions being ``mentions.sentence_mentions`` of the
+    sentence; ``rels`` the page's (e1_id, e2_id, rel_class) mappings, or
+    None. Returns one list per sentence of (spans, pair): the pair's
+    entity spans before marker insertion - each id's first/last
+    occurrence (readers.py:513-514), i.e. its mention's ``beg``/``end``
+    - and its ``schemas.PAIR`` dict, whose coordinates are the marker
+    locations of those spans and whose surfaces and lemmas are the
+    mentions'. The relation dict is document-level and mutable (the
     reference mutates raw_relations across a document's sentences,
     readers.py:427), so NO_RELATION pairs augmented in one sentence are
     candidates in every later one.
@@ -94,30 +92,22 @@ def document_pairs(sentences, rels) -> list[list[tuple[dict, dict]]]:
     for r in rels if rels is not None else ():
         potential[(r["e1_id"], r["e2_id"])] = r["rel_class"]
     out = []
-    for tokens, entity_ids in sentences:
-        # a set holds None exactly when a list would: same membership
-        # test as the reference's `id in entity_ids`, in O(1)
-        present = set(entity_ids)
-        augment_no_relations(present - {None}, potential)
+    for tokens, mentions in sentences:
+        by_id = {m["entity_id"]: m for m in mentions}
+        augment_no_relations(set(by_id), potential)
         sent_pairs = []
         for (e1_id, e2_id), rel_class in potential.items():
-            if e1_id not in present or e2_id not in present:
+            m1, m2 = by_id.get(e1_id), by_id.get(e2_id)
+            if m1 is None or m2 is None:
                 continue
-            # first/last occurrence of each id (readers.py:513-514)
-            e1_beg = entity_ids.index(e1_id)
-            e1_end = len(entity_ids) - entity_ids[::-1].index(e1_id) - 1
-            e2_beg = entity_ids.index(e2_id)
-            e2_end = len(entity_ids) - entity_ids[::-1].index(e2_id) - 1
             spans = {
-                "e1_beg": e1_beg,
-                "e1_end": e1_end,
-                "e2_beg": e2_beg,
-                "e2_end": e2_end,
+                "e1_beg": m1["beg"],
+                "e1_end": m1["end"],
+                "e2_beg": m2["beg"],
+                "e2_end": m2["end"],
             }
-            lo, hi = min(e1_end, e2_end), max(e1_beg, e2_beg)
-            e1_surf = _detok(tokens[e1_beg : e1_end + 1])
-            e2_surf = _detok(tokens[e2_beg : e2_end + 1])
-            between = _detok(tokens[lo + 1 : hi])
+            lo, hi = min(m1["end"], m2["end"]), max(m1["beg"], m2["beg"])
+            between = detokenize(tokens[lo + 1 : hi])
             sent_pairs.append(
                 (
                     spans,
@@ -126,16 +116,13 @@ def document_pairs(sentences, rels) -> list[list[tuple[dict, dict]]]:
                         "e2_id": e2_id,
                         **marker_locations(spans),
                         "gold_class": rel_class,
-                        "e1_surface": e1_surf,
-                        "e2_surface": e2_surf,
+                        "e1_surface": m1["surface"],
+                        "e2_surface": m2["surface"],
                         "between_text": between,
-                        # lemmas computed here (Python already holds the
-                        # row) so scoring stays trivial JVM string ops -
-                        # the interpreted HOF lemma expression measured
-                        # 2-4x the whole scoring stage when inlined per
-                        # when-branch
-                        "e1_lemma": lemma_phrase(e1_surf),
-                        "e2_lemma": lemma_phrase(e2_surf),
+                        "e1_lemma": m1["lemma"],
+                        "e2_lemma": m2["lemma"],
+                        # computed here (Python already holds the row) so
+                        # scoring stays trivial JVM string ops
                         "between_lemma": lemma_phrase(between),
                     },
                 )
@@ -172,7 +159,13 @@ def generate_pairs(
         for pdf in batches:
             out = {f.name: [] for f in schemas.PAIRS.fields}
             for url, sents, rels in zip(pdf["url"], pdf["sents"], pdf["rels"]):
-                tagged = [(list(s["tokens"]), list(s["entity_ids"])) for s in sents]
+                tagged = [
+                    (
+                        s["tokens"],
+                        sentence_mentions(s["tokens"], s["entities"], s["entity_ids"]),
+                    )
+                    for s in sents
+                ]
                 for s, sent_pairs in zip(sents, document_pairs(tagged, rels)):
                     for spans, p in sent_pairs:
                         toks, tids, ents, _, _ = insert_positional_tokens(

@@ -3,15 +3,17 @@
 Re-expresses the reference's per-document loop (readers.py:447-493:
 ``nltk.sent_tokenize`` then the inline-``<entity>`` regex scan with IOB
 tagging) as one ``mapInPandas`` stage: pages in, one row per sentence out
-with the reference's five parallel arrays. The tokenizer is constructed
-once per Arrow-batch iterator (executor-local singleton pattern - the
-reference's frozen-embedding trick, EncjoSzukaczLSTM.py:16-26).
+with the reference's five parallel arrays and the sentence's mentions
+(``mentions.sentence_mentions``, which ``mentions_from_sentences``
+explodes). The tokenizer is constructed once per Arrow-batch iterator
+(executor-local singleton pattern - the reference's frozen-embedding
+trick, EncjoSzukaczLSTM.py:16-26).
 
 ``segment_and_pair`` runs the document's pair loop
-(``pairs.document_pairs``) in the same kernel, so the pipeline crosses
-into Python once per page: every Python-worker task pays a fixed set-up
-toll, and a second stage would also send the sentence arrays back into
-Python.
+(``pairs.document_pairs``) in the same kernel, on the same mentions, so
+the pipeline crosses into Python once per page: every Python-worker
+task pays a fixed set-up toll, and a second stage would also send the
+sentence arrays back into Python.
 
 Scale notes: the kernel is a pure map over page rows, with predicate
 pushdown (lang filter) happening at the parquet/Iceberg scan *before*
@@ -36,6 +38,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions.kernels import tag_sentence_inline
 from ..functions.tokenizer import DeterministicTokenizer, sent_tokenize
+from .mentions import sentence_mentions
 from .pairs import document_pairs, relations_by_url
 
 
@@ -62,7 +65,8 @@ def _kernel(schema, text_col: str, from_html: bool):
                     toks, tids, ents, eids, uniq = tag_sentence_inline(
                         sent, tokenizer, "iob", use_entity_classes=True
                     )
-                    tagged.append((toks, eids))
+                    mentions = sentence_mentions(toks, ents, eids)
+                    tagged.append((toks, mentions))
                     out["url"].append(url)
                     out["sent_idx"].append(sent_idx)
                     out["sent_text"].append(sent)
@@ -71,6 +75,7 @@ def _kernel(schema, text_col: str, from_html: bool):
                     out["entities"].append(ents)
                     out["entity_ids"].append(eids)
                     out["n_entities"].append(len(uniq))
+                    out["mentions"].append(mentions)
                 if with_pairs:
                     out["pairs"].extend(
                         [p for _, p in sent_pairs]
@@ -90,7 +95,7 @@ def segment_and_tag(
     from_html: bool = False,
 ) -> DataFrame:
     """pages -> SENTENCES (url, sent_idx, sent_text, tokens, token_ids,
-    entities, entity_ids, n_entities).
+    entities, entity_ids, n_entities, mentions).
 
     ``from_html=True`` fuses HTML->text extraction (the exact
     ``extract.extract_text_udf`` semantics, byte-identical) into this

@@ -6,10 +6,12 @@ score -> triples -> link -> materialize. Each stage returns a DataFrame;
 ``build_kg`` wires them with optional per-stage parquet checkpoints
 (resume = skip completed stages).
 
-Extract, segment/tag and pairs are one Python kernel
-(``segment.segment_and_pair``): one Python crossing per page. The pairs
-stage is a JVM explode of the sentence rows' skinny pairs, so it holds
-no marker-inserted arrays; ``pairs.generate_pairs`` builds those for the
+Extract, segment/tag, mentions and pairs are one Python kernel
+(``segment.segment_and_pair``): one Python crossing per page. Each
+sentence row carries its mentions and its skinny pairs, whose surfaces
+and lemmas are those mentions'. The mentions and pairs stages are JVM
+explodes of those two columns, so the pairs stage holds no
+marker-inserted arrays; ``pairs.generate_pairs`` builds those for the
 tensorize path from sentence rows, grouped per url into the same
 one-row-per-document shape.
 """
@@ -18,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract
@@ -44,14 +46,20 @@ def build_kg(
 ) -> dict:
     """Run the full pipeline; returns a dict of stage DataFrames.
 
-    Fan-out stages (the sentence rows, which carry their pairs, feed both
-    mentions and pairs; triples feeds both the parity harness and edges)
-    are persisted MEMORY_AND_DISK so a multi-action run computes each NLP
-    stage exactly once - the in-memory analog of the production
-    stage-checkpoint tables (``checkpoint_dir`` replaces persistence with
-    durable parquet when set; the "sentences" checkpoint then holds the
-    ``pairs`` column too, and a checkpoint whose columns differ from the
-    stage's - one an older layout wrote - is recomputed, not resumed).
+    Fan-out stages (the sentence rows, which carry their mentions and
+    pairs, feed both the mentions and the pairs stage; triples feeds both
+    the parity harness and edges) are persisted MEMORY_AND_DISK so a
+    multi-action run computes each NLP stage exactly once - the
+    in-memory analog of the production stage-checkpoint tables
+    (``checkpoint_dir`` replaces persistence with durable parquet when
+    set; the "sentences" checkpoint then holds the ``mentions`` and
+    ``pairs`` columns too, and a checkpoint whose columns differ from
+    the stage's - one an older layout wrote - is recomputed, not
+    resumed).
+
+    With ``link``, ``lineage_report`` also reports ``edges_unlinked``:
+    the triples whose subject or object lemma got no node, which
+    ``edges_from_triples`` drops with a warning.
     """
     from pyspark import StorageLevel
 
@@ -61,8 +69,6 @@ def build_kg(
         if persist:
             return df.persist(StorageLevel.MEMORY_AND_DISK)
         return df
-
-    from pyspark.sql import Observation
 
     observations: dict[str, Observation] = {}
 
@@ -94,12 +100,14 @@ def build_kg(
         "sentences",
     )
     sentences = tagged.drop("pairs")
-    mentions = ckpt(mentions_from_sentences(sentences), "mentions")
-    # skinny pairs: a JVM explode of the sentence rows, which already
-    # hold them - persisting it too would cache every pair twice; a
-    # durable checkpoint still writes the stage, so a resume can skip it
+    # mentions and skinny pairs: JVM explodes of the sentence rows, which
+    # already hold them - persisting them too would cache every row
+    # twice; a durable checkpoint still writes each stage, so a resume
+    # can skip it
+    mentions = mentions_from_sentences(sentences)
     pairs = pairs_of(tagged)
     if checkpoint_dir:
+        mentions = ckpt(mentions, "mentions")
         pairs = ckpt(pairs, "pairs")
     scored = score_pairs(pairs)
     triples = ckpt(
@@ -137,10 +145,12 @@ def link_kg(stages: dict) -> dict:
     be timed/run without the driver-synced graph loop."""
     ckpt = stages["_ckpt"]
     node_assignments, nodes = canonicalize(stages["mentions"])
+    unlinked = stages["_observations"]["edges_unlinked"] = Observation()
     stages["node_assignments"] = node_assignments
     stages["nodes"] = ckpt(nodes, "nodes")
     stages["edges"] = ckpt(
-        edges_from_triples(stages["triples"], node_assignments), "edges"
+        edges_from_triples(stages["triples"], node_assignments, unlinked),
+        "edges",
     )
     return stages
 

@@ -32,21 +32,7 @@ PAGE_RELATIONS = T.StructType(
     ]
 )
 
-# --- sentence IR (the reference's 5-parallel-array record,
-#     DataProvider.py:144-150) ----------------------------------------------
-SENTENCES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sent_idx", T.IntegerType(), False),
-        T.StructField("sent_text", T.StringType(), True),
-        T.StructField("tokens", T.ArrayType(T.StringType()), True),
-        T.StructField("token_ids", T.ArrayType(T.IntegerType()), True),
-        T.StructField("entities", T.ArrayType(T.StringType()), True),
-        T.StructField("entity_ids", T.ArrayType(T.StringType()), True),
-        T.StructField("n_entities", T.IntegerType(), True),
-    ]
-)
-
+# one row per (sentence, entity id): the span of the id's tagged tokens
 MENTIONS = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -57,6 +43,27 @@ MENTIONS = T.StructType(
         T.StructField("end", T.IntegerType(), True),
         T.StructField("surface", T.StringType(), True),
         T.StructField("lemma", T.StringType(), True),
+    ]
+)
+
+# a sentence's mention: every MENTIONS column except the sentence key
+MENTION = T.StructType(
+    [f for f in MENTIONS.fields if f.name not in ("url", "sent_idx")]
+)
+
+# --- sentence IR (the reference's 5-parallel-array record,
+#     DataProvider.py:144-150), carrying the sentence's mentions --------------
+SENTENCES = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("sent_idx", T.IntegerType(), False),
+        T.StructField("sent_text", T.StringType(), True),
+        T.StructField("tokens", T.ArrayType(T.StringType()), True),
+        T.StructField("token_ids", T.ArrayType(T.IntegerType()), True),
+        T.StructField("entities", T.ArrayType(T.StringType()), True),
+        T.StructField("entity_ids", T.ArrayType(T.StringType()), True),
+        T.StructField("n_entities", T.IntegerType(), True),
+        T.StructField("mentions", T.ArrayType(MENTION), True),
     ]
 )
 
@@ -99,35 +106,4 @@ PAIR = T.StructType(
 # segment_and_pair's output: a sentence row carrying its own skinny pairs
 SENTENCE_PAIRS = T.StructType(
     SENTENCES.fields + [T.StructField("pairs", T.ArrayType(PAIR), True)]
-)
-
-TRIPLES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sent_idx", T.IntegerType(), False),
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("subj_id", T.StringType(), True),
-        T.StructField("obj_id", T.StringType(), True),
-        T.StructField("score", T.DoubleType(), True),
-    ]
-)
-
-NODES = T.StructType(
-    [
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("canonical", T.StringType(), False),
-        T.StructField("surfaces", T.ArrayType(T.StringType()), True),
-        T.StructField("n_mentions", T.LongType(), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src", T.LongType(), False),
-        T.StructField("dst", T.LongType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("n_evidence", T.LongType(), True),
-    ]
 )

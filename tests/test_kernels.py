@@ -12,6 +12,7 @@ from semanticrelationextractionpolish_spark.functions import kernels as K
 from semanticrelationextractionpolish_spark.functions.tokenizer import (
     DeterministicTokenizer,
     SPECIAL_TOKEN_IDS,
+    detokenize,
     sent_tokenize,
 )
 
@@ -47,7 +48,7 @@ def test_enclose_markers(tok):
 
 def test_detokenize_roundtrip(tok):
     text = "maria nowak pracuje w orlenie."
-    assert tok.detokenize(tok.tokenize(text)["tokens"]) == text
+    assert detokenize(tok.tokenize(text)["tokens"]) == text
 
 
 def test_sent_tokenize():
@@ -478,7 +479,7 @@ def test_process_document_inline_explode(tok):
     assert toks[pr["relation_info"]["e2_end"]] == "</e2>"
     # markers wrap the right surfaces
     e1_span = toks[pr["relation_info"]["e1_beg"] + 1 : pr["relation_info"]["e1_end"]]
-    assert tok.detokenize(e1_span) == "adam kowalski"
+    assert detokenize(e1_span) == "adam kowalski"
 
 
 def test_reference_label_pickle_parity(spark):

@@ -18,14 +18,18 @@ from semanticrelationextractionpolish_spark.sources.synth import synth_pages
 
 def test_lineage_counters(spark):
     pages, rels = synth_pages(spark, 30)
-    stages = build_kg(spark, pages, rels, link=False)
+    stages = build_kg(spark, pages, rels)
     n_sent = stages["sentences"].count()
     n_triples = stages["triples"].count()
+    n_evidence = stages["edges"].agg(F.sum("n_evidence")).first()[0]
     rep = lineage_report(stages)
     assert rep["sentences"]["rows"] == n_sent
     assert rep["triples"]["rows"] == n_triples
     assert rep["pages_kept"]["rows"] == pages.where("lang='pl'").count()
     assert rep["sentences"]["n_entity_mentions"] > 0
+    # every triple of the synthetic corpus links to two nodes
+    assert rep["edges_unlinked"]["rows"] == 0
+    assert n_evidence == n_triples
 
 
 def test_partition_counters(spark):

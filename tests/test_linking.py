@@ -200,6 +200,45 @@ def test_canonicalize_drops_null_lemma(spark):
     ]
 
 
+def test_edges_from_triples_counts_and_warns_unlinked(spark, caplog):
+    """A triple whose object lemma has no assignment gets no edge, and
+    is counted by the Observation with the edges' own action and named
+    in a warning, instead of vanishing in an inner join."""
+    import logging
+    import time
+
+    from pyspark.sql import Observation
+
+    from semanticrelationextractionpolish_spark.operators import linking
+
+    triples = spark.createDataFrame(
+        [
+            ("u", 0, "adam", "lives_in", "gdańsk"),
+            ("u", 1, "adam", "lives_in", "krak"),
+            ("u", 2, "ewa", "lives_in", "nowhere"),
+        ],
+        "url string, sent_idx int, subj string, pred string, obj string",
+    )
+    assignments = spark.createDataFrame(
+        [("adam", 1), ("ewa", 2), ("gdańsk", 3), ("krak", 4)],
+        "lemma string, node_id long",
+    )
+    unlinked = Observation()
+    with caplog.at_level(logging.WARNING, logger=linking.__name__):
+        edges = linking.edges_from_triples(triples, assignments, unlinked)
+        got = {(r["src"], r["dst"], r["n_evidence"]) for r in edges.collect()}
+        assert unlinked.get["rows"] == 1
+        # the warning comes from a thread that waits for the count
+        deadline = time.time() + 30
+        while not caplog.records and time.time() < deadline:
+            time.sleep(0.1)
+    assert got == {(1, 3, 1), (1, 4, 1)}
+    assert [r.getMessage() for r in caplog.records] == [
+        "edges_from_triples: 1 triples have a subject or object lemma "
+        "with no node assignment; their edges are dropped"
+    ]
+
+
 def test_connected_components_long_chain(spark):
     """Diameter >> CC_MAX_ROUNDS: plain min-label propagation (round-2
     impl) moves a label one hop per round, so a 120-node chain silently

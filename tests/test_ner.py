@@ -35,6 +35,7 @@ def test_gazetteer_non_overlapping_left_to_right():
 
 
 def test_detect_mentions_pipeline(spark):
+    schema = "url string, text string, lang string"
     pages = spark.createDataFrame(
         [
             (
@@ -43,12 +44,16 @@ def test_detect_mentions_pipeline(spark):
                 "pl",
             )
         ],
-        "url string, text string, lang string",
+        schema,
     )
     sents = detect_mentions(pages)
     rows = {r["sent_idx"]: r for r in sents.collect()}
     s0 = rows[0]
     assert s0["n_entities"] == 2
+    assert [(m["surface"], m["lemma"], m["entity_class"]) for m in s0["mentions"]] == [
+        ("adam kowalski", "adam kowalsk", "person_nam"),
+        ("warszawie", "warszaw", "city_nam"),
+    ]
     labels = [e for e in s0["entities"] if e]
     assert labels[0] == "B-person_nam"
     assert "B-city_nam" in labels
@@ -56,6 +61,10 @@ def test_detect_mentions_pipeline(spark):
     # entity ids are page-scoped and distinct
     ids = {e for e in s0["entity_ids"] if e}
     assert len(ids) == 2 and all(i.startswith("u1#e") for i in ids)
+    # a partition whose pages have no text yields no rows (and no frame
+    # of empty columns that Arrow cannot convert)
+    no_text = spark.createDataFrame([("u0", None, "pl")], schema).coalesce(1)
+    assert detect_mentions(no_text).isEmpty()
 
 
 def test_detected_mentions_feed_pairs(spark):

@@ -81,7 +81,10 @@ def used_names() -> set[str]:
         for p in _py_files(path):
             for node in ast.walk(ast.parse(p.read_text())):
                 if isinstance(node, ast.Name):
-                    used.add(node.id)
+                    # a Store is an assignment, such as the constant's
+                    # own definition, not a use
+                    if not isinstance(node.ctx, ast.Store):
+                        used.add(node.id)
                 elif isinstance(node, ast.Attribute):
                     used.add(node.attr)
                 elif isinstance(node, ast.alias):

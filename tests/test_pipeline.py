@@ -249,6 +249,26 @@ def test_mentions_surface_and_lemma(stages):
     assert one is not None and one["lemma"]
 
 
+def test_every_triple_keeps_its_edge(spark, lemma_edge_pages):
+    """A triple's subject and object lemmas are its sentence's mention
+    lemmas, so linking gives each of the three triples an edge: an id
+    tagged twice in a sentence and a U+2581 inside a surface no longer
+    give the triple a lemma that no mention has."""
+    pages, rels = lemma_edge_pages
+    stages = build_kg(spark, pages, rels, persist=False)
+    triples = stages["triples"].collect()
+    assert len(triples) == 3
+    mentions = {
+        (r["url"], r["sent_idx"], r["entity_id"]): r["lemma"]
+        for r in stages["mentions"].collect()
+    }
+    for t in triples:
+        assert t["subj"] == mentions[(t["url"], t["sent_idx"], t["subj_id"])]
+        assert t["obj"] == mentions[(t["url"], t["sent_idx"], t["obj_id"])]
+    assert {t["subj"] for t in triples} >= {"jan janek", "anna ▁ nowak"}
+    assert stages["edges"].agg(F.sum("n_evidence")).first()[0] == 3
+
+
 def test_triples_deterministic_across_runs(spark, corpus):
     pages, rels = corpus
     s1 = build_kg(spark, pages, rels)

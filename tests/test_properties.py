@@ -13,6 +13,7 @@ from semanticrelationextractionpolish_spark.functions.lemmatize import (
 from semanticrelationextractionpolish_spark.functions.tokenizer import (
     DeterministicTokenizer,
     SPECIAL_TOKEN_IDS,
+    detokenize,
     sent_tokenize,
 )
 
@@ -29,7 +30,7 @@ sentences = st.lists(words, min_size=1, max_size=12).map(" ".join)
 def test_tokenize_detokenize_roundtrip(text):
     res = TOK.tokenize(text)
     assert len(res["tokens"]) == len(res["token_ids"])
-    assert TOK.detokenize(res["tokens"]) == text
+    assert detokenize(res["tokens"]) == text
 
 
 @given(sentences)
@@ -146,6 +147,95 @@ def test_nonoverlapping_pairs_properties(multients):
         for ents in multients:
             pure = {e[2:] for e in ents}
             assert not ({a, b} <= pure)
+
+
+# an inline-annotated sentence: plain words and entity spans, whose ids
+# repeat within a sentence and come and go between sentences, and whose
+# surfaces may hold U+2581 as a word of its own
+def _annotate(segments):
+    parts = []
+    for seg in segments:
+        if isinstance(seg, str):
+            parts.append(seg)
+        else:
+            eid, surface = seg
+            parts.append(
+                f'<entity id="{eid}" category="person_nam">{" ".join(surface)}</entity>'
+            )
+    return " ".join(parts) + "."
+
+
+entity_ids = st.sampled_from(["e.1", "e.2", "e.3", "e.4"])
+annotated_sentences = st.lists(
+    st.one_of(
+        words,
+        st.tuples(
+            entity_ids,
+            st.lists(st.one_of(words, st.just("▁")), min_size=1, max_size=3),
+        ),
+    ),
+    min_size=1,
+    max_size=8,
+).map(_annotate)
+
+PAGE_A = (
+    '<entity id="r1" category="person_nam">Jan</entity> czyli '
+    '<entity id="r1" category="person_nam">Janek</entity> mieszka w '
+    '<entity id="r2" category="city_nam">Gdańsku</entity>.'
+)
+PAGE_B = (
+    '<entity id="r1" category="person_nam">Anna ▁ Nowak</entity> mieszka w '
+    '<entity id="r2" category="city_nam">Lublinie</entity>.'
+)
+
+
+@given(
+    st.lists(annotated_sentences, min_size=1, max_size=4),
+    st.lists(st.tuples(entity_ids, entity_ids), max_size=4),
+)
+@example([PAGE_A], [("r1", "r2")])
+@example([PAGE_B], [("r1", "r2")])
+@settings(max_examples=200, deadline=None)
+def test_pair_lemmas_are_mention_lemmas(sents, rels):
+    """Every pair takes its surfaces and lemmas from the mention of the
+    same id in the same sentence, and a mention's lemma is the lemma of
+    the text the annotation marked with that id (an oracle read straight
+    off the inline markup)."""
+    from semanticrelationextractionpolish_spark.operators.mentions import (
+        sentence_mentions,
+    )
+    from semanticrelationextractionpolish_spark.operators.pairs import (
+        document_pairs,
+    )
+
+    tagged = []
+    for sent in sents:
+        toks, _, ents, eids, _ = K.tag_sentence_inline(
+            sent, TOK, "iob", use_entity_classes=True
+        )
+        tagged.append((toks, sentence_mentions(toks, ents, eids)))
+    rel_rows = [
+        {"e1_id": a, "e2_id": b, "rel_class": "lives_in"} for a, b in rels if a != b
+    ]
+    n_pairs = 0
+    for sent, (_, mentions), sent_pairs in zip(
+        sents, tagged, document_pairs(tagged, rel_rows)
+    ):
+        marked = {}
+        for m in K.ENTITY_RE.finditer(sent):
+            marked.setdefault(m.group(1), []).append(m.group(4))
+        by_id = {m["entity_id"]: m for m in mentions}
+        assert {eid: m["lemma"] for eid, m in by_id.items()} == {
+            eid: lemma_phrase(" ".join(texts)) for eid, texts in marked.items()
+        }
+        for _, pair in sent_pairs:
+            n_pairs += 1
+            for e in ("e1", "e2"):
+                m = by_id[pair[f"{e}_id"]]
+                assert pair[f"{e}_lemma"] == m["lemma"]
+                assert pair[f"{e}_surface"] == m["surface"]
+    if rels and sents[0] in (PAGE_A, PAGE_B):
+        assert n_pairs == 1
 
 
 # --- Spark-backed properties (few examples: each runs Spark jobs) ---------

@@ -492,14 +492,16 @@ def test_versioned_state_crash_mid_write_recovers_previous_state(
     assert not _os.path.exists(_os.path.join(garbage, "part-00000.parquet"))
 
 
-def test_stream_kg_matches_batch_graph(spark, tmp_path):
+def test_stream_kg_matches_batch_graph(spark, tmp_path, lemma_edge_pages):
     """The full streaming KG mode: after the page stream drains (3
     micro-batches through stream_kg = per-batch triple extraction +
     rolling canonicalization), the assembled canonical graph (nodes AND
     edges, with evidence counts) equals batch build_kg(link=True) over
     the same pages. Also proves triple idempotence: the per-batch
     partition overwrite means no duplicate evidence even though
-    foreachBatch is at-least-once."""
+    foreachBatch is at-least-once. The pages include ``lemma_edge_pages``
+    (a repeated id, a U+2581 surface), and on both sides every triple
+    is one edge's evidence."""
     from semanticrelationextractionpolish_spark.plans.pipeline import build_kg
     from semanticrelationextractionpolish_spark.streaming.pipeline import (
         stream_kg,
@@ -507,6 +509,8 @@ def test_stream_kg_matches_batch_graph(spark, tmp_path):
     )
 
     pages, rels = synth_pages(spark, 40)
+    pages = pages.unionByName(lemma_edge_pages[0])
+    rels = rels.unionByName(lemma_edge_pages[1])
     in_dir = str(tmp_path / "pages_in")
     rels_path = str(tmp_path / "rels")
     pages.repartition(3).write.parquet(in_dir)
@@ -537,6 +541,9 @@ def test_stream_kg_matches_batch_graph(spark, tmp_path):
         for r in got["edges"].collect()
     }
     assert got_edges == want_edges and got_edges
+    n_triples = stages["triples"].count()
+    assert got["triples"].count() == n_triples
+    assert sum(e[3] for e in got_edges) == n_triples
     want_nodes = {
         (r["node_id"], r["canonical"], tuple(r["surfaces"]), r["n_mentions"])
         for r in stages["nodes"].collect()
@@ -546,6 +553,29 @@ def test_stream_kg_matches_batch_graph(spark, tmp_path):
         for r in got["nodes"].collect()
     }
     assert got_nodes == want_nodes
+
+
+def test_stream_kg_restart_adds_nothing(spark, tmp_path):
+    """stream_kg restarted on a drained stream's checkpoint and state
+    dir, with no new input, runs no batch: the triples sink keeps its
+    rows and the state keeps its assignments."""
+    from semanticrelationextractionpolish_spark.streaming.pipeline import stream_kg
+    from semanticrelationextractionpolish_spark.streaming.state import (
+        read_state_table,
+    )
+
+    in_dir, rels_path = _setup(spark, tmp_path, n=20)
+    dirs = [str(tmp_path / d) for d in ("out", "ck", "state")]
+
+    def run():
+        stream_kg(spark, in_dir, rels_path, *dirs).awaitTermination(300)
+        triples = spark.read.parquet(os.path.join(dirs[0], "triples"))
+        assignments = read_state_table(spark, dirs[2], "assignments")
+        return triples.count(), sorted(map(tuple, assignments.collect()))
+
+    n_triples, assignments = run()
+    assert n_triples > 0 and assignments
+    assert run() == (n_triples, assignments)
 
 
 def test_pre_band_state_dir_is_rejected(spark, tmp_path):
