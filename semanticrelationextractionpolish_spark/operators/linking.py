@@ -23,8 +23,9 @@ Scale design:
   verification inputs are per-key, not per-band.
 * One LSH core, ``lsh_pairs`` (band explode -> capped bucket pairs ->
   size-adaptive verify -> guarded Jaccard), serves linking and MinHash
-  dedup; the streaming merge probes incrementally and takes its
-  join-back and guarded Jaccard (``join_back``) from the same core.
+  dedup; the streaming merge probes incrementally with the same gated
+  pair explode (``capped_bucket_pairs``) and the same join-back and
+  guarded Jaccard (``join_back``).
 * Connected components is alternating large-star/small-star contraction
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SOCC'14): O(log n) rounds regardless of component diameter. The
@@ -204,6 +205,11 @@ def capped_bucket_pairs(
     ``pair_pred(a, b)``: optional extra predicate applied INSIDE the
     pair explode (e.g. the signature-agreement gate) - pairs failing it
     never reach the dedup shuffle or any verification join.
+
+    Callers: ``lsh_pairs`` (batch linking and MinHash dedup) and the
+    streaming merge (``streaming.linking.merge_mentions_batch``), whose
+    members carry an is-new flag and whose ``pair_pred`` adds "at least
+    one member is new" to the signature-agreement gate.
     """
     m = F.col("members")
     pred = (
@@ -684,10 +690,13 @@ def edges_from_triples(
     magnitude smaller than the triples fact side.
 
     A triple whose subject or object lemma has no assignment has no
-    edge. It is dropped, but not silently: ``unlinked`` (a fresh
-    Observation when None) counts those triples as ``rows`` with the
-    action that computes the edges, so no job is added, and a warning
-    is logged once that count arrives non-zero.
+    edge. It is dropped, but not silently: an Observation counts those
+    triples as ``rows`` with the action that computes the edges, so no
+    job is added, and ``watch_unlinked`` logs a warning once that count
+    arrives non-zero. With ``unlinked=None`` the Observation is made
+    and watched here; a caller passing its own ``unlinked`` watches it
+    itself, once it knows the edges will be computed (a watcher on a
+    plan that never runs waits for the session's life).
     """
     na = F.broadcast(node_assignments.select("lemma", "node_id"))
     linked = triples.join(
@@ -700,11 +709,11 @@ def edges_from_triples(
         "left",
     )
     no_node = F.col("src").isNull() | F.col("dst").isNull()
+    watch = unlinked is None
     unlinked = unlinked or Observation()
     linked = linked.observe(unlinked, F.count(F.when(no_node, 1)).alias("rows"))
-    threading.Thread(
-        target=_warn_unlinked, args=(unlinked,), name="edges_unlinked", daemon=True
-    ).start()
+    if watch:
+        watch_unlinked(unlinked)
     return (
         linked.where(~no_node)
         .groupBy("src", "dst", "pred")
@@ -712,8 +721,15 @@ def edges_from_triples(
     )
 
 
+def watch_unlinked(unlinked: Observation) -> None:
+    """Start a daemon thread that waits for ``edges_from_triples``'
+    unlinked count and warns if it is non-zero."""
+    threading.Thread(
+        target=_warn_unlinked, args=(unlinked,), name="edges_unlinked", daemon=True
+    ).start()
+
+
 def _warn_unlinked(unlinked: Observation) -> None:
-    """Wait for ``edges_from_triples``' unlinked count; warn if non-zero."""
     try:
         n = unlinked.get["rows"]
     except Exception:  # the session went away before the edges ran

@@ -17,20 +17,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
-    """Write ``df`` to parquet unless ``path`` already holds a complete
-    checkpoint (_SUCCESS) with ``df``'s columns, then read it back. This
-    is the stage-level resume mechanism: a re-run after failure skips
-    completed stages, and recomputes a stage whose checkpoint holds other
-    columns (one an older layout of the stage wrote) instead of
-    returning it."""
-    spark = df.sparkSession
+def completed_checkpoint(df: DataFrame, path: str) -> DataFrame | None:
+    """The parquet checkpoint at ``path`` if it is complete (_SUCCESS)
+    and holds ``df``'s columns, else None. Resuming it runs no action
+    over ``df``'s plan, so Observations on that plan never fire."""
     if os.path.exists(os.path.join(path, "_SUCCESS")):
-        done = spark.read.parquet(path)
+        done = df.sparkSession.read.parquet(path)
         if set(done.columns) == set(df.columns):
             return done
+    return None
+
+
+def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to parquet unless ``path`` already holds a complete
+    checkpoint with ``df``'s columns (``completed_checkpoint``), then
+    read it back. This is the stage-level resume mechanism: a re-run
+    after failure skips completed stages, and recomputes a stage whose
+    checkpoint holds other columns (one an older layout of the stage
+    wrote) instead of returning it."""
+    done = completed_checkpoint(df, path)
+    if done is not None:
+        return done
     df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return df.sparkSession.read.parquet(path)
 
 
 def local_frame(

@@ -24,8 +24,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract
-from ..operators.linking import canonicalize, edges_from_triples
-from ..operators.materialize import checkpoint_parquet
+from ..operators.linking import canonicalize, edges_from_triples, watch_unlinked
+from ..operators.materialize import checkpoint_parquet, completed_checkpoint
 from ..operators.mentions import mentions_from_sentences
 from ..operators.score import (
     precision_recall,
@@ -63,14 +63,23 @@ def build_kg(
     """
     from pyspark import StorageLevel
 
-    def ckpt(df: DataFrame, name: str) -> DataFrame:
+    # None marks an observation whose stage resumed from its checkpoint:
+    # no action ever runs over its plan, so it never fires
+    observations: dict[str, Observation | None] = {}
+
+    def ckpt(df: DataFrame, name: str, observed: tuple[str, ...] = ()) -> DataFrame:
+        """``observed``: the observations whose first action is this
+        stage's checkpoint write."""
         if checkpoint_dir:
-            return checkpoint_parquet(df, os.path.join(checkpoint_dir, name))
+            path = os.path.join(checkpoint_dir, name)
+            done = completed_checkpoint(df, path)
+            if done is not None:
+                observations.update(dict.fromkeys(observed))
+                return done
+            return checkpoint_parquet(df, path)
         if persist:
             return df.persist(StorageLevel.MEMORY_AND_DISK)
         return df
-
-    observations: dict[str, Observation] = {}
 
     def obs(df: DataFrame, name: str, *extra) -> DataFrame:
         # pipeline counters (A4 analog: the reference's ad-hoc progress
@@ -98,6 +107,7 @@ def build_kg(
             F.sum("n_entities").alias("n_entity_mentions"),
         ),
         "sentences",
+        observed=("pages_kept", "sentences"),
     )
     sentences = tagged.drop("pairs")
     # mentions and skinny pairs: JVM explodes of the sentence rows, which
@@ -111,7 +121,7 @@ def build_kg(
         pairs = ckpt(pairs, "pairs")
     scored = score_pairs(pairs)
     triples = ckpt(
-        obs(triples_from_scored(scored), "triples"), "triples"
+        obs(triples_from_scored(scored), "triples"), "triples", observed=("triples",)
     )
     stages = {
         "_observations": observations,
@@ -131,11 +141,14 @@ def build_kg(
 
 def lineage_report(stages: dict) -> dict:
     """Collected Observation metrics per stage (call after actions have
-    run; Observation.get blocks until its stage completed). Together with
+    run; Observation.get blocks until its stage completed), and
+    ``{"resumed": True}`` for a stage that ``build_kg(checkpoint_dir=)``
+    resumed instead of computing. Together with
     ``materialize.partition_counters`` this is the lineage/counters table
     the north rule requires."""
     return {
-        name: dict(o.get) for name, o in stages.get("_observations", {}).items()
+        name: {"resumed": True} if o is None else dict(o.get)
+        for name, o in stages.get("_observations", {}).items()
     }
 
 
@@ -143,15 +156,18 @@ def link_kg(stages: dict) -> dict:
     """Linking phase: canonicalize mentions (eager iterative CC loop) and
     aggregate edges. Separated from build_kg so the extraction phase can
     be timed/run without the driver-synced graph loop."""
-    ckpt = stages["_ckpt"]
+    ckpt, observations = stages["_ckpt"], stages["_observations"]
     node_assignments, nodes = canonicalize(stages["mentions"])
-    unlinked = stages["_observations"]["edges_unlinked"] = Observation()
+    unlinked = observations["edges_unlinked"] = Observation()
     stages["node_assignments"] = node_assignments
     stages["nodes"] = ckpt(nodes, "nodes")
     stages["edges"] = ckpt(
         edges_from_triples(stages["triples"], node_assignments, unlinked),
         "edges",
+        observed=("edges_unlinked",),
     )
+    if observations["edges_unlinked"] is not None:  # the edges get computed
+        watch_unlinked(unlinked)
     return stages
 
 

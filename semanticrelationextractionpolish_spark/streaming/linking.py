@@ -10,17 +10,19 @@ Per batch (``foreachBatch`` over a mentions stream):
 1. aggregate the batch to (lemma, n_mentions, surfaces) and append it
    as a ``batch_id``-keyed segment of the lemma state;
 2. compute MinHash signatures/band rows for the NEW lemmas ONLY and
-   probe them against the accumulated band-row index - an incremental
-   index probe costing ~new_lemmas x bucket occupancy, not the full
-   O(n) re-blocking of batch ``lsh_candidate_pairs``;
-3. Jaccard-verify candidates against the shingle state; the surviving
-   edges are this batch's new edges (checkpointed for the merge below,
-   never stored: no later batch reads them);
-4. **incremental component merge** (round-3 verdict "Next" #4 - the
-   old path re-ran connected components over the ENTIRE accumulated
-   edge set every batch): map each new edge's endpoints through the
-   existing assignment to their component representatives, run
-   star-contraction only on that (tiny) representative graph, and
+   probe them against the accumulated band-row index: the members of
+   every bucket a new band row touches (old ones with their sigs from
+   the signature state, new ones flagged new) go through the batch
+   core's ``capped_bucket_pairs`` with its signature-agreement gate
+   plus "at least one member is new" - ~new_lemmas x bucket occupancy
+   pairs, not a full re-blocking, and accidental band collisions never
+   reach a shuffle;
+3. Jaccard-verify candidates against the shingle state (``join_back``,
+   as in the batch core): this batch's new edges (never stored: no
+   later batch reads them);
+4. **incremental component merge**: map each new edge's endpoints
+   through the existing assignment to their component representatives,
+   run star-contraction only on that (tiny) representative graph, and
    recompose. Correctness: a component's canonical label is the MIN
    lemma it contains, so each representative IS the min of its old
    component, and the min reachable representative equals the min
@@ -31,13 +33,10 @@ Per batch (``foreachBatch`` over a mentions stream):
 
 All state lives in a ``VersionedState`` (see ``streaming/state.py``):
 immutable per-batch segments + one atomic manifest swap per batch, so
-a crash at any point leaves the previous batch's complete state (the
-round-3 in-place ``mode("overwrite")`` lost ALL accumulated state on a
-mid-write crash), and ``foreachBatch`` replay re-stages the same
-``batch_id`` segments instead of double-appending. In production every
-table is an Iceberg table and the manifest swap is its snapshot
-commit; the assignment table's full rewrite per batch would be a
-MERGE INTO touching only re-labeled rows.
+a crash at any point leaves the previous batch's complete state, and
+``foreachBatch`` replay re-stages the same ``batch_id`` segments
+instead of double-appending. In production every table is an Iceberg
+table and the manifest swap is its snapshot commit.
 
 Correctness contract (tested): after the stream drains, the
 assignments equal batch ``canonicalize()`` over all mentions at once.
@@ -45,15 +44,17 @@ One documented divergence: the ``MAX_BUCKET`` skew cap applies to
 bucket sizes AS SEEN AT PROBE TIME, so a bucket that only exceeds the
 cap in a later batch keeps its earlier edges (batch mode would drop
 the whole bucket); equivalence is exact while buckets stay under the
-cap. PINNED by ``test_stream_vs_batch_bucket_cap_divergence_pinned``
-(round-4 verdict #7), which also records why eviction-on-cross was
-rejected: star contraction only ever unions, so retracting a capped
-bucket's earlier edges would need a full CC re-solve over the
-remaining graph - the exact O(total) per-batch cost this design
-removes.
+cap. PINNED by ``test_stream_vs_batch_bucket_cap_divergence_pinned``,
+which also records why eviction-on-cross was rejected: star
+contraction only ever unions, so retracting a capped bucket's earlier
+edges would need a full CC re-solve over the remaining graph - the
+exact O(total) per-batch cost this design removes.
 """
 
 from __future__ import annotations
+
+import json
+import logging
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,14 +64,17 @@ from ..operators.linking import (
     MAX_BUCKET,
     MIN_SIG_AGREE,
     _band_rows,
+    capped_bucket_pairs,
     cand_endpoints,
     connected_components,
     join_back,
     shingle_table,
     sig_agreement,
 )
-from ..operators.materialize import local_checkpoint_with_count
+from ..operators.materialize import local_checkpoint_with_count, release
 from .state import VersionedState
+
+log = logging.getLogger(__name__)
 
 SIGS_SCHEMA = "lemma string, shingles array<string>, sigs array<int>"
 BANDS_SCHEMA = "lemma string, band_idx int, band_hash int"
@@ -106,8 +110,11 @@ def merge_mentions_batch(
     batch_id: int = 0,
 ) -> DataFrame:
     """One incremental merge step; returns the rewritten assignments
-    (lemma, node_id, canonical). Usable directly for batch-incremental
-    jobs and via ``incremental_canonicalize`` for streams.
+    (lemma, node_id, canonical). ``stream_kg`` calls it once per
+    micro-batch; batch-incremental jobs call it directly. Logs one
+    ``stream_merge`` JSON record per call: the batch's new band rows,
+    candidates, verified edges, which short-circuit fired, the state's
+    lemma count and the assignment bucket count.
 
     Replay-idempotent (foreachBatch may re-deliver a batch after a
     failure): every appended segment is keyed by ``batch_id`` and
@@ -152,75 +159,67 @@ def merge_mentions_batch(
     new_lemmas = batch_agg.select("lemma").join(
         old_sigs.select("lemma"), "lemma", "left_anti"
     )
-    # distinct checkpoint name per batch: the durable-barrier mode must
-    # never resume a PREVIOUS batch's signature table for this one
-    # shingle_table already returns a barrier (eager localCheckpoint or
-    # durable parquet) - a second localCheckpoint here would pin a
-    # duplicate copy of the table that release() can't reach
-    # new_lemmas is unique by construction: batch_agg is grouped by
-    # lemma and the anti-join only removes rows
+    # new_lemmas is unique by construction (batch_agg is grouped by
+    # lemma). shingle_table returns a barrier, named per batch so the
+    # durable-barrier mode never resumes a PREVIOUS batch's table
     new_sigs = shingle_table(new_lemmas, "lemma", ckpt_name=f"inc_sigs_b{batch_id}")
     new_sig_rows = new_sigs.select("lemma", "shingles", "sigs")
     store.append_batch("sigs", new_sig_rows, batch_id)
     all_sigs = old_sigs.unionByName(new_sig_rows)
 
-    # incremental LSH probe: NEW band rows vs the STORED band index.
-    # The band index is itself an appended state table (the round-3
-    # version re-derived every historical lemma's bands from the sig
-    # state each batch - an O(total entities) minhash recompute that
-    # grew with the stream); bucket-size gating reads only the buckets
-    # this batch's bands touch, so probe cost follows batch size x
-    # bucket occupancy, not history size.
-    new_bands = _band_rows(new_sigs, "lemma").localCheckpoint(eager=True)
-    store.append_batch("bands", new_bands, batch_id)
-    all_bands = store.read("bands", BANDS_SCHEMA)  # staged view incl. this batch
-    touched = all_bands.join(
-        new_bands.select("band_idx", "band_hash").dropDuplicates(),
-        ["band_idx", "band_hash"],
-    ).localCheckpoint(eager=True)
-    sizes = touched.groupBy("band_idx", "band_hash").agg(
-        F.count(F.lit(1)).alias("bsz")
+    # incremental LSH probe: NEW band rows vs the STORED band index
+    # (an appended state table, so no historical lemma is re-hashed),
+    # through the batch core's capped, gated pair explode over the
+    # buckets this batch's bands touch. The new band rows carry their
+    # sigs for the signature-agreement gate; the state segment is
+    # written without them, so the band table keeps its schema.
+    new_bands, n_new_bands = local_checkpoint_with_count(
+        _band_rows(new_sigs, "lemma", keep=("sigs",))
     )
-    probe = new_bands.join(
-        sizes.where(F.col("bsz") <= MAX_BUCKET), ["band_idx", "band_hash"]
-    )
-    cand = (
-        probe.select("band_idx", "band_hash", F.col("lemma").alias("x"))
-        .join(
-            touched.select("band_idx", "band_hash", F.col("lemma").alias("y")),
-            ["band_idx", "band_hash"],
+    store.append_batch("bands", new_bands.drop("sigs"), batch_id)
+    bucket = ["band_idx", "band_hash"]
+    cand = sh = new_edges = None
+    n_cand = n_new_edges = 0
+    # empty-delta short-circuits (round-7): no new band row means no
+    # candidate, and no candidate means an empty verification output BY
+    # CONSTRUCTION - the probe, the key semi-join and the verify joins
+    # are skipped. The common steady-state batch (no new lemma, or no
+    # new near-duplicate) pays none of that machinery; each count rides
+    # its checkpoint as an Observation (zero extra jobs).
+    if n_new_bands:
+        old_members = (
+            store.read("bands", BANDS_SCHEMA, exclude_batch=int(batch_id))
+            .join(new_bands.select(*bucket).dropDuplicates(), bucket, "left_semi")
+            .join(old_sigs.select("lemma", "sigs"), "lemma")
+            .withColumn("new", F.lit(False))
         )
-        .where(F.col("x") != F.col("y"))
-        .select(
-            F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
+        members = old_members.unionByName(
+            new_bands.withColumn("new", F.lit(True))
+        ).localCheckpoint(eager=True)
+        # the cap sees each touched bucket's full size (old + new
+        # members) AS AT PROBE TIME; pairs need one new member - old
+        # pairs were probed by the batch that brought them
+        cand, n_cand = local_checkpoint_with_count(
+            capped_bucket_pairs(
+                members,
+                bucket,
+                F.struct(F.col("lemma").alias("k"), "sigs", "new"),
+                lambda a, b: a["k"] < b["k"],
+                MAX_BUCKET,
+                pair_pred=lambda a, b: (a["new"] | b["new"])
+                & (sig_agreement(a["sigs"], b["sigs"]) >= F.lit(MIN_SIG_AGREE)),
+            ).select(F.col("a.k").alias("a"), F.col("b.k").alias("b"))
         )
-        .dropDuplicates(["a", "b"])
-    )
-    # cand is checkpointed (with its count, in the same job) so the
-    # semi-join and the verification join do not both re-run the probe
-    cand, n_cand = local_checkpoint_with_count(cand)
-    sh = new_edges = None
-    n_new_edges = 0
-    # empty-delta short-circuit (round-7): no candidate pair means the
-    # verification output is empty BY CONSTRUCTION - the key semi-join,
-    # the verify-table checkpoint and the two joins are skipped. The
-    # common steady-state batch (no new near-duplicates) pays none of
-    # the verify machinery; the count rides the candidate checkpoint as
-    # an Observation (zero extra jobs).
+        release(members)
     if n_cand:
         # verification as in the batch core (linking.lsh_pairs): the
-        # state-sized sig table cut to candidate keys, then the join-back
-        # and guarded Jaccard. sigs ride along for the SAME
-        # signature-agreement gate the batch path applies inside its
-        # pair explode - stream==batch equality requires the identical
-        # predicate.
-        sh = cand_endpoints(all_sigs, cand, "lemma").localCheckpoint(eager=True)
+        # state-sized shingle table cut to candidate keys, then the
+        # join-back and the Jaccard threshold
+        sh = cand_endpoints(
+            all_sigs.select("lemma", "shingles"), cand, "lemma"
+        ).localCheckpoint(eager=True)
         new_edges, n_new_edges = local_checkpoint_with_count(
             join_back(cand, sh, "lemma")
-            .where(
-                sig_agreement(F.col("sigs_a"), F.col("sigs_b"))
-                >= F.lit(MIN_SIG_AGREE)
-            )
             .where(F.col("jaccard") >= F.lit(jaccard))
             .select("a", "b")
         )
@@ -229,23 +228,15 @@ def merge_mentions_batch(
     prev = store.read("assignments", ASSIGN_SCHEMA).select("lemma", "canonical")
     comp = None
     if n_new_edges:
-        rep_of = lambda side: F.coalesce(F.col(f"canon_{side}"), F.col(side))
+        def canon(side):
+            return prev.select(
+                F.col("lemma").alias(side), F.col("canonical").alias(f"c{side}")
+            )
+
         rep_edges = (
-            new_edges.join(
-                prev.select(
-                    F.col("lemma").alias("a"), F.col("canonical").alias("canon_a")
-                ),
-                "a",
-                "left",
-            )
-            .join(
-                prev.select(
-                    F.col("lemma").alias("b"), F.col("canonical").alias("canon_b")
-                ),
-                "b",
-                "left",
-            )
-            .select(rep_of("a").alias("ra"), rep_of("b").alias("rb"))
+            new_edges.join(canon("a"), "a", "left")
+            .join(canon("b"), "b", "left")
+            .select(F.coalesce("ca", "a").alias("ra"), F.coalesce("cb", "b").alias("rb"))
             .where(F.col("ra") != F.col("rb"))
             .dropDuplicates(["ra", "rb"])
         )
@@ -258,32 +249,21 @@ def merge_mentions_batch(
             rep_edges, "ra", "rb", ckpt_scope=f"inc_cc_b{batch_id}",
             result_barrier=True,
         )
-    # else: empty-delta short-circuit (round-7) - zero verified new
-    # edges cannot relabel anything: the representative joins, the CC
-    # call and its input materialization (measured ~2-2.5 s/batch even
-    # on an empty delta: two joins against the state-sized assignments
-    # table just to produce zero rep_edges) are skipped, and the
-    # relabel below degenerates to canonical = rep, which is exactly
-    # what an empty comp table produces through coalesce.
+    # else: zero verified new edges relabel nothing - the representative
+    # joins against the state-sized assignments and the CC call are
+    # skipped, and the relabel below degenerates to canonical = rep
 
     # the state's lemma set: every lemma got exactly one signature row,
     # in the batch that first saw it
-    assignments = (
-        all_sigs.select("lemma")
-        .join(prev, "lemma", "left")
-        .withColumn("rep", F.coalesce("canonical", "lemma"))
-    )
+    assignments = all_sigs.select("lemma").join(prev, "lemma", "left")
+    canonical = F.coalesce("canonical", "lemma")
     if comp is not None:
-        assignments = assignments.join(
-            comp.select(F.col("id").alias("rep"), "comp"), "rep", "left"
-        ).select("lemma", F.coalesce("comp", "rep").alias("canonical"))
-    else:
-        assignments = assignments.select(
-            "lemma", F.col("rep").alias("canonical")
-        )
+        comp_of = comp.select(F.col("id").alias("rep"), "comp")
+        assignments = assignments.join(comp_of, canonical == comp_of.rep, "left")
+        canonical = F.coalesce("comp", canonical)
     assignments, n_lemmas = local_checkpoint_with_count(
         assignments.select(
-            "lemma", F.xxhash64("canonical").alias("node_id"), "canonical"
+            "lemma", F.xxhash64(canonical).alias("node_id"), canonical.alias("canonical")
         )
     )
     # bucketed MERGE INTO stand-in (round-4 verdict #3): only buckets
@@ -303,55 +283,31 @@ def merge_mentions_batch(
                 "canonical",
             ).select("lemma")
         )
+    n_buckets = pick_assign_buckets(n_lemmas)
     store.replace_buckets(
-        "assignments",
-        assignments,
-        changed,
-        key_col="lemma",
-        n_buckets=pick_assign_buckets(n_lemmas),
+        "assignments", assignments, changed, key_col="lemma", n_buckets=n_buckets
     )
     store.commit()  # the single atomic publish point for all the tables
+    counts = {
+        "new_band_rows": n_new_bands,
+        "candidates": n_cand,
+        "verified_edges": n_new_edges,
+    }
+    # the first zero count is the short-circuit: every step after it skipped
+    fired = next((f"no_{k}" for k, n in counts.items() if not n), None)
+    log.info(
+        "stream_merge %s",
+        json.dumps(
+            {"batch_id": int(batch_id), **counts, "short_circuit": fired,
+             "n_lemmas": n_lemmas, "assign_buckets": n_buckets}
+        ),
+    )
     # every intermediate barrier's last consumer has now run (the state
     # writes + the assignments checkpoint are eager). Release them, or
     # a long-running stream pins every batch's sigs/bands/candidates in
     # executor storage forever (materialize.release docstring). The
     # returned assignments checkpoint is the CALLER's to release.
-    from ..operators.materialize import release
-
-    for df in (new_sigs, new_bands, touched, cand, sh, new_edges, comp):
+    for df in (new_sigs, new_bands, cand, sh, new_edges, comp):
         if df is not None:
             release(df)
     return assignments
-
-
-def incremental_canonicalize(
-    spark: SparkSession,
-    mentions_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    jaccard: float = DEFAULT_JACCARD,
-    available_now: bool = True,
-):
-    """foreachBatch driver for the merge step. Returns the started
-    StreamingQuery; exactly-once batch replay is the streaming
-    checkpoint's job, and the state writes are idempotent under replay
-    (re-merging the same batch reproduces the same state)."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        assignments = merge_mentions_batch(
-            spark, batch_df, state_dir, jaccard, batch_id=batch_id
-        )
-        # this driver never reads the in-memory result (next batch
-        # reads committed state from disk) - drop its pinned block
-        from ..operators.materialize import release
-
-        release(assignments)
-
-    writer = mentions_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

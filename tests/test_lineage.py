@@ -116,6 +116,43 @@ def test_resume_recomputes_checkpoints_of_an_older_stage_layout(spark, tmp_path)
     assert "tokens" not in spark.read.parquet(os.path.join(ck, "pairs")).columns
 
 
+def test_lineage_report_after_a_resumed_run(spark, tmp_path):
+    """A ``build_kg(checkpoint_dir=)`` run that resumes every stage runs
+    no action over the observed plans: ``lineage_report`` reports those
+    stages as resumed instead of blocking on an Observation that never
+    fires, and no ``edges_unlinked`` watcher is started for edges that
+    were read back, not computed."""
+    import threading
+
+    pages, rels = synth_pages(spark, 20)
+    ck = str(tmp_path / "kgck")
+
+    def report_within(stages, seconds=60):
+        out = {}
+        t = threading.Thread(
+            target=lambda: out.update(lineage_report(stages)), daemon=True
+        )
+        t.start()
+        t.join(seconds)
+        assert not t.is_alive(), "lineage_report blocked"
+        return out
+
+    first = report_within(build_kg(spark, pages, rels, checkpoint_dir=ck))
+    n_triples = spark.read.parquet(os.path.join(ck, "triples")).count()
+    assert first["triples"]["rows"] == n_triples > 0
+    assert first["edges_unlinked"]["rows"] == 0
+
+    before = set(threading.enumerate())
+    resumed = build_kg(spark, pages, rels, checkpoint_dir=ck)
+    started = set(threading.enumerate()) - before
+    assert resumed["triples"].count() == n_triples
+    assert report_within(resumed) == {
+        name: {"resumed": True}
+        for name in ("pages_kept", "sentences", "triples", "edges_unlinked")
+    }
+    assert not [t for t in started if t.name == "edges_unlinked"]
+
+
 def test_barrier_durable_checkpoint_kill_resume(spark, tmp_path):
     """spark.semrex.checkpointDir routes the hot-path lineage barriers
     (dedup/linking localCheckpoints) through durable _SUCCESS-gated

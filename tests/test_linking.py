@@ -203,7 +203,8 @@ def test_canonicalize_drops_null_lemma(spark):
 def test_edges_from_triples_counts_and_warns_unlinked(spark, caplog):
     """A triple whose object lemma has no assignment gets no edge, and
     is counted by the Observation with the edges' own action and named
-    in a warning, instead of vanishing in an inner join."""
+    in a warning, instead of vanishing in an inner join. A caller that
+    passes its own Observation starts the watcher itself."""
     import logging
     import time
 
@@ -226,6 +227,7 @@ def test_edges_from_triples_counts_and_warns_unlinked(spark, caplog):
     unlinked = Observation()
     with caplog.at_level(logging.WARNING, logger=linking.__name__):
         edges = linking.edges_from_triples(triples, assignments, unlinked)
+        linking.watch_unlinked(unlinked)
         got = {(r["src"], r["dst"], r["n_evidence"]) for r in edges.collect()}
         assert unlinked.get["rows"] == 1
         # the warning comes from a thread that waits for the count

@@ -34,7 +34,6 @@ ENTRYPOINTS = {
     "partition_counters": "public per-partition lineage table",
     # streaming: the stream-side restatements of batch operators
     "streaming_exact_dedup": "streaming exact dedup, public stream API",
-    "incremental_canonicalize": "streaming lemma canonicalization API",
     "page_rate_by_lang": "streaming windowed aggregation API",
     "stream_triples": "streaming triple extraction API",
     "read_triples_sink": "reads back what the triple stream wrote",

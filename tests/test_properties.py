@@ -326,6 +326,76 @@ def test_lines_source_matches_ground_truth(
     assert got == sorted(expected)
 
 
+def _hex12(i: int) -> str:
+    import hashlib
+
+    return hashlib.md5(str(i).encode()).hexdigest()[:12]
+
+
+# a lemma family: a base (a 12-hex id - a small shingle universe, so
+# accidental band collisions abound - or a short word) and its
+# near-duplicate twins (the base with a suffix)
+_lemma_family = st.tuples(
+    st.one_of(
+        st.integers(0, 10**9).map(_hex12),
+        st.text(alphabet="abcłó", min_size=1, max_size=4),
+    ),
+    st.lists(st.sampled_from(["a", "y", "ów"]), max_size=2, unique=True),
+)
+
+
+@given(
+    st.lists(_lemma_family, min_size=1, max_size=10),
+    st.integers(1, 3),
+    st.lists(st.integers(0, 2), min_size=10, max_size=10),
+)
+# a twin merged in a later batch than its base must link to history
+@example([(_hex12(7), ["a"]), ("ab", ["y"])], 2, [0] * 10)
+@settings(max_examples=5, deadline=None)
+def test_stream_merge_equals_batch_canonicalize(
+    spark, tmp_path_factory, families, n_batches, first_batch
+):
+    """Lemma families merged in 1-3 stream batches give exactly batch
+    ``canonicalize``'s assignments over all the mentions at once. A
+    family's base goes to its drawn batch and each twin to the next one,
+    so with 2-3 batches every near-duplicate pair spans batches. At
+    most 30 lemmas, so every LSH bucket stays under ``MAX_BUCKET`` (the
+    one documented stream/batch divergence is a bucket that crosses
+    the cap mid-stream)."""
+    from semanticrelationextractionpolish_spark.operators.linking import (
+        MAX_BUCKET,
+        canonicalize,
+    )
+    from semanticrelationextractionpolish_spark.operators.materialize import (
+        release,
+    )
+    from semanticrelationextractionpolish_spark.streaming.linking import (
+        merge_mentions_batch,
+    )
+
+    batch_of = {}
+    for f, (base, twins) in enumerate(families):
+        for j, lemma in enumerate([base, *(base + t for t in twins)]):
+            batch_of.setdefault(lemma, (first_batch[f] + j) % n_batches)
+    lemmas = list(batch_of)[:30]
+    assert len(lemmas) <= MAX_BUCKET
+    schema = "lemma string, surface string"
+    want, _ = canonicalize(
+        spark.createDataFrame([(le, le.upper()) for le in lemmas], schema)
+    )
+    want = sorted(map(tuple, want.collect()))
+    state = str(tmp_path_factory.mktemp("merge_prop"))
+    for b in range(n_batches):
+        batch = [(le, le.upper()) for le in lemmas if batch_of[le] == b]
+        got = merge_mentions_batch(
+            spark, spark.createDataFrame(batch, schema), state, batch_id=b
+        )
+        if b < n_batches - 1:
+            release(got)
+    assert sorted(map(tuple, got.collect())) == want
+    release(got)
+
+
 # --- VersionedState vs a pure-Python model ---------------------------------
 
 _vs_ops = st.lists(
